@@ -11,25 +11,29 @@ null-guarded); a failed sub-parse forwards the partially-parsed entry,
 exactly like the reference checks errors only after all sub-parsers
 ran (parser.go:171-184).
 
-Execution strategy per parser (the Spark-first part):
-  - regex:     JVM-side ``rlike`` + ``regexp_extract`` per named group
-               (whole-stage codegen) — or one-pass Arrow-vectorized
-               ``Series.str.extract`` via ``impl='pandas'``.
-  - json:      Arrow-batched pandas UDF (the body is schemaless, like
-               the reference's map[string]interface{}); nested values
-               re-encoded as JSON strings per the canonical
-               map<string,string> representation.
+Execution strategy per parser (the Spark-first part). Every parser
+builds JVM-side Catalyst expressions (whole-stage codegen, no Python
+worker); the one exception is CSV's per-row header path:
+  - regex:     one ``regexp_replace`` execution per row (onepass_map)
+               for fully ^-anchored patterns, else ``rlike`` + one
+               ``regexp_extract`` per named group (pergroup_map). The
+               pattern alone picks the strategy.
+  - json:      builtin ``from_json(map<string,string>)``; nested values
+               stay as their JSON text, the canonical map<string,string>
+               representation.
   - csv:       builtin ``from_csv`` for a static header (codegen);
                pandas UDF when the header comes from an attribute
                per row (csv.go:106-121) or strict field-count checking
                is requested.
-  - key_value: builtin expression pipeline for an explicit
-               pair_delimiter; pandas UDF for the default quote-aware
-               whitespace splitting (keyvalue.go:130-139).
-  - uri:       pandas UDF over urllib (multi-valued query params need
-               map<string,list> which we JSON-encode, uri.go:129-163).
-  - syslog:    pandas UDF, RFC3164/RFC5424 regex state machine +
-               the fixed priority->severity table (syslog.go:225-272).
+  - key_value: builtin expression pipeline: split on ``pair_delimiter``,
+               or the quote-aware whitespace tokenizer as one
+               ``regexp_extract_all`` (keyvalue.go:130-139).
+  - uri:       one RFC 3986 split regex (onepass_map), then column
+               algebra for the authority parts and the multi-valued
+               query JSON (uri.go:129-163).
+  - syslog:    one-pass RFC3164/RFC5424 extraction (onepass_map), then
+               priority arithmetic and the fixed priority->severity
+               table as column algebra (syslog.go:225-272).
 
 The reference's per-input-string regex match cache
 (operator/parser/regex/cache.go:25-209) is deliberately absent:
@@ -39,7 +43,6 @@ a serialization point across executor threads.
 
 from __future__ import annotations
 
-import json as _json
 import re as _re
 
 import pandas as pd
@@ -129,11 +132,7 @@ def _build_onepass_map(
     parts = F.split(F.substr(blob, F.lit(len(_MARK) + 1)), _SEP, -1)
     names = F.array(*[F.lit(n) for n in groups])
     fast = F.map_from_arrays(names, parts)
-    slow_entries: list[Column] = []
-    for name, idx in groups.items():
-        slow_entries.append(F.lit(name))
-        slow_entries.append(F.regexp_extract(src, pattern_java, idx))
-    slow = F.when(src.rlike(pattern_java), F.create_map(*slow_entries))
+    slow = pergroup_map(src, pattern_java, groups)
     # spoof guard: a NON-matching line that itself begins with the
     # marker would leave blob == src, pass the startswith check, and
     # (with exactly g-1 \x01 bytes) fast-parse garbage. Any source row
@@ -145,6 +144,18 @@ def _build_onepass_map(
         .when(F.size(parts) == g, fast)
         .otherwise(slow)
     )
+
+
+def pergroup_map(src: Column, pattern_java: str, groups: dict[str, int]) -> Column:
+    """``rlike`` match guard + one ``regexp_extract`` per named group
+    (G+1 regex executions per row — Catalyst does not CSE the
+    matcher); null when the pattern does not match. Correct for any
+    pattern, anchored or not."""
+    entries: list[Column] = []
+    for name, idx in groups.items():
+        entries.append(F.lit(name))
+        entries.append(F.regexp_extract(src, pattern_java, idx))
+    return F.when(src.rlike(pattern_java), F.create_map(*entries))
 
 
 def strip_group_names(regex: str) -> str:
@@ -186,17 +197,18 @@ class ParserStage(ColumnStage):
     def refine(self, raw: Column) -> Column:
         """Second-projection hook: turn the raw extraction map (already
         MATERIALIZED as a column) into the final attribute map. Default
-        is identity. Parsers whose builtin impl derives many outputs
-        from one regex extraction override this so the extraction
-        subtree is evaluated once per row, not once per output key."""
+        is identity. Parsers that derive many outputs from one regex
+        extraction override this so the extraction subtree is
+        evaluated once per row, not once per output key."""
         return raw
 
     def transform(self, df: DataFrame, cond: Column):
         src = self.parse_from.get().cast(T.StringType())
         parsed = self.parse(src)
         # materialize the parse result in its own projection first:
-        # pandas-UDF-backed parsers cannot be referenced inside the
-        # higher-order-function lambdas the merge uses
+        # CSV's header_attribute/strict path is a pandas UDF, which
+        # cannot be referenced inside the higher-order-function
+        # lambdas the merge uses
         # (UNSUPPORTED_FEATURE.LAMBDA_FUNCTION_WITH_PYTHON_UDF)
         df = df.withColumn("_parsed_raw", F.when(cond & src.isNotNull(), parsed))
         df = df.withColumn(
@@ -233,71 +245,34 @@ class ParserStage(ColumnStage):
 
 @register("regex_parser")
 class RegexParserStage(ParserStage):
-    """Three execution strategies, all semantically identical:
+    """Two JVM execution strategies, semantically identical; the
+    pattern alone picks one:
 
-      - ``onepass`` (default for ^-anchored patterns): ONE JVM regex
+      - ``onepass_map`` for fully ^-anchored patterns: ONE JVM regex
         execution per row via ``regexp_replace`` rewriting the line to
-        its \\x01-joined capture groups (plus the rlike match guard =
-        2 passes total, vs G+1). Measured on the 8-group Tomcat
-        pattern at 32 cores / 2M rows: 0.78s vs builtin 0.98s median
-        end-to-end incl. scan — ~2x on the parse fraction, and the gap
-        widens with group count (BENCH.md).
-      - ``builtin``: rlike + one ``regexp_extract`` per group (G+1
-        regex executions — Catalyst does not CSE the matcher). Used
-        automatically for unanchored patterns, where the replace trick
-        would fire on every match occurrence.
-      - ``pandas``: one-pass Arrow-vectorized ``Series.str.extract``.
-        Slower end-to-end at high core counts (python workers
-        oversubscribe the box) but kept for byte-level parity checks.
+        its \\x01-joined capture groups; a marker prefix detects the
+        match, so there is no separate rlike (1 pass vs G+1). Measured
+        on the 8-group Tomcat pattern at 32 cores / 2M rows: 0.78s vs
+        per-group 0.98s median end-to-end incl. scan — ~2x on the parse
+        fraction, and the gap widens with group count (BENCH.md).
+      - ``pergroup_map`` otherwise: rlike + one ``regexp_extract`` per
+        group. Unanchored patterns need it, because the replace trick
+        would fire on every match occurrence."""
 
-    ``impl='auto'`` picks onepass when eligible, else builtin."""
-
-    def __init__(self, regex: str, impl: str = "auto", **kw):
+    def __init__(self, regex: str, **kw):
         super().__init__(**kw)
         compiled = _re.compile(regex)
         if not compiled.groupindex:
             # build fails without named groups (regex.go:69-75)
             raise ValueError("regex pattern must contain named capture groups")
         self.groups = dict(compiled.groupindex)  # name -> group index
-        self.pattern_py = regex
         self.pattern_java = strip_group_names(regex)
-        if impl == "auto":
-            # the replace trick needs the match pinned to the line
-            # start, else regexp_replace rewrites EVERY occurrence
-            impl = "onepass" if fully_anchored(regex) else "builtin"
-        self.impl = impl
+        # the replace trick needs the match pinned to the line start,
+        # else regexp_replace rewrites EVERY occurrence
+        self.extract = onepass_map if fully_anchored(regex) else pergroup_map
 
     def parse(self, src: Column) -> Column:
-        if self.impl == "onepass":
-            # onepass_map embeds the match guard (marker detection) —
-            # no separate rlike execution
-            return onepass_map(src, self.pattern_java, self.groups)
-        if self.impl == "pandas":
-            pat = self.pattern_py
-
-            @F.pandas_udf(MAP_SS)
-            def extract(s: pd.Series) -> pd.Series:
-                rx = _re.compile(pat)
-
-                def one(x):
-                    if x is None:
-                        return None
-                    m = rx.search(x)
-                    if m is None:
-                        return None  # non-match is an error (regex.go:124-126)
-                    # non-participating groups parse to "" like Go's
-                    # matches[i] for an optional group
-                    return {k: m.group(k) or "" for k in rx.groupindex}
-
-                return s.map(one)
-
-            return extract(src)
-        matched = src.rlike(self.pattern_java)
-        entries: list[Column] = []
-        for name, idx in self.groups.items():
-            entries.append(F.lit(name))
-            entries.append(F.regexp_extract(src, self.pattern_java, idx))
-        return F.when(matched, F.create_map(*entries))
+        return self.extract(src, self.pattern_java, self.groups)
 
 
 # --------------------------------------------------------------------
@@ -307,45 +282,16 @@ class RegexParserStage(ParserStage):
 
 @register("json_parser")
 class JsonParserStage(ParserStage):
-    """Default impl is builtin ``from_json(map<string,string>)``:
-    flat values stringify, nested objects/arrays stay as their JSON
-    text (exactly the canonical map representation, section 1.4), and
-    non-object JSON nulls out = the reference's error path
-    (json.go:70-82). The pandas impl re-encodes nested values with
-    sorted keys; keep it for byte-stable nested output. Builtin runs
+    """Builtin ``from_json(map<string,string>)``: flat values
+    stringify, nested objects/arrays stay as their JSON text (exactly
+    the canonical map representation, section 1.4), and non-object
+    JSON nulls out = the reference's error path (json.go:70-82). Runs
     inside codegen — measured 2x end-to-end on the flagship at 32
-    cores, where python workers oversubscribe the box."""
-
-    def __init__(self, impl: str = "builtin", **kw):
-        super().__init__(**kw)
-        self.impl = impl
+    cores against an Arrow-batched Python parser, whose workers
+    oversubscribe the box."""
 
     def parse(self, src: Column) -> Column:
-        if self.impl == "builtin":
-            return F.from_json(src, MAP_SS)
-
-        @F.pandas_udf(MAP_SS)
-        def parse_json(s: pd.Series) -> pd.Series:
-            def one(x):
-                if x is None:
-                    return None
-                try:
-                    obj = _json.loads(x)
-                except (ValueError, TypeError):
-                    return None
-                if not isinstance(obj, dict):
-                    # non-map JSON is a parse error (json.go:70-82)
-                    return None
-                return {
-                    str(k): v
-                    if isinstance(v, str)
-                    else _json.dumps(v, separators=(",", ":"), sort_keys=True)
-                    for k, v in obj.items()
-                }
-
-            return s.map(one)
-
-        return parse_json(src)
+        return F.from_json(src, MAP_SS)
 
 
 # --------------------------------------------------------------------
@@ -452,7 +398,6 @@ class KeyValueParserStage(ParserStage):
         self,
         delimiter: str = "=",
         pair_delimiter: str | None = None,
-        impl: str = "builtin",
         **kw,
     ):
         super().__init__(**kw)
@@ -460,7 +405,6 @@ class KeyValueParserStage(ParserStage):
             raise ValueError("delimiter must not be empty")
         self.delimiter = delimiter
         self.pair_delimiter = pair_delimiter
-        self.impl = impl
 
     def _trim(self, c: Column) -> Column:
         # strings.TrimSpace(strings.Trim(x, "\"'")) — strip ALL
@@ -503,48 +447,19 @@ class KeyValueParserStage(ParserStage):
         # empty map with no error, like the Go loop over zero pairs
         nonempty = src.isNotNull() & (src != F.lit(""))
         if self.pair_delimiter is not None:
-            # builtin expression pipeline: split pairs, Split-2 each
+            # split pairs, Split-2 each
             pairs = F.split(src, _re.escape(self.pair_delimiter))
-            bad = F.exists(pairs, self._bad_pair)
-            return F.when(
-                nonempty & ~bad, F.map_from_entries(self._kv_entries(pairs))
-            )
-
-        if self.impl == "builtin":
-            # quote-aware whitespace pair split (keyvalue.go:130-139)
-            # fully JVM-side: tokenize with the same quote-group regex
-            # the pandas path compiles, then exact-2 split per pair.
-            # No python worker in the hot path.
+        else:
+            # quote-aware whitespace pair split (keyvalue.go:130-139):
+            # tokenize with the quote-group regex, then exact-2 split
+            # per pair
             pairs = F.regexp_extract_all(
                 src, F.lit(_QUOTE_AWARE_PAIR.pattern), 0
             )
-            bad = F.exists(pairs, self._bad_pair)
-            return F.when(
-                nonempty & ~bad, F.map_from_entries(self._kv_entries(pairs))
-            )
-
-        d = delim = self.delimiter
-
-        @F.pandas_udf(MAP_SS)
-        def parse_kv(s: pd.Series) -> pd.Series:
-            def trim(x: str) -> str:
-                # Trim(x, "\"'") then TrimSpace, same as the Go cleanup
-                return x.strip("\"'").strip()
-
-            def one(x):
-                if x is None or x == "":
-                    return None
-                out = {}
-                for pair in _QUOTE_AWARE_PAIR.findall(x):
-                    parts = pair.split(d)
-                    if len(parts) != 2:
-                        return None  # malformed pair -> parse error
-                    out[trim(parts[0])] = trim(parts[1])
-                return out
-
-            return s.map(one)
-
-        return parse_kv(src)
+        bad = F.exists(pairs, self._bad_pair)
+        return F.when(
+            nonempty & ~bad, F.map_from_entries(self._kv_entries(pairs))
+        )
 
 
 # --------------------------------------------------------------------
@@ -562,9 +477,9 @@ _URI_GROUPS = {"scheme": 1, "authority": 2, "path": 3, "query": 4}
 
 @register("uri_parser")
 class UriParserStage(ParserStage):
-    """Default impl is ``builtin``: ONE regex execution per row (the
-    RFC 3986 appendix-B split — the same algorithm urlsplit uses —
-    through the shared onepass machinery), then pure column algebra:
+    """ONE regex execution per row (the RFC 3986 appendix-B split —
+    the same algorithm urlsplit uses — through the shared onepass
+    machinery), then pure column algebra:
     userinfo/host/port carved out of the authority with substring
     arithmetic, and the multi-valued query map built as array ops —
     split on '&', url-decode each side, group values per key in
@@ -572,12 +487,7 @@ class UriParserStage(ParserStage):
     map<string,array<string>>. This is the reference's
     map[string][]string JSON encoding
     (operator/parser/uri/uri.go:129-163) with zero Python in the hot
-    path. ``impl='pandas'`` keeps the urllib implementation for
-    byte-level parity tests."""
-
-    def __init__(self, impl: str = "builtin", **kw):
-        super().__init__(**kw)
-        self.impl = impl
+    path."""
 
     @staticmethod
     def _query_json(qs: Column) -> Column:
@@ -626,18 +536,16 @@ class UriParserStage(ParserStage):
         return F.to_json(F.map_from_entries(entries))
 
     def refine(self, raw: Column) -> Column:
-        """Builtin path: raw split map {scheme,authority,path,query}
+        """Raw split map {scheme,authority,path,query}
         (or {bare_query}) -> final attribute map with empties omitted
         (uri.go:99-127) and the query JSON-encoded. urllib semantics:
         scheme/host lowercased, userinfo = authority before the LAST
         '@', username = userinfo before ':', port = trailing digits,
         IPv6 brackets stripped.
 
-        The tree is a pure function of (impl, raw) and ~500 py4j
-        calls to build (measured ~0.5s per construction), so it is
-        memoized process-wide (colmemo)."""
-        if self.impl != "builtin":
-            return raw
+        The tree is a pure function of ``raw`` and ~500 py4j calls to
+        build (measured ~0.5s per construction), so it is memoized
+        process-wide (colmemo)."""
         from ..colmemo import memo_column
 
         return memo_column(
@@ -671,7 +579,7 @@ class UriParserStage(ParserStage):
         # urllib parity on port edges: int round-trip normalizes
         # leading zeros (:0080 -> 80), port 0 is falsy and omitted,
         # and out-of-range (>65535 or int-overflow) is a PARSE ERROR
-        # (u.port raises ValueError -> pandas path nulls the row)
+        # (urllib's u.port raises ValueError)
         port_i = F.when(port != "", port.try_cast(T.IntegerType()))
         bad_port = (port != "") & (
             port_i.isNull() | (port_i > 65535)
@@ -703,61 +611,13 @@ class UriParserStage(ParserStage):
         return F.when(raw.isNotNull(), built)
 
     def parse(self, src: Column) -> Column:
-        if self.impl == "builtin":
-            # bare query string (uri.go:79-97): '?...' carries ONLY
-            # the query (even when empty); everything else takes the
-            # single-regex RFC 3986 split
-            return F.when(
-                src.startswith("?"),
-                F.create_map(F.lit("bare_query"), F.substr(src, F.lit(2))),
-            ).otherwise(onepass_map(src, _URI_SPLIT, _URI_GROUPS))
-
-        @F.pandas_udf(MAP_SS)
-        def parse_uri(s: pd.Series) -> pd.Series:
-            from urllib.parse import parse_qs, urlsplit
-
-            def qmap(q: str) -> str:
-                parsed = parse_qs(q, keep_blank_values=True)
-                # ensure_ascii=False: the canonical query JSON carries
-                # raw UTF-8 (same bytes to_json emits on the builtin path)
-                return _json.dumps(
-                    parsed, separators=(",", ":"), sort_keys=True,
-                    ensure_ascii=False,
-                )
-
-            def one(x):
-                if x is None:
-                    return None
-                try:
-                    # bare query string (uri.go:79-97)
-                    if x.startswith("?"):
-                        return {"query": qmap(x[1:])}
-                    u = urlsplit(x)
-                    # u.port raises ValueError for out-of-range ports
-                    # (e.g. :99999) — inside the try so a bad port is
-                    # a parse error (null row), not a task failure
-                    port = u.port
-                except ValueError:
-                    return None
-                out = {}
-                # empties omitted (uri.go:99-127)
-                if u.scheme:
-                    out["scheme"] = u.scheme
-                if u.username:
-                    out["user"] = u.username
-                if u.hostname:
-                    out["host"] = u.hostname
-                if port:
-                    out["port"] = str(port)
-                if u.path:
-                    out["path"] = u.path
-                if u.query:
-                    out["query"] = qmap(u.query)
-                return out or None
-
-            return s.map(one)
-
-        return parse_uri(src)
+        # bare query string (uri.go:79-97): '?...' carries ONLY the
+        # query (even when empty); everything else takes the
+        # single-regex RFC 3986 split
+        return F.when(
+            src.startswith("?"),
+            F.create_map(F.lit("bare_query"), F.substr(src, F.lit(2))),
+        ).otherwise(onepass_map(src, _URI_SPLIT, _URI_GROUPS))
 
 
 # --------------------------------------------------------------------
@@ -802,20 +662,17 @@ class SyslogParserStage(ParserStage):
     zone RFC3164 wall-clock stamps are interpreted in (SyslogBase's
     Location field, syslog.go Build; default UTC).
 
-    Default impl is ``builtin``: both RFC patterns are ^-anchored, so
-    the shared one-pass JVM machinery (onepass_map) extracts all
-    groups in ONE regex execution inside whole-stage codegen, and the
-    attribute map (priority arithmetic + NILVALUE omission) is pure
-    column algebra in a second projection (``refine``). No Python
-    worker in the hot path. ``impl='pandas'`` keeps the original
-    Arrow-batched implementation for byte-level parity tests."""
+    Both RFC patterns are ^-anchored, so the shared one-pass JVM
+    machinery (onepass_map) extracts all groups in ONE regex execution
+    inside whole-stage codegen, and the attribute map (priority
+    arithmetic + NILVALUE omission) is pure column algebra in a second
+    projection (``refine``). No Python worker in the hot path."""
 
     def __init__(
         self,
         protocol: str = "rfc3164",
         now: str | None = None,
         location: str = "UTC",
-        impl: str = "builtin",
         **kw,
     ):
         from .time_parser import DEFAULT_NOW, TimeParser
@@ -825,7 +682,6 @@ class SyslogParserStage(ParserStage):
         if protocol not in ("rfc3164", "rfc5424"):
             raise ValueError(f"unsupported protocol {protocol!r}")
         self.protocol = protocol
-        self.impl = impl
         if not has_user_ts:
             # default wiring: parse attributes.timestamp into ts
             # (syslog.go:61-66 builds a native TimeParser when the
@@ -847,66 +703,18 @@ class SyslogParserStage(ParserStage):
             self.subparsers.append(tp)
 
     def parse(self, src: Column) -> Column:
-        proto = self.protocol
-        if self.impl == "builtin":
-            rx = _RFC5424 if proto == "rfc5424" else _RFC3164
-            groups = _RFC5424_GROUPS if proto == "rfc5424" else _RFC3164_GROUPS
-            pattern_java = strip_group_names(rx.pattern)
-            return onepass_map(src, pattern_java, groups)
-
-        @F.pandas_udf(MAP_SS)
-        def parse_syslog(s: pd.Series) -> pd.Series:
-            def one(x):
-                if x is None:
-                    return None
-                rx = _RFC5424 if proto == "rfc5424" else _RFC3164
-                m = rx.match(x)
-                if m is None:
-                    return None
-                pri = int(m.group("pri"))
-                out = {
-                    "priority": str(pri),
-                    "facility": str(pri // 8),
-                    "severity": str(pri % 8),
-                    "hostname": m.group("hostname"),
-                    "message": m.group("message") or "",
-                    # normalize the RFC3164 space-padded day ("Jan  2")
-                    # so the default TimeParser's "MMM d" layout parses
-                    # it; the attribute is deleted at postprocess anyway
-                    "timestamp": " ".join(m.group("ts").split()),
-                }
-                if proto == "rfc5424" and m.group("ts") == "-":
-                    del out["timestamp"]  # NILVALUE ts -> absent (toSafeMap)
-                if proto == "rfc5424":
-                    out["version"] = m.group("version")
-                    for k in ("appname", "proc_id", "msg_id"):
-                        v = m.group(k)
-                        if v != "-":
-                            out[k] = v
-                    sd = m.group("sd")
-                    if sd != "-":
-                        out["structured_data"] = sd
-                else:
-                    out["appname"] = m.group("tag")
-                    if m.group("proc_id"):
-                        out["proc_id"] = m.group("proc_id")
-                # '-' hostname means nil in rfc5424
-                if out.get("hostname") == "-":
-                    del out["hostname"]
-                return out
-
-            return s.map(one)
-
-        return parse_syslog(src)
+        if self.protocol == "rfc5424":
+            rx, groups = _RFC5424, _RFC5424_GROUPS
+        else:
+            rx, groups = _RFC3164, _RFC3164_GROUPS
+        return onepass_map(src, strip_group_names(rx.pattern), groups)
 
     def refine(self, raw: Column) -> Column:
-        """Builtin path only: raw extraction map (one column read per
-        key — the extraction itself already ran once) -> final
-        attribute map with priority arithmetic and NILVALUE/absent-key
-        omission, mirroring the pandas impl and syslog.go's toSafeMap.
-        Null raw (failed parse / skipped row) stays null."""
-        if self.impl != "builtin":
-            return raw
+        """Raw extraction map (one column read per key — the
+        extraction itself already ran once) -> final attribute map with
+        priority arithmetic and NILVALUE/absent-key omission, mirroring
+        syslog.go's toSafeMap. Null raw (failed parse / skipped row)
+        stays null."""
 
         def g(k: str) -> Column:
             return F.try_element_at(raw, F.lit(k))

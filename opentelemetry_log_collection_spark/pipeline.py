@@ -160,7 +160,7 @@ class Pipeline:
 
     stages: list[Stage]
     _by_id: dict[str, Stage] = field(default_factory=dict)
-    #: frames persisted by run(cache_fanout=True), released by unpersist()
+    #: fan-out frames persisted by run(), released by unpersist()
     _persisted: list[DataFrame] = field(default_factory=list)
 
     def unpersist(self, blocking: bool = False) -> None:
@@ -235,23 +235,19 @@ class Pipeline:
         for s in self.stages:
             visit(s.id)
 
-    def run(
-        self, df: DataFrame, cache_fanout: bool = True
-    ) -> dict[str, DataFrame]:
+    def run(self, df: DataFrame) -> dict[str, DataFrame]:
         """Evaluate the DAG. Fan-in = unionByName; fan-out = plain
         DataFrame reuse. Returns {terminal_stage_id: DataFrame}.
 
-        ``cache_fanout`` persists the frame at every fan-out point
-        (router with >1 target, stage with >1 output). Two effects,
-        both load-bearing at scale: (1) N sinks consume ONE parsed
-        frame instead of re-deriving the whole upstream DAG per sink
-        (the flagship's parse-once discipline, flagship.py:228); (2)
-        the InMemoryRelation is a codegen-region boundary, so each
-        sink compiles only its own route filter instead of the full
+        The frame is persisted at every fan-out point (router with >1
+        target, stage with >1 output). Two effects, both load-bearing
+        at scale: (1) N sinks consume ONE parsed frame instead of
+        re-deriving the whole upstream DAG per sink (the flagship's
+        parse-once discipline, flagship.py:228); (2) the
+        InMemoryRelation is a codegen-region boundary, so each sink
+        compiles only its own route filter instead of the full
         operator chain — deep chains otherwise overflow janino's 64 KB
         method limit and silently fall back to interpreted execution.
-        Pass False for fully lazy plans (e.g. when the caller persists
-        or checkpoints at its own boundaries).
 
         Every frame persisted here is tracked on the Pipeline; call
         :meth:`unpersist` after the terminal actions so long-lived
@@ -288,7 +284,7 @@ class Pipeline:
                 for extra in ins[1:]:
                     cur = cur.unionByName(extra, allowMissingColumns=True)
                 if isinstance(s, RouterStage):
-                    if cache_fanout and len(set(self._targets(s))) > 1:
+                    if len(set(self._targets(s))) > 1:
                         cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
                         self._persisted.append(cur)
                     routed = s.route(cur)
@@ -297,7 +293,7 @@ class Pipeline:
                 else:
                     out = s.apply(cur)
                     if s.outputs:
-                        if cache_fanout and len(set(s.outputs)) > 1:
+                        if len(set(s.outputs)) > 1:
                             out = out.persist(StorageLevel.MEMORY_AND_DISK)
                             self._persisted.append(out)
                         for t in s.outputs:

@@ -2,8 +2,8 @@
 
 Everything here is a zero-shuffle projection over the `documents`
 table (doc_id, text, lang, source, n_chars) built from Spark builtins
-(whole-stage codegen) except language-ID, whose char-n-gram profile
-scoring is a vectorized Arrow-batched pandas UDF (no per-row Python).
+(whole-stage codegen), language-ID's char-n-gram profile scoring
+included; winnowing is the one Arrow-batched ``mapInPandas`` stage.
 
 Design parity note: document fingerprinting deliberately mirrors the
 reference's file-identity move — fingerprint the first N bytes
@@ -338,7 +338,7 @@ def winnow_fingerprints(
 
 
 # --------------------------------------------------------------------
-# language-ID: char-trigram profile scoring (vectorized pandas UDF)
+# language-ID: char-trigram profile scoring (column algebra)
 # --------------------------------------------------------------------
 
 #: minimal trigram profiles per language — deterministic literals, the
@@ -350,25 +350,6 @@ _LANG_PROFILES: dict[str, tuple[str, ...]] = {
     "de": ("der", " de", "ie ", "ein", "sch", "ich", "und", " un"),
     "zh": ("的", "是", "了", "在", "我", "有", "他", "这"),
 }
-
-
-@F.pandas_udf(T.StringType())
-def lang_guess(texts: pd.Series) -> pd.Series:
-    """argmax over per-language trigram hit counts; 'und' when no
-    profile scores. Arrow-batched — one Python call per ~10k rows."""
-
-    def one(x):
-        if not x:
-            return "und"
-        low = x.lower()
-        best, best_score = "und", 0
-        for lang, grams in _LANG_PROFILES.items():
-            score = sum(low.count(g) for g in grams)
-            if score > best_score:
-                best, best_score = lang, score
-        return best
-
-    return texts.map(one)
 
 
 def _gram_count(low: Column, gram: str) -> Column:
@@ -383,8 +364,8 @@ def lang_guess_builtin(text: Column) -> Column:
     """argmax over per-language trigram hit counts as pure column
     algebra (codegen, zero Python): score each language by summing
     occurrence counts, take the FIRST profile (in _LANG_PROFILES
-    order) that attains the max — the same strict-greater update rule
-    as the pandas UDF. Empty/null/score-0 text -> 'und'."""
+    order) that attains the max, i.e. a strict-greater update over
+    the profiles in order. Empty/null/score-0 text -> 'und'."""
     low = F.lower(text)
     scores = {
         lang: sum(
@@ -400,12 +381,7 @@ def lang_guess_builtin(text: Column) -> Column:
     return out.otherwise(F.lit("und"))
 
 
-def language_id(
-    df: DataFrame, text_col: str = "text", impl: str = "builtin"
-) -> DataFrame:
-    guess = (
-        lang_guess_builtin(F.col(text_col))
-        if impl == "builtin"
-        else lang_guess(F.col(text_col))
+def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+    return df.select(
+        F.col("doc_id"), lang_guess_builtin(F.col(text_col)).alias("lang_guess")
     )
-    return df.select(F.col("doc_id"), guess.alias("lang_guess"))

@@ -2,7 +2,18 @@
 (FIXTURES.md F1-F3; regex_test.go:84-164, json/csv/keyvalue/uri tests)."""
 
 import pytest
+from pyspark.sql import functions as F
 
+import parser_reference as ref
+from opentelemetry_log_collection_spark.fields import Field
+from opentelemetry_log_collection_spark.operators.parsers import (
+    _SYSLOG_SEVERITY,
+    _SYSLOG_SEVERITY_TEXT,
+    RegexParserStage,
+    SyslogParserStage,
+    onepass_map,
+    pergroup_map,
+)
 from opentelemetry_log_collection_spark.pipeline import Pipeline
 from conftest import make_entries, collected
 
@@ -21,21 +32,38 @@ def run1(df, *configs):
     return list(Pipeline.from_configs(list(configs)).run(df).values())[0]
 
 
-@pytest.mark.parametrize("impl", ["builtin", "pandas"])
-def test_regex_root_string(spark, impl):
-    df = make_entries(spark, ["a=b"])
-    out = run1(df, {"type": "regex_parser", "regex": "a=(?P<a>.*)", "impl": impl})
+#: the attributes make_entries seeds every row with (entry.to_entries)
+BASE_ATTRS = {"role": "user", "tool": ""}
+
+
+def merged(parsed):
+    """Attributes after merging a parse result into BASE_ATTRS; a
+    failed parse (None) leaves the row's attributes unchanged."""
+    return {**BASE_ATTRS, **(parsed or {})}
+
+
+def regex_attrs(spark, via, pattern, text):
+    """The attributes parsed from ``text`` by the engine (``builtin``)
+    or by the plain-Python reference."""
+    if via == "reference":
+        return ref.regex_parse(pattern, text)
+    df = make_entries(spark, [text])
+    out = run1(df, {"type": "regex_parser", "regex": pattern})
     [row] = collected(out, "attributes")
-    assert row["attributes"]["a"] == "b"
+    assert row["attributes"] == merged(ref.regex_parse(pattern, text))
+    return row["attributes"]
 
 
-@pytest.mark.parametrize("impl", ["builtin", "pandas"])
-def test_regex_k8s_filename(spark, impl):
+@pytest.mark.parametrize("via", ["builtin", "reference"])
+def test_regex_root_string(spark, via):
+    a = regex_attrs(spark, via, "a=(?P<a>.*)", "a=b")
+    assert a["a"] == "b"
+
+
+@pytest.mark.parametrize("via", ["builtin", "reference"])
+def test_regex_k8s_filename(spark, via):
     """regex_test.go:122-140 — the k8s container-log filename case."""
-    df = make_entries(spark, [K8S_FILE])
-    out = run1(df, {"type": "regex_parser", "regex": K8S_REGEX, "impl": impl})
-    [row] = collected(out, "attributes")
-    a = row["attributes"]
+    a = regex_attrs(spark, via, K8S_REGEX, K8S_FILE)
     assert a["pod_name"] == "coredns-5644d7b6d9-mzngq"
     assert a["namespace"] == "kube-system"
     assert a["container_name"] == "coredns"
@@ -57,12 +85,13 @@ def test_regex_nomatch_send_vs_drop(spark):
 
 
 def test_json_parser_flat_nested_and_errors(spark):
-    df = make_entries(
-        spark,
-        ['{"key":"val","int":1,"bool":true}', '{"a":{"b":"c"}}', "[1,2]", "notjson"],
-    )
+    texts = ['{"key":"val","int":1,"bool":true}', '{"a":{"b":"c"}}', "[1,2]", "notjson"]
+    df = make_entries(spark, texts)
     out = run1(df, {"type": "json_parser", "on_error": "send"})
     rows = collected(out, "text", "attributes")
+    assert [r["attributes"] for r in rows] == [
+        merged(ref.json_parse(x)) for x in texts
+    ]
     flat = rows[0]["attributes"]
     assert flat["key"] == "val" and flat["int"] == "1" and flat["bool"] == "true"
     assert rows[1]["attributes"]["a"] == '{"b":"c"}'  # nested JSON-encoded
@@ -88,9 +117,10 @@ def test_json_embedded_subparsers(spark):
 
 
 def test_regex_impl_parity(spark):
-    """builtin / onepass / pandas produce identical maps, including
-    non-participating optional groups ('' like Go) and values
-    containing the onepass separator (per-row fallback)."""
+    """onepass_map / pergroup_map / the plain-Python reference produce
+    identical maps, including non-participating optional groups ('' like
+    Go) and values containing the onepass separator (per-row
+    fallback)."""
     texts = [
         "k1=a k2=b tail",
         "k1=x tail",            # optional group absent
@@ -99,26 +129,38 @@ def test_regex_impl_parity(spark):
     ]
     pat = r"^k1=(?P<one>\S+)(?: k2=(?P<two>\S+))? (?P<rest>.*)$"
     df = make_entries(spark, texts)
-    got = {}
-    for impl in ("builtin", "onepass", "pandas"):
-        out = run1(df, {"type": "regex_parser", "regex": pat, "impl": impl})
-        got[impl] = [r["attributes"] for r in collected(out, "attributes")]
-    assert got["builtin"] == got["onepass"] == got["pandas"]
-    assert got["onepass"][0]["one"] == "a" and got["onepass"][0]["two"] == "b"
-    assert got["onepass"][1]["two"] == ""   # non-participating -> ""
-    assert got["onepass"][2]["one"] == "a\x01b"
+    stage = RegexParserStage(regex=pat)
+    src = stage.parse_from.get().cast("string")
+    rows = collected(
+        df.select(
+            "conv_id", "turn_idx",
+            onepass_map(src, stage.pattern_java, stage.groups).alias("onepass"),
+            pergroup_map(src, stage.pattern_java, stage.groups).alias("pergroup"),
+        ),
+        "onepass", "pergroup",
+    )
+    onepass = [r["onepass"] for r in rows]
+    pergroup = [r["pergroup"] for r in rows]
+    reference = [ref.regex_parse(pat, x) for x in texts]
+    assert onepass == pergroup == reference
+    assert onepass[0]["one"] == "a" and onepass[0]["two"] == "b"
+    assert onepass[1]["two"] == ""   # non-participating -> ""
+    assert onepass[2]["one"] == "a\x01b"
+    # the stage itself (onepass for this anchored pattern) end to end
+    out = run1(df, {"type": "regex_parser", "regex": pat})
+    assert [r["attributes"] for r in collected(out, "attributes")] == [
+        merged(r) for r in reference
+    ]
 
 
 def test_regex_auto_impl_selection():
-    from opentelemetry_log_collection_spark.operators.parsers import (
-        RegexParserStage,
-    )
-
-    assert RegexParserStage(regex=r"^(?P<a>\d+)").impl == "onepass"
-    assert RegexParserStage(regex=r"(?P<a>\d+)").impl == "builtin"
+    """The pattern alone picks the strategy: onepass exactly when
+    fully_anchored."""
+    assert RegexParserStage(regex=r"^(?P<a>\d+)").extract is onepass_map
+    assert RegexParserStage(regex=r"(?P<a>\d+)").extract is pergroup_map
     # top-level alternation: ^ binds only the first branch
-    assert RegexParserStage(regex=r"^(?P<a>x)|y").impl == "builtin"
-    assert RegexParserStage(regex=r"^(?P<a>x|y)z").impl == "onepass"
+    assert RegexParserStage(regex=r"^(?P<a>x)|y").extract is pergroup_map
+    assert RegexParserStage(regex=r"^(?P<a>x|y)z").extract is onepass_map
 
 
 def test_keyvalue_quote_aware_default(spark):
@@ -159,27 +201,27 @@ def test_keyvalue_double_delimiter_errors(spark):
 
 def test_keyvalue_empty_vs_no_pairs(spark):
     """keyvalue.go:105-107 — empty input errors; non-empty input with
-    zero pairs parses to an empty map with no error. Both impls agree."""
-    for impl in ("builtin", "pandas"):
-        df = make_entries(spark, [""])
-        out = run1(df, {"type": "key_value_parser", "impl": impl,
-                        "on_error": "drop"})
-        assert out.count() == 0, impl
-        df = make_entries(spark, [" "])
-        out = run1(df, {"type": "key_value_parser", "impl": impl,
-                        "on_error": "drop"})
-        assert out.count() == 1, impl
+    zero pairs parses to an empty map with no error. The engine and the
+    plain-Python reference agree."""
+    df = make_entries(spark, [""])
+    out = run1(df, {"type": "key_value_parser", "on_error": "drop"})
+    assert out.count() == 0
+    df = make_entries(spark, [" "])
+    out = run1(df, {"type": "key_value_parser", "on_error": "drop"})
+    assert out.count() == 1
+    assert ref.key_value_parse("") is None
+    assert ref.key_value_parse(" ") == {}
 
 
 def test_keyvalue_builtin_pandas_parity(spark):
+    """The JVM quote-aware tokenizer agrees with the plain-Python
+    reference on every case."""
     cases = ['name="phil" age=22', "a=1 b=2", 'q="x y" t=\'u v\'',
              "a=b=c", "", " ", "noeq", 'k= v=""']
     df = make_entries(spark, cases)
-    got = {}
-    for impl in ("builtin", "pandas"):
-        out = run1(df, {"type": "key_value_parser", "impl": impl})
-        got[impl] = [r["attributes"] for r in collected(out, "attributes")]
-    assert got["builtin"] == got["pandas"]
+    out = run1(df, {"type": "key_value_parser"})
+    got = [r["attributes"] for r in collected(out, "attributes")]
+    assert got == [merged(ref.key_value_parse(x)) for x in cases]
 
 
 def test_csv_multiline_continuation(spark):
@@ -283,7 +325,7 @@ def test_scope_name_parser(spark):
     assert row["scope_name"] == "my.logger"
 
 
-# ---- builtin <-> pandas parity (syslog / uri JVM fast paths) ---------
+# ---- JVM parser <-> plain-Python reference parity (syslog / uri) -----
 
 _SYSLOG_CORPUS_3164 = [
     "<34>Jan 12 06:30:00 1.2.3.4 apache_server: test message",
@@ -310,21 +352,33 @@ _SYSLOG_CORPUS_5424 = [
     ("rfc5424", _SYSLOG_CORPUS_5424),
 ])
 def test_syslog_builtin_pandas_parity(spark, protocol, corpus):
-    """The one-pass JVM impl and the Arrow/regex impl must agree
-    key-for-key on every corpus line, including error rows
-    (syslog.go:144-272 semantics under both execution strategies)."""
+    """The one-pass JVM parser agrees key-for-key with the plain-Python
+    reference on every corpus line, including error rows
+    (syslog.go:144-272): attributes after the postprocess, the fixed
+    severity table, and the ts the default TimeParser derives from the
+    reference's timestamp attribute."""
     df = make_entries(spark, corpus)
-    outs = {}
-    for impl in ("builtin", "pandas"):
-        out = run1(df, {"type": "syslog_parser", "protocol": protocol,
-                        "impl": impl})
-        outs[impl] = collected(out, "attributes", "severity",
-                               "severity_text", "ts")
-    for b, p in zip(outs["builtin"], outs["pandas"]):
-        assert dict(b["attributes"] or {}) == dict(p["attributes"] or {})
-        assert b["severity"] == p["severity"]
-        assert b["severity_text"] == p["severity_text"]
-        assert b["ts"] == p["ts"]
+    out = run1(df, {"type": "syslog_parser", "protocol": protocol})
+    got = collected(out, "attributes", "severity", "severity_text", "ts")
+    refs = [ref.syslog_parse(x, protocol) for x in corpus]
+    # expected ts: the stage's own default TimeParser over the
+    # reference timestamp; rows it cannot parse keep their original ts
+    [tp] = SyslogParserStage(protocol=protocol).subparsers
+    tp.parse_from = Field.parse("body")
+    ts_df = make_entries(spark, [(r or {}).get("timestamp") for r in refs])
+    ts_df, _ = tp.embed_apply(ts_df, F.lit(True))
+    want_ts = [r["ts"] for r in collected(ts_df, "ts")]
+    for row, r, ts, line in zip(got, refs, want_ts, corpus):
+        if r is None:
+            assert row["attributes"] == BASE_ATTRS, line
+            assert row["severity"] == 0 and row["severity_text"] is None, line
+        else:
+            sev = int(r["severity"])
+            kept = {k: v for k, v in r.items() if k not in ("severity", "timestamp")}
+            assert row["attributes"] == merged(kept), line
+            assert row["severity"] == _SYSLOG_SEVERITY[sev], line
+            assert row["severity_text"] == _SYSLOG_SEVERITY_TEXT[sev], line
+        assert row["ts"] == ts, line
 
 
 _URI_CORPUS = [
@@ -351,24 +405,20 @@ _URI_CORPUS = [
 
 
 def test_uri_builtin_pandas_parity(spark):
-    """parse_url + array-algebra query JSON vs urllib, per key
-    (uri.go:99-163): scheme/host lowercased, user before ':', empties
-    omitted, multi-valued query JSON with sorted keys."""
+    """parse_url + array-algebra query JSON vs the urllib reference, per
+    key (uri.go:99-163): scheme/host lowercased, user before ':',
+    empties omitted, multi-valued query JSON with sorted keys."""
     df = make_entries(spark, _URI_CORPUS)
-    outs = {}
-    for impl in ("builtin", "pandas"):
-        out = run1(df, {"type": "uri_parser", "impl": impl})
-        outs[impl] = collected(out, "attributes")
-    for b, p, line in zip(outs["builtin"], outs["pandas"], _URI_CORPUS):
-        assert dict(b["attributes"] or {}) == dict(p["attributes"] or {}), line
+    out = run1(df, {"type": "uri_parser"})
+    for row, line in zip(collected(out, "attributes"), _URI_CORPUS):
+        assert row["attributes"] == merged(ref.uri_parse(line)), line
 
 
 def test_uri_builtin_error_rows(spark):
-    """Inputs neither parser can make sense of are errors (null parse)
-    on both paths; on_error=drop removes them identically."""
-    df = make_entries(spark, ["/ok?a=1", ""])
-    for impl in ("builtin", "pandas"):
-        out = run1(df, {"type": "uri_parser", "impl": impl,
-                        "on_error": "drop"})
-        rows = collected(out, "text")
-        assert [r["text"] for r in rows] == ["/ok?a=1"], impl
+    """Inputs neither the engine nor the reference can make sense of
+    are errors (null parse); on_error=drop removes them."""
+    texts = ["/ok?a=1", ""]
+    df = make_entries(spark, texts)
+    out = run1(df, {"type": "uri_parser", "on_error": "drop"})
+    assert [r["text"] for r in collected(out, "text")] == ["/ok?a=1"]
+    assert [x for x in texts if ref.uri_parse(x) is not None] == ["/ok?a=1"]

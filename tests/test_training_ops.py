@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from opentelemetry_log_collection_spark import dedup, similarity, textops
+from parser_reference import lang_guess
 
 
 @pytest.fixture(scope="module")
@@ -338,8 +339,8 @@ def test_embedding_near_dups(spark, vectors):
 
 
 def test_language_id_builtin_pandas_parity(spark):
-    """The codegen replace-count scorer and the Arrow UDF must agree
-    on every document, including empty/short/mixed text."""
+    """The codegen replace-count scorer and the plain-Python reference
+    must agree on every document, including empty/short/mixed text."""
     rows = [
         (1, "the cat and the dog are in the house"),
         (2, "la casa de la abuela que está en el pueblo"),
@@ -352,11 +353,8 @@ def test_language_id_builtin_pandas_parity(spark):
         (9, "THE CAT AND THE DOG"),  # case folding
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    b = {r["doc_id"]: r["lang_guess"]
-         for r in textops.language_id(df, impl="builtin").collect()}
-    p = {r["doc_id"]: r["lang_guess"]
-         for r in textops.language_id(df, impl="pandas").collect()}
-    assert b == p
+    b = {r["doc_id"]: r["lang_guess"] for r in textops.language_id(df).collect()}
+    assert b == {doc_id: lang_guess(text) for doc_id, text in rows}
     assert b[6] == "und" and b[8] == "und"
 
 
