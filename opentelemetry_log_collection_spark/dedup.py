@@ -317,8 +317,11 @@ def jaccard_ngram_pairs(
     max_df: int | None = 10_000,
     broadcast_index_max_rows: int = 8_000_000,
 ) -> DataFrame:
-    """EXACT n-gram Jaccard near-duplicate pairs — no MinHash, no
-    probability of a missed pair. Returns (doc_a, doc_b, inter_cnt,
+    """N-gram Jaccard near-duplicate pairs over the full shingle
+    sets — no MinHash sampling. Exact except for the two trade-offs
+    described below: a 64-bit xxhash64 collision between shingle keys,
+    and shingles dropped by the ``max_df`` cap (``max_df=None`` turns
+    the cap off). Returns (doc_a, doc_b, inter_cnt,
     union_cnt) for every pair with Jaccard >= sim_num/sim_den; the
     threshold is evaluated as ``inter*den >= union*num`` so it is
     integer-exact and engine-portable (no float compare).

@@ -9,9 +9,10 @@ expression.md). The environment exposes ``body`` (alias ``$``),
 
 Instead of evaluating per entry the way the reference does
 (operator/helper/transformer.go:66-72 compiles then runs per row), we
-*translate* the expression once into a Catalyst Column tree, so the
-predicate participates in pushdown/codegen and costs nothing in Python
-at runtime.
+*translate* the expression once into Spark SQL text, which the caller
+applies with one ``F.expr``: the predicate participates in
+pushdown/codegen, costs nothing in Python at runtime, and costs three
+py4j round trips to build however large it is.
 
 Supported subset (everything the reference's own tests/fixtures use):
 literals (string/number/bool/nil), field paths with dot or bracket
@@ -28,9 +29,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .fields import Field
+from .fields import Field, quote
 
 _TOKEN_RE = re.compile(
     r"""\s*(?:
@@ -98,13 +98,24 @@ def _tokenize(s: str) -> list[tuple[str, str]]:
 
 @dataclass
 class _Val:
-    """A translated operand: the Column plus enough type info to pick
-    sensible comparison casts (map values are strings)."""
+    """A translated operand: its Spark SQL text plus enough type info
+    to pick sensible comparison casts (map values are strings)."""
 
-    col: Column
+    sql: str
     kind: str  # 'str' | 'num' | 'bool' | 'nil' | 'field' | 'list'
     items: list | None = None  # for list literals
     lit: str | None = None  # python value for string literals
+
+
+def _lit(v: str | int | float) -> str:
+    if isinstance(v, str):
+        return quote(v)
+    # a bare 1.5 would parse as DECIMAL(2,1); F.lit(1.5) is a DOUBLE
+    return f"{v!r}D" if isinstance(v, float) else str(v)
+
+
+def _str(sql: str) -> str:
+    return f"CAST({sql} AS STRING)"
 
 
 class _Parser:
@@ -133,7 +144,7 @@ class _Parser:
         while (t := self.peek()) and t[1] in ("or", "||"):
             self.next()
             right = self.parse_and()
-            left = _Val(_as_bool(left) | _as_bool(right), "bool")
+            left = _Val(f"({_as_bool(left)} OR {_as_bool(right)})", "bool")
         return left
 
     def parse_and(self) -> _Val:
@@ -141,7 +152,7 @@ class _Parser:
         while (t := self.peek()) and t[1] in ("and", "&&"):
             self.next()
             right = self.parse_not()
-            left = _Val(_as_bool(left) & _as_bool(right), "bool")
+            left = _Val(f"({_as_bool(left)} AND {_as_bool(right)})", "bool")
         return left
 
     def parse_not(self) -> _Val:
@@ -149,7 +160,7 @@ class _Parser:
         if t and t[1] in ("not", "!"):
             self.next()
             inner = self.parse_not()
-            return _Val(~_as_bool(inner), "bool")
+            return _Val(f"(NOT {_as_bool(inner)})", "bool")
         return self.parse_cmp()
 
     def parse_cmp(self) -> _Val:
@@ -165,13 +176,9 @@ class _Parser:
         if t[0] == "word" and op in _INFIX_WORDS:
             self.next()
             right = self.parse_sum()
-            lc = left.col.cast(T.StringType())
-            if op == "startsWith":
-                return _Val(lc.startswith(right.col), "bool")
-            if op == "endsWith":
-                return _Val(lc.endswith(right.col), "bool")
-            if op == "contains":
-                return _Val(lc.contains(right.col), "bool")
+            lc = _str(left.sql)
+            if op in ("startsWith", "endsWith", "contains"):
+                return _Val(f"{op.lower()}({lc}, {right.sql})", "bool")
             if op == "matches":
                 if right.lit is None:
                     raise ExprError("matches requires a string literal pattern")
@@ -183,12 +190,16 @@ class _Parser:
                 # (the flagship evaluates several such guards per row)
                 prefix = _regex_prefix_literal(right.lit)
                 if prefix is not None:
-                    return _Val(lc.startswith(F.lit(prefix)), "bool")
-                return _Val(lc.rlike(right.lit), "bool")
+                    return _Val(f"startswith({lc}, {quote(prefix)})", "bool")
+                return _Val(f"({lc} RLIKE {right.sql})", "bool")
             if op == "in":
                 if right.items is None:
                     raise ExprError("'in' requires a list literal")
-                return _Val(left.col.isin(*right.items), "bool")
+                if not right.items:
+                    # what Catalyst folds an empty IN list to
+                    return _Val("false", "bool")
+                items = ", ".join(_lit(i) for i in right.items)
+                return _Val(f"({left.sql} IN ({items}))", "bool")
         return left
 
     def parse_sum(self) -> _Val:
@@ -197,24 +208,18 @@ class _Parser:
             self.next()
             right = self.parse_primary()
             if left.kind == "num" and right.kind == "num":
-                left = _Val(left.col + right.col, "num")
+                left = _Val(f"({left.sql} + {right.sql})", "num")
             else:
-                left = _Val(
-                    F.concat(
-                        left.col.cast(T.StringType()),
-                        right.col.cast(T.StringType()),
-                    ),
-                    "str",
-                )
+                left = _Val(f"concat({_str(left.sql)}, {_str(right.sql)})", "str")
         return left
 
     def parse_primary(self) -> _Val:
         kind, v = self.next()
         if kind == "str":
             s = _unquote(v)
-            return _Val(F.lit(s), "str", lit=s)
+            return _Val(quote(s), "str", lit=s)
         if kind == "num":
-            return _Val(F.lit(float(v) if "." in v else int(v)), "num")
+            return _Val(_lit(_number(v)), "num")
         if v == "(":
             inner = self.parse_or()
             self.expect(")")
@@ -230,20 +235,18 @@ class _Parser:
                 if item[0] == "str":
                     items.append(_unquote(item[1]))
                 elif item[0] == "num":
-                    items.append(float(item[1]) if "." in item[1] else int(item[1]))
+                    items.append(_number(item[1]))
                 else:
                     raise ExprError("only literal lists supported")
                 t = self.peek()
                 if t and t[1] == ",":
                     self.next()
-            return _Val(F.lit(None), "list", items)
+            return _Val("NULL", "list", items)
         if kind == "word":
-            if v == "true":
-                return _Val(F.lit(True), "bool")
-            if v == "false":
-                return _Val(F.lit(False), "bool")
+            if v in ("true", "false"):
+                return _Val(v, "bool")
             if v == "nil":
-                return _Val(F.lit(None), "nil")
+                return _Val("NULL", "nil")
             if v == "env":
                 # env("NAME") snapshots the driver environment when
                 # the stage plan is BUILT — and stages compile their
@@ -256,7 +259,7 @@ class _Parser:
                 self.expect("(")
                 name_t = self.next()
                 self.expect(")")
-                return _Val(F.lit(os.environ.get(_unquote(name_t[1]), "")), "str")
+                return _Val(quote(os.environ.get(_unquote(name_t[1]), "")), "str")
             return self._field(v)
         raise ExprError(f"unexpected token {v!r}")
 
@@ -270,7 +273,11 @@ class _Parser:
             key_t = self.next()
             self.expect("]")
             path += f"[{key_t[1]}]"
-        return _Val(Field.parse(path).get(), "field")
+        return _Val(Field.parse(path).sql(), "field")
+
+
+def _number(v: str) -> int | float:
+    return float(v) if "." in v else int(v)
 
 
 def _unquote(s: str) -> str:
@@ -278,38 +285,28 @@ def _unquote(s: str) -> str:
     return body.replace('\\"', '"').replace("\\'", "'").replace("\\\\", "\\")
 
 
-def _as_bool(v: _Val) -> Column:
+def _as_bool(v: _Val) -> str:
     if v.kind == "field":
         # truthiness of a string field: non-null and not "" / "false"
-        c = v.col.cast(T.StringType())
-        return c.isNotNull() & (c != "") & (F.lower(c) != "false")
-    return v.col.cast(T.BooleanType())
+        c = _str(v.sql)
+        return f"({c} IS NOT NULL AND {c} != '' AND lower({c}) != 'false')"
+    return f"CAST({v.sql} AS BOOLEAN)"
 
 
-def _compare(op: str, left: _Val, right: _Val) -> Column:
-    lc, rc = left.col, right.col
+def _compare(op: str, left: _Val, right: _Val) -> str:
+    lc, rc = left.sql, right.sql
     # nil comparisons -> null checks (expr-lang semantics)
     if right.kind == "nil":
-        return lc.isNull() if op == "==" else lc.isNotNull()
+        return f"({lc} IS {'' if op == '==' else 'NOT '}NULL)"
     if left.kind == "nil":
-        return rc.isNull() if op == "==" else rc.isNotNull()
+        return f"({rc} IS {'' if op == '==' else 'NOT '}NULL)"
     # map values are strings; comparing against a numeric literal
     # compares numerically like expr-lang does on parsed numbers
     if left.kind == "field" and right.kind == "num":
-        lc = lc.try_cast(T.DoubleType())
+        lc = f"TRY_CAST({lc} AS DOUBLE)"
     if right.kind == "field" and left.kind == "num":
-        rc = rc.try_cast(T.DoubleType())
-    if op == "==":
-        return lc == rc
-    if op == "!=":
-        return lc != rc
-    if op == "<":
-        return lc < rc
-    if op == "<=":
-        return lc <= rc
-    if op == ">":
-        return lc > rc
-    return lc >= rc
+        rc = f"TRY_CAST({rc} AS DOUBLE)"
+    return f"({lc} {'=' if op == '==' else op} {rc})"
 
 
 def _parse(expression: str) -> _Val:
@@ -320,22 +317,22 @@ def _parse(expression: str) -> _Val:
     return out
 
 
-def compile_expr(expression: str) -> Column:
-    """Compile an expr-language expression to a Column."""
-    return _parse(expression).col
+def compile_expr(expression: str) -> str:
+    """Compile an expr-language expression to Spark SQL text."""
+    return _parse(expression).sql
 
 
-def compile_bool(expression: str) -> Column:
-    """Compile to a boolean Column (expr.AsBool semantics:
-    operator/helper/transformer.go:66-72). The compiled tree is a
-    pure function of the source string, so it is memoized
-    process-wide (colmemo) — if-guards and router routes recompile
-    on every pipeline construction otherwise."""
-    from .colmemo import memo_column
+def compile_bool(expression: str) -> str:
+    """Compile to boolean Spark SQL text (expr.AsBool semantics:
+    operator/helper/transformer.go:66-72)."""
+    return _as_bool(_parse(expression))
 
-    return memo_column(
-        ("compile_bool", expression), lambda: _as_bool(_parse(expression))
-    )
+
+def compile_guard(expression: str) -> Column:
+    """``compile_bool`` as a Column with a null result counted as
+    false — the form `if` guards, routes, filters and recombine
+    boundaries apply."""
+    return F.expr(f"coalesce({compile_bool(expression)}, false)")
 
 
 def _find_expr_spans(template: str) -> list[tuple[int, int, str]]:
@@ -367,20 +364,20 @@ def _find_expr_spans(template: str) -> list[tuple[int, int, str]]:
     return spans
 
 
-def compile_template(template: str) -> Column:
-    """``"literal EXPR( ... ) literal"`` -> concat Column
+def compile_template(template: str) -> str:
+    """``"literal EXPR( ... ) literal"`` -> Spark SQL ``concat`` text
     (operator/helper/expr_string.go:39-104)."""
-    parts: list[Column] = []
+    parts: list[str] = []
     pos = 0
     for start, end, inner in _find_expr_spans(template):
         if start > pos:
-            parts.append(F.lit(template[pos:start]))
-        parts.append(compile_expr(inner).cast(T.StringType()))
+            parts.append(quote(template[pos:start]))
+        parts.append(_str(compile_expr(inner)))
         pos = end
     if pos < len(template):
-        parts.append(F.lit(template[pos:]))
+        parts.append(quote(template[pos:]))
     if not parts:
-        return F.lit("")
+        return "''"
     if len(parts) == 1:
         return parts[0]
-    return F.concat(*parts)
+    return f"concat({', '.join(parts)})"

@@ -49,6 +49,23 @@ TOP_LEVEL = {
 }
 
 
+def quote(s: str) -> str:
+    """Spark SQL string literal for ``s``. Escapes ``\\`` and ``'``,
+    and writes ``${`` as ``$\\{`` so the parser's variable
+    substitution (which would replace ``${name}`` with a conf value,
+    an environment variable or nothing) never sees it. Under
+    ``spark.sql.parser.escapedStringLiterals=false`` (the default)
+    every other character, control bytes and regex escapes included,
+    reads back unchanged."""
+    s = s.replace("\\", "\\\\").replace("'", "\\'").replace("${", "$\\{")
+    return f"'{s}'"
+
+
+def ident(name: str) -> str:
+    """Backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _empty_map() -> Column:
     return F.create_map().cast(MAP_SS)
 
@@ -165,8 +182,9 @@ class Field:
 
     # ---- GET ------------------------------------------------------
 
-    def get(self) -> Column:
-        """Column reading this field from the canonical entry frame.
+    def sql(self) -> str:
+        """Spark SQL text reading this field from the canonical entry
+        frame.
 
         ``body`` root with no keys reads the *raw* string while the
         structured body is unset (the usual parse_from case) and the
@@ -174,22 +192,23 @@ class Field:
         the dynamic Go body that starts life as the log line.
         """
         if self.root in TOP_LEVEL and not self.keys:
-            return F.col(TOP_LEVEL[self.root])
+            return ident(TOP_LEVEL[self.root])
         if self.root not in MAP_ROOTS:
             raise FieldParseError(f"cannot read {self}")
-        if self.root == "body":
-            m = F.col("body")
-            if not self.keys:
-                return F.when(m.isNotNull(), F.to_json(m)).otherwise(F.col("text"))
-        else:
-            m = F.col(self.root)
-            if not self.keys:
-                return F.to_json(m)
-        head = F.try_element_at(m, F.lit(self.keys[0]))
+        m = ident(self.root)
+        if not self.keys:
+            if self.root == "body":
+                return f"CASE WHEN {m} IS NOT NULL THEN to_json({m}) ELSE `text` END"
+            return f"to_json({m})"
+        head = f"try_element_at({m}, {quote(self.keys[0])})"
         if len(self.keys) == 1:
             return head
         # deeper levels live JSON-encoded inside the map value
-        return F.get_json_object(head, "$." + ".".join(self.keys[1:]))
+        return f"get_json_object({head}, {quote('$.' + '.'.join(self.keys[1:]))})"
+
+    def get(self) -> Column:
+        """Column reading this field (see ``sql``)."""
+        return F.expr(self.sql())
 
     # ---- SET ------------------------------------------------------
     #

@@ -38,7 +38,7 @@ def stamp(df: DataFrame, attributes: dict | None, resource: dict | None) -> Data
         entries = []
         for k, v in mapping.items():
             entries.append(F.lit(str(k)))
-            entries.append(compile_template(str(v)))
+            entries.append(F.expr(compile_template(str(v))))
         updates = Field.parse(root).set_map(F.create_map(*entries))
         df = apply_updates(df, updates)
     return df
@@ -141,12 +141,10 @@ class FileSink(Sink):
     type_name = "file_output"
 
     def __init__(self, path: str | None = None, format: str = "parquet",
-                 sort_within_partitions: bool = True,
                  compression: str | None = None, **kw):
         super().__init__(**kw)
         self.path = path
         self.format = format
-        self.sort_within_partitions = sort_within_partitions
         # Spark-native codecs, JVM-side on the write path: NDJSON sinks
         # rotate as .json.gz the way real shippers do; parquet takes
         # its columnar codecs (snappy default when None)
@@ -164,7 +162,7 @@ class FileSink(Sink):
     def write(self, df: DataFrame, base_dir: str) -> None:
         path = self.path or f"{base_dir}/{self.id}"
         out = df
-        if self.sort_within_partitions and {"conv_id", "turn_idx"} <= set(df.columns):
+        if {"conv_id", "turn_idx"} <= set(df.columns):
             # deterministic file contents for fixture equality
             out = df.sortWithinPartitions("conv_id", "turn_idx")
         writer = out.write.mode("overwrite")

@@ -13,7 +13,9 @@ ran (parser.go:171-184).
 
 Execution strategy per parser (the Spark-first part). Every parser
 builds JVM-side Catalyst expressions (whole-stage codegen, no Python
-worker); the one exception is CSV's per-row header path:
+worker); the regex extractors and the uri/syslog attribute maps are
+rendered as Spark SQL text and applied with one ``F.expr`` each. The
+one exception is CSV's per-row header path:
   - regex:     one ``regexp_replace`` execution per row (onepass_map)
                for fully ^-anchored patterns, else ``rlike`` + one
                ``regexp_extract`` per named group (pergroup_map). The
@@ -50,7 +52,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..fields import MAP_SS, Field, apply_updates
+from ..fields import MAP_SS, Field, apply_updates, ident, quote
 from ..pipeline import ColumnStage, register
 from .severity import SeverityParser
 from .time_parser import TimeParser
@@ -62,6 +64,9 @@ from .trace_scope import ScopeNameParser, TraceParser
 # --------------------------------------------------------------------
 
 _SEP = "\x01"
+#: Spark SQL spelling of MAP_SS, and its empty value
+_MAP_SS = MAP_SS.simpleString()
+_EMPTY = f"CAST(map() AS {_MAP_SS})"
 
 
 def fully_anchored(regex: str) -> bool:
@@ -104,7 +109,7 @@ def fully_anchored(regex: str) -> bool:
 _MARK = "\x02\x03\x02"
 
 
-def onepass_map(src: Column, pattern_java: str, groups: dict[str, int]) -> Column:
+def onepass_map(src: str, pattern_java: str, groups: dict[str, int]) -> str:
     """SINGLE regex execution per row: rewrite the whole line to
     marker + \\x01-joined groups, split, zip with names; null when the
     pattern did not match (no marker). The trailing ``(?s:.*)$``
@@ -113,49 +118,49 @@ def onepass_map(src: Column, pattern_java: str, groups: dict[str, int]) -> Colum
     fall back to guarded per-group extraction — branch evaluation is
     per-row, so the fallback costs nothing on the happy path.
 
-    Pure function of its arguments; memoized process-wide (colmemo)
-    so repeated pipeline constructions reuse the built tree."""
-    from ..colmemo import memo_column
-
-    return memo_column(
-        ("onepass_map", str(src), pattern_java, tuple(groups.items())),
-        lambda: _build_onepass_map(src, pattern_java, groups),
-    )
-
-
-def _build_onepass_map(
-    src: Column, pattern_java: str, groups: dict[str, int]
-) -> Column:
-    g = len(groups)
+    ``src`` and the result are Spark SQL text."""
     repl = _MARK + _SEP.join(f"${idx}" for idx in groups.values())
-    blob = F.regexp_replace(src, pattern_java + "(?s:.*)$", repl)
-    parts = F.split(F.substr(blob, F.lit(len(_MARK) + 1)), _SEP, -1)
-    names = F.array(*[F.lit(n) for n in groups])
-    fast = F.map_from_arrays(names, parts)
+    blob = f"regexp_replace({src}, {quote(pattern_java + '(?s:.*)$')}, {quote(repl)})"
+    parts = f"split(substr({blob}, {len(_MARK) + 1}), {quote(_SEP)}, -1)"
+    names = ", ".join(quote(n) for n in groups)
     slow = pergroup_map(src, pattern_java, groups)
+    mark = quote(_MARK)
     # spoof guard: a NON-matching line that itself begins with the
     # marker would leave blob == src, pass the startswith check, and
     # (with exactly g-1 \x01 bytes) fast-parse garbage. Any source row
     # already starting with the marker takes the rlike-guarded slow
     # path, where a non-match correctly nulls out.
     return (
-        F.when(F.startswith(src, F.lit(_MARK)), slow)
-        .when(~F.startswith(blob, F.lit(_MARK)), F.lit(None).cast(MAP_SS))
-        .when(F.size(parts) == g, fast)
-        .otherwise(slow)
+        f"CASE WHEN startswith({src}, {mark}) THEN {slow}"
+        f" WHEN NOT startswith({blob}, {mark}) THEN CAST(NULL AS {_MAP_SS})"
+        f" WHEN size({parts}) = {len(groups)} THEN map_from_arrays(array({names}), {parts})"
+        f" ELSE {slow} END"
     )
 
 
-def pergroup_map(src: Column, pattern_java: str, groups: dict[str, int]) -> Column:
+def pergroup_map(src: str, pattern_java: str, groups: dict[str, int]) -> str:
     """``rlike`` match guard + one ``regexp_extract`` per named group
     (G+1 regex executions per row — Catalyst does not CSE the
     matcher); null when the pattern does not match. Correct for any
-    pattern, anchored or not."""
-    entries: list[Column] = []
-    for name, idx in groups.items():
-        entries.append(F.lit(name))
-        entries.append(F.regexp_extract(src, pattern_java, idx))
-    return F.when(src.rlike(pattern_java), F.create_map(*entries))
+    pattern, anchored or not. ``src`` and the result are Spark SQL
+    text."""
+    pat = quote(pattern_java)
+    entries = ", ".join(
+        f"{quote(name)}, regexp_extract({src}, {pat}, {idx})"
+        for name, idx in groups.items()
+    )
+    return f"CASE WHEN ({src} RLIKE {pat}) THEN map({entries}) END"
+
+
+def _opt(k: str, v: str, cond: str) -> str:
+    """Conditional singleton map: map_concat of these stays inside
+    whole-stage codegen (higher-order filter / map_from_entries would
+    fall back to interpreted eval — measured 2-3x slower at 5M rows)."""
+    return f"CASE WHEN {cond} THEN map({quote(k)}, CAST({v} AS STRING)) ELSE {_EMPTY} END"
+
+
+def _get(raw: str, k: str) -> str:
+    return f"try_element_at({raw}, {quote(k)})"
 
 
 def strip_group_names(regex: str) -> str:
@@ -190,21 +195,24 @@ class ParserStage(ColumnStage):
         if scope_name:
             self.subparsers.append(ScopeNameParser(**scope_name))
 
-    def parse(self, src: Column) -> Column:
-        """Return map<string,string>, null when the parse fails."""
+    def parse(self, src: str) -> Column:
+        """Return map<string,string>, null when the parse fails;
+        ``src`` is the Spark SQL text of the string to parse."""
         raise NotImplementedError
 
-    def refine(self, raw: Column) -> Column:
+    def refine(self, raw: str) -> str:
         """Second-projection hook: turn the raw extraction map (already
-        MATERIALIZED as a column) into the final attribute map. Default
-        is identity. Parsers that derive many outputs from one regex
+        MATERIALIZED as a column; ``raw`` is its Spark SQL text) into
+        the Spark SQL text of the final attribute map. Default is
+        identity. Parsers that derive many outputs from one regex
         extraction override this so the extraction subtree is
         evaluated once per row, not once per output key."""
         return raw
 
     def transform(self, df: DataFrame, cond: Column):
-        src = self.parse_from.get().cast(T.StringType())
-        parsed = self.parse(src)
+        src_sql = f"CAST({self.parse_from.sql()} AS STRING)"
+        src = F.expr(src_sql)
+        parsed = self.parse(src_sql)
         # materialize the parse result in its own projection first:
         # CSV's header_attribute/strict path is a pandas UDF, which
         # cannot be referenced inside the higher-order-function
@@ -212,7 +220,7 @@ class ParserStage(ColumnStage):
         # (UNSUPPORTED_FEATURE.LAMBDA_FUNCTION_WITH_PYTHON_UDF)
         df = df.withColumn("_parsed_raw", F.when(cond & src.isNotNull(), parsed))
         df = df.withColumn(
-            "_parsed", self.refine(F.col("_parsed_raw"))
+            "_parsed", F.expr(self.refine(ident("_parsed_raw")))
         ).drop("_parsed_raw")
         err = src.isNull() | F.col("_parsed").isNull()
         df = apply_updates(df, self.parse_to.set_map(F.col("_parsed")))
@@ -271,8 +279,8 @@ class RegexParserStage(ParserStage):
         # else regexp_replace rewrites EVERY occurrence
         self.extract = onepass_map if fully_anchored(regex) else pergroup_map
 
-    def parse(self, src: Column) -> Column:
-        return self.extract(src, self.pattern_java, self.groups)
+    def parse(self, src: str) -> Column:
+        return F.expr(self.extract(src, self.pattern_java, self.groups))
 
 
 # --------------------------------------------------------------------
@@ -290,8 +298,8 @@ class JsonParserStage(ParserStage):
     cores against an Arrow-batched Python parser, whose workers
     oversubscribe the box."""
 
-    def parse(self, src: Column) -> Column:
-        return F.from_json(src, MAP_SS)
+    def parse(self, src: str) -> Column:
+        return F.from_json(F.expr(src), MAP_SS)
 
 
 # --------------------------------------------------------------------
@@ -321,11 +329,12 @@ class CsvParserStage(ParserStage):
         self.lazy_quotes = lazy_quotes
         self.strict = strict
 
-    def parse(self, src: Column) -> Column:
+    def parse(self, src: str) -> Column:
+        line = F.expr(src)
         if self.header is not None and not self.strict:
             # fast path: whole-stage-codegen CSV decode
             schema = ", ".join(f"`{h}` string" for h in self.header)
-            struct = F.from_csv(src, schema, {"sep": self.delimiter})
+            struct = F.from_csv(line, schema, {"sep": self.delimiter})
             ok = struct.isNotNull()
             for h in self.header:
                 ok = ok & struct.getField(h).isNotNull()
@@ -379,7 +388,7 @@ class CsvParserStage(ParserStage):
                 [one(x, h) for x, h in zip(s, hdr)], index=s.index, dtype=object
             )
 
-        return parse_csv(src, hdr_col)
+        return parse_csv(line, hdr_col)
 
 
 # --------------------------------------------------------------------
@@ -441,20 +450,21 @@ class KeyValueParserStage(ParserStage):
             ),
         )
 
-    def parse(self, src: Column) -> Column:
+    def parse(self, src: str) -> Column:
+        line = F.expr(src)
         # empty input is a parse error (keyvalue.go:105-107); a
         # non-empty input with zero extractable pairs parses to an
         # empty map with no error, like the Go loop over zero pairs
-        nonempty = src.isNotNull() & (src != F.lit(""))
+        nonempty = line.isNotNull() & (line != F.lit(""))
         if self.pair_delimiter is not None:
             # split pairs, Split-2 each
-            pairs = F.split(src, _re.escape(self.pair_delimiter))
+            pairs = F.split(line, _re.escape(self.pair_delimiter))
         else:
             # quote-aware whitespace pair split (keyvalue.go:130-139):
             # tokenize with the quote-group regex, then exact-2 split
             # per pair
             pairs = F.regexp_extract_all(
-                src, F.lit(_QUOTE_AWARE_PAIR.pattern), 0
+                line, F.lit(_QUOTE_AWARE_PAIR.pattern), 0
             )
         bad = F.exists(pairs, self._bad_pair)
         return F.when(
@@ -490,12 +500,12 @@ class UriParserStage(ParserStage):
     path."""
 
     @staticmethod
-    def _query_json(qs: Column) -> Column:
+    def _query_json(qs: str) -> str:
         """querystring -> JSON text of {key: [values...]} with sorted
         keys, parse_qs(keep_blank_values=True) semantics: tokens split
         on '&', empty tokens dropped, bare 'k' means k=''."""
 
-        def dec(c: Column) -> Column:
+        def dec(c: str) -> str:
             # urllib PARTIALLY decodes mixed tokens (valid escapes
             # decoded, invalid %-sequences kept verbatim), while
             # URLDecoder throws on the first invalid escape. Pre-escape
@@ -504,120 +514,76 @@ class UriParserStage(ParserStage):
             # still decodes the valid escapes, matching urllib on
             # tokens like 'k=%zz%20'. try_ + coalesce stays as a belt
             # for non-UTF8 decode results.
-            esc = F.regexp_replace(c, r"%(?![0-9A-Fa-f]{2})", "%25")
-            return F.coalesce(F.try_url_decode(esc), c)
+            esc = f"regexp_replace({c}, {quote(r'%(?![0-9A-Fa-f]{2})')}, '%25')"
+            return f"coalesce(try_url_decode({esc}), {c})"
 
-        toks = F.filter(F.split(qs, "&", -1), lambda t: t != F.lit(""))
-        pairs = F.transform(
-            toks,
-            lambda t: F.struct(
-                dec(F.substring_index(t, "=", 1)).alias("k"),
-                dec(
-                    F.when(
-                        F.instr(t, "=") > 0,
-                        F.substr(t, F.instr(t, "=") + F.lit(1)),
-                    ).otherwise(F.lit(""))
-                ).alias("v"),
-            ),
-        )
-        keys = F.array_sort(
-            F.array_distinct(F.transform(pairs, lambda p: p.getField("k")))
-        )
-        entries = F.transform(
-            keys,
-            lambda k: F.struct(
-                k.alias("key"),
-                F.transform(
-                    F.filter(pairs, lambda p: p.getField("k") == k),
-                    lambda p: p.getField("v"),
-                ).alias("value"),
-            ),
-        )
-        return F.to_json(F.map_from_entries(entries))
+        toks = f"filter(split({qs}, '&', -1), t -> t != '')"
+        k = dec("substring_index(t, '=', 1)")
+        v = dec("CASE WHEN instr(t, '=') > 0 THEN substr(t, instr(t, '=') + 1) ELSE '' END")
+        pairs = f"transform({toks}, t -> struct({k} AS k, {v} AS v))"
+        keys = f"array_sort(array_distinct(transform({pairs}, p -> p.k)))"
+        values = f"transform(filter({pairs}, p -> p.k = q), p -> p.v)"
+        entries = f"transform({keys}, q -> struct(q AS key, {values} AS value))"
+        return f"to_json(map_from_entries({entries}))"
 
-    def refine(self, raw: Column) -> Column:
+    def refine(self, raw: str) -> str:
         """Raw split map {scheme,authority,path,query}
         (or {bare_query}) -> final attribute map with empties omitted
         (uri.go:99-127) and the query JSON-encoded. urllib semantics:
         scheme/host lowercased, userinfo = authority before the LAST
         '@', username = userinfo before ':', port = trailing digits,
-        IPv6 brackets stripped.
-
-        The tree is a pure function of ``raw`` and ~500 py4j calls to
-        build (measured ~0.5s per construction), so it is memoized
-        process-wide (colmemo)."""
-        from ..colmemo import memo_column
-
-        return memo_column(
-            ("uri_refine", str(raw)), lambda: self._build_refine(raw)
+        IPv6 brackets stripped."""
+        scheme, path, query = (_get(raw, k) for k in ("scheme", "path", "query"))
+        auth = f"coalesce({_get(raw, 'authority')}, '')"
+        hostpart = f"substring_index({auth}, '@', -1)"
+        userinfo = (
+            f"CASE WHEN instr({auth}, '@') > 0"
+            f" THEN substring({auth}, 1, length({auth}) - length({hostpart}) - 1)"
+            " ELSE '' END"
         )
-
-    def _build_refine(self, raw: Column) -> Column:
-
-        def g(k: str) -> Column:
-            return F.try_element_at(raw, F.lit(k))
-
-        empty = F.create_map().cast(MAP_SS)
-
-        def opt(k: str, v: Column, cond: Column) -> Column:
-            # conditional singleton map: map_concat of these stays
-            # inside whole-stage codegen (higher-order filter /
-            # map_from_entries would fall back to interpreted eval —
-            # measured 2-3x slower at 5M rows)
-            return F.when(
-                cond, F.create_map(F.lit(k), v.cast(T.StringType()))
-            ).otherwise(empty)
-
-        bare = g("bare_query")
-        auth = F.coalesce(g("authority"), F.lit(""))
-        hostpart = F.substring_index(auth, "@", -1)
-        userinfo = F.when(
-            F.instr(auth, "@") > 0,
-            F.substring(auth, F.lit(1), F.length(auth) - F.length(hostpart) - 1),
-        ).otherwise(F.lit(""))
-        port = F.regexp_extract(hostpart, r":([0-9]+)$", 1)
+        port = f"regexp_extract({hostpart}, {quote(r':([0-9]+)$')}, 1)"
         # urllib parity on port edges: int round-trip normalizes
         # leading zeros (:0080 -> 80), port 0 is falsy and omitted,
         # and out-of-range (>65535 or int-overflow) is a PARSE ERROR
         # (urllib's u.port raises ValueError)
-        port_i = F.when(port != "", port.try_cast(T.IntegerType()))
-        bad_port = (port != "") & (
-            port_i.isNull() | (port_i > 65535)
+        port_i = f"CASE WHEN {port} != '' THEN TRY_CAST({port} AS INT) END"
+        bad_port = f"({port} != '' AND ({port_i} IS NULL OR {port_i} > 65535))"
+        port_out = (
+            f"CASE WHEN {port_i} IS NOT NULL AND {port_i} > 0"
+            f" THEN CAST({port_i} AS STRING) ELSE '' END"
         )
-        port_out = F.when(
-            port_i.isNotNull() & (port_i > 0), port_i.cast(T.StringType())
-        ).otherwise(F.lit(""))
-        hostnoport = F.when(
-            port != "",
-            F.substring(
-                hostpart, F.lit(1),
-                F.length(hostpart) - F.length(port) - 1,
-            ),
-        ).otherwise(hostpart)
-        host = F.lower(F.regexp_replace(hostnoport, r"^\[|\]$", ""))
-        user = F.substring_index(userinfo, ":", 1)
-        full = F.map_concat(
-            opt("scheme", F.lower(g("scheme")), g("scheme") != ""),
-            opt("user", user, user != ""),
-            opt("host", host, host != ""),
-            opt("port", port_out, port_out != ""),
-            opt("path", g("path"), g("path") != ""),
-            opt("query", self._query_json(g("query")), g("query") != ""),
+        hostnoport = (
+            f"CASE WHEN {port} != ''"
+            f" THEN substring({hostpart}, 1, length({hostpart}) - length({port}) - 1)"
+            f" ELSE {hostpart} END"
         )
-        built = F.when(
-            bare.isNotNull(),
-            F.create_map(F.lit("query"), self._query_json(bare)),
-        ).otherwise(F.when(~bad_port & (F.size(full) > 0), full))
-        return F.when(raw.isNotNull(), built)
+        brackets = quote(r"^\[|\]$")  # IPv6 host brackets
+        host = f"lower(regexp_replace({hostnoport}, {brackets}, ''))"
+        user = f"substring_index({userinfo}, ':', 1)"
+        full = "map_concat({})".format(", ".join([
+            _opt("scheme", f"lower({scheme})", f"{scheme} != ''"),
+            _opt("user", user, f"{user} != ''"),
+            _opt("host", host, f"{host} != ''"),
+            _opt("port", port_out, f"{port_out} != ''"),
+            _opt("path", path, f"{path} != ''"),
+            _opt("query", self._query_json(query), f"{query} != ''"),
+        ]))
+        bare = _get(raw, "bare_query")
+        return (
+            f"CASE WHEN {raw} IS NOT NULL THEN"
+            f" CASE WHEN {bare} IS NOT NULL THEN map('query', {self._query_json(bare)})"
+            f" ELSE CASE WHEN (NOT {bad_port} AND size({full}) > 0) THEN {full} END END"
+            " END"
+        )
 
-    def parse(self, src: Column) -> Column:
+    def parse(self, src: str) -> Column:
         # bare query string (uri.go:79-97): '?...' carries ONLY the
         # query (even when empty); everything else takes the
         # single-regex RFC 3986 split
-        return F.when(
-            src.startswith("?"),
-            F.create_map(F.lit("bare_query"), F.substr(src, F.lit(2))),
-        ).otherwise(onepass_map(src, _URI_SPLIT, _URI_GROUPS))
+        return F.expr(
+            f"CASE WHEN startswith({src}, '?') THEN map('bare_query', substr({src}, 2))"
+            f" ELSE {onepass_map(src, _URI_SPLIT, _URI_GROUPS)} END"
+        )
 
 
 # --------------------------------------------------------------------
@@ -702,71 +668,52 @@ class SyslogParserStage(ParserStage):
                 tp = TimeParser("attributes.timestamp", layout_type="native")
             self.subparsers.append(tp)
 
-    def parse(self, src: Column) -> Column:
+    def parse(self, src: str) -> Column:
         if self.protocol == "rfc5424":
             rx, groups = _RFC5424, _RFC5424_GROUPS
         else:
             rx, groups = _RFC3164, _RFC3164_GROUPS
-        return onepass_map(src, strip_group_names(rx.pattern), groups)
+        return F.expr(onepass_map(src, strip_group_names(rx.pattern), groups))
 
-    def refine(self, raw: Column) -> Column:
+    def refine(self, raw: str) -> str:
         """Raw extraction map (one column read per key — the
         extraction itself already ran once) -> final attribute map with
         priority arithmetic and NILVALUE/absent-key omission, mirroring
         syslog.go's toSafeMap. Null raw (failed parse / skipped row)
         stays null."""
 
-        def g(k: str) -> Column:
-            return F.try_element_at(raw, F.lit(k))
+        def g(k: str) -> str:
+            return _get(raw, k)
 
-        empty = F.create_map().cast(MAP_SS)
+        def unless(k: str, v: str, nil: str = "-") -> str:
+            # the key is omitted when its value is the NILVALUE
+            return _opt(k, v, f"{v} != {quote(nil)}")
 
-        def opt(k: str, v: Column, cond: Column) -> Column:
-            # conditional singleton maps concatenated with map_concat
-            # stay inside whole-stage codegen (higher-order filter /
-            # map_from_entries fall back to interpreted eval)
-            return F.when(
-                cond, F.create_map(F.lit(k), v.cast(T.StringType()))
-            ).otherwise(empty)
-
-        def s(c: Column) -> Column:
-            return c.cast(T.StringType())
-
-        pri = g("pri").cast(T.IntegerType())
-        host = g("hostname")
-        always = F.create_map(
+        pri = f"CAST({g('pri')} AS INT)"
+        always = (
             # int round-trip strips leading zeros like str(int(x))
-            F.lit("priority"), s(pri),
-            F.lit("facility"), s(F.floor(pri / F.lit(8)).cast(T.IntegerType())),
-            F.lit("severity"), s(pri % F.lit(8)),
-            F.lit("message"), F.coalesce(g("message"), F.lit("")),
+            f"map('priority', CAST({pri} AS STRING),"
+            f" 'facility', CAST(CAST(floor({pri} / 8) AS INT) AS STRING),"
+            f" 'severity', CAST({pri} % 8 AS STRING),"
+            f" 'message', coalesce({g('message')}, ''))"
         )
-        parts = [always, opt("hostname", host, host != "-")]
+        parts = [always, unless("hostname", g("hostname"))]
         if self.protocol == "rfc5424":
-            ts = g("ts")
-            parts.append(opt("timestamp", ts, ts != "-"))
-            parts.append(opt("version", g("version"), F.lit(True)))
-            for k in ("appname", "proc_id", "msg_id"):
-                v = g(k)
-                parts.append(opt(k, v, v != "-"))
-            sd = g("sd")
-            parts.append(opt("structured_data", sd, sd != "-"))
+            parts.append(unless("timestamp", g("ts")))
+            parts.append(_opt("version", g("version"), "true"))
+            parts += [unless(k, g(k)) for k in ("appname", "proc_id", "msg_id")]
+            parts.append(unless("structured_data", g("sd")))
         else:
             # normalize the RFC3164 space-padded day ("Jan  2") so the
             # default TimeParser's "MMM d" layout parses it; the
             # attribute is deleted at postprocess anyway
-            parts.append(
-                opt(
-                    "timestamp",
-                    F.regexp_replace(g("ts"), r"\s+", " "),
-                    F.lit(True),
-                )
-            )
-            parts.append(opt("appname", g("tag"), F.lit(True)))
+            ws = quote(r"\s+")
+            ts = f"regexp_replace({g('ts')}, {ws}, ' ')"
+            parts.append(_opt("timestamp", ts, "true"))
+            parts.append(_opt("appname", g("tag"), "true"))
             # optional group: Java substitutes "" when non-participating
-            pid = g("proc_id")
-            parts.append(opt("proc_id", pid, pid != ""))
-        return F.when(raw.isNotNull(), F.map_concat(*parts))
+            parts.append(unless("proc_id", g("proc_id"), ""))
+        return f"CASE WHEN {raw} IS NOT NULL THEN map_concat({', '.join(parts)}) END"
 
     def postprocess(self, df: DataFrame, ok: Column, err: Column):
         # postprocess (syslog.go:252-269): attributes.severity (0-7)

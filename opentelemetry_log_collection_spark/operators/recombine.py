@@ -45,7 +45,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..exprs import compile_bool
+from ..exprs import compile_guard
 from ..fields import Field, apply_updates
 from ..pipeline import Stage, register
 
@@ -272,9 +272,7 @@ class RecombineStage(Stage):
     def apply(self, df: DataFrame) -> DataFrame:
         order = self._order_cols(df)
         src_raw = self.source_identifier.get().cast(T.StringType())
-        matched = F.coalesce(
-            compile_bool(self.is_first or self.is_last), F.lit(False)
-        )
+        matched = compile_guard(self.is_first or self.is_last)
         df = df.withColumn("_srcraw", src_raw).withColumn("_match", matched)
         entry_cols = [c for c in df.columns if c not in ("_srcraw", "_match")]
 

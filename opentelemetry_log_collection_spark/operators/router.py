@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..exprs import compile_bool
+from ..exprs import compile_guard
 from ..fields import apply_updates, Field
 from ..pipeline import Stage, register
 
@@ -51,7 +51,7 @@ class RouterStage(Stage):
         len(routes) for the default, null for unmatched (dropped)."""
         col = None
         for i, r in enumerate(self.routes):
-            cond = F.coalesce(compile_bool(r.expr), F.lit(False))
+            cond = compile_guard(r.expr)
             col = F.when(cond, F.lit(i)) if col is None else col.when(cond, F.lit(i))
         if col is None:
             return F.lit(len(self.routes)) if self.default else F.lit(None)

@@ -18,9 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..fields import Field
+from ..fields import Field, quote
 from ..pipeline import ColumnStage, register
 
 # entry/severity.go:22-63
@@ -121,53 +120,35 @@ class SeverityParser:
         self.parse_from = Field.parse(parse_from)
         self.mapping, self.ranges = build_mapping(preset, mapping)
 
-    def _lookup(self, src: Column) -> Column:
-        # pure function of (mapping, ranges, src): memoized — the
-        # literal probe map alone is ~2 py4j calls per entry, rebuilt
-        # on every pipeline construction otherwise
-        from ..colmemo import memo_column
-
-        return memo_column(
-            (
-                "severity_lookup",
-                tuple(self.mapping.items()),
-                tuple(self.ranges),
-                str(src),
-            ),
-            lambda: self._build_lookup(src),
-        )
-
-    def _build_lookup(self, src: Column) -> Column:
+    def _lookup(self, src: str) -> str:
+        """Spark SQL text of the severity number of the string ``src``
+        (also SQL text); null when unmapped."""
         if not self.mapping and not self.ranges:
-            return F.lit(None).cast(T.IntegerType())
+            return "CAST(NULL AS INT)"
         # float inputs like 404.0 must probe as "404" (severity.go:66-75)
-        as_num = src.try_cast(T.DoubleType())
-        is_whole = as_num.isNotNull() & (as_num == F.floor(as_num))
-        as_int = F.floor(as_num).cast(T.LongType())
-        probe = F.when(is_whole, as_int.cast(T.StringType())).otherwise(F.lower(src))
-        hit = F.lit(None).cast(T.IntegerType())
+        as_num = f"TRY_CAST({src} AS DOUBLE)"
+        is_whole = f"({as_num} IS NOT NULL AND {as_num} = floor({as_num}))"
+        as_int = f"CAST(floor({as_num}) AS BIGINT)"
+        probe = f"CASE WHEN {is_whole} THEN CAST({as_int} AS STRING) ELSE lower({src}) END"
+        hit = "CAST(NULL AS INT)"
         if self.mapping:
-            entries: list[Column] = []
-            for k, v in self.mapping.items():
-                entries.append(F.lit(k))
-                entries.append(F.lit(v))
-            hit = F.try_element_at(F.create_map(*entries), probe)
+            entries = ", ".join(f"{quote(k)}, {v}" for k, v in self.mapping.items())
+            hit = f"try_element_at(map({entries}), {probe})"
         # later-configured ranges win over earlier ones; explicit keys
         # win over ranges (the reference's dict overwrite order makes
         # key/range precedence insertion-ordered — ties are unusual)
-        range_hit = F.lit(None).cast(T.IntegerType())
+        range_hit = "CAST(NULL AS INT)"
         for lo, hi, sev in reversed(self.ranges):
-            range_hit = F.coalesce(
-                range_hit,
-                F.when(is_whole & as_int.between(lo, hi), F.lit(sev)),
-            )
-        return F.coalesce(hit, range_hit)
+            in_range = f"({as_int} >= {lo} AND {as_int} <= {hi})"
+            range_hit = f"coalesce({range_hit}, CASE WHEN ({is_whole} AND {in_range}) THEN {sev} END)"
+        return f"coalesce({hit}, {range_hit})"
 
     def embed_apply(self, df: DataFrame, cond: Column) -> tuple[DataFrame, Column]:
-        src = self.parse_from.get().cast(T.StringType())
+        src_sql = f"CAST({self.parse_from.sql()} AS STRING)"
+        src = F.expr(src_sql)
         err = src.isNull()  # missing parse_from is the only error path
         ok = cond & src.isNotNull()
-        sev = self._lookup(src)
+        sev = F.expr(self._lookup(src_sql))
         df = df.withColumn(
             "severity",
             F.when(ok, F.coalesce(sev, F.lit(0))).otherwise(F.col("severity")),

@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..exprs import compile_bool, compile_template
+from ..exprs import compile_guard, compile_template
 from ..fields import MAP_SS, Field, apply_updates
 from ..pipeline import ColumnStage, Stage, register
 
@@ -37,12 +37,12 @@ class AddStage(ColumnStage):
             for k, v in self.value.items():
                 entries.append(F.lit(str(k)))
                 entries.append(
-                    compile_template(v) if _is_expr_value(v) else F.lit(str(v))
+                    F.expr(compile_template(v)) if _is_expr_value(v) else F.lit(str(v))
                 )
             val = F.when(cond, F.create_map(*entries))
             return apply_updates(df, self.field.set_map(val)), None
         if _is_expr_value(self.value):
-            col = compile_template(self.value)
+            col = F.expr(compile_template(self.value))
         else:
             col = F.lit(self.value)
         guarded = F.when(cond, col)
@@ -191,7 +191,7 @@ class FilterStage(Stage):
         self.seed = seed
 
     def apply(self, df: DataFrame) -> DataFrame:
-        cond = F.coalesce(compile_bool(self.expr), F.lit(False))
+        cond = compile_guard(self.expr)
         if self.drop_ratio >= 1.0:
             return df.filter(~cond)
         drop = cond & (F.rand(self.seed) < F.lit(self.drop_ratio))

@@ -32,7 +32,7 @@ from typing import Any, Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .exprs import compile_bool
+from .exprs import compile_guard
 
 # --------------------------------------------------------------------
 # registry
@@ -127,7 +127,7 @@ class ColumnStage(Stage):
         if self.if_expr is None:
             return F.lit(True)
         # null predicate result counts as false, like expr.AsBool
-        return F.coalesce(compile_bool(self.if_expr), F.lit(False))
+        return compile_guard(self.if_expr)
 
     def transform(self, df: DataFrame, cond: Column) -> tuple[DataFrame, Column | None]:
         """Return (transformed df, error flag column or None).

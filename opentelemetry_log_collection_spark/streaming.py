@@ -252,11 +252,9 @@ def streaming_recombine(
 
     if "attributes" not in entries.columns:
         entries = to_entries(entries)
-    from .exprs import compile_bool  # local: avoid import cycle
+    from .exprs import compile_guard  # local: avoid import cycle
 
-    matched = F.coalesce(
-        compile_bool(is_first_entry or is_last_entry), F.lit(False)
-    ).alias("_match")
+    matched = compile_guard(is_first_entry or is_last_entry).alias("_match")
     keyed = entries.select("conv_id", "turn_idx", "text", matched)
     return keyed.groupBy("conv_id").applyInPandasWithState(
         fn,

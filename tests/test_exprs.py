@@ -9,7 +9,7 @@ from conftest import make_entries
 
 
 def _eval(spark, df, expression):
-    return [r.v for r in df.select(compile_bool(expression).alias("v")).collect()]
+    return [r.v for r in df.select(F.expr(compile_bool(expression)).alias("v")).collect()]
 
 
 def test_comparisons_and_boolean_ops(spark):
@@ -58,7 +58,7 @@ def test_env_and_template(spark):
     got = [
         r.v
         for r in df.select(
-            compile_template('stack=EXPR(env("OTEL_SPARK_TEST_STACK")) role=EXPR(attributes.role)').alias("v")
+            F.expr(compile_template('stack=EXPR(env("OTEL_SPARK_TEST_STACK")) role=EXPR(attributes.role)')).alias("v")
         ).collect()
     ]
     assert got == ["stack=prod role=user"]
@@ -86,3 +86,13 @@ def test_env_refreshes_per_run(spark):
     r2 = stage.apply(df).select(
         F.try_element_at("attributes", F.lit("deploy"))).first()[0]
     assert (r1, r2) == ("blue", "green")
+
+
+def test_env_reread_on_each_compile(spark, monkeypatch):
+    """Compiling the same expression twice reads env() twice: nothing
+    keeps the value from the first compile."""
+    df = make_entries(spark, ["x"])
+    monkeypatch.setenv("GRAFT_ENV_PROBE", "a")
+    assert _eval(spark, df, 'env("GRAFT_ENV_PROBE") == "a"') == [True]
+    monkeypatch.setenv("GRAFT_ENV_PROBE", "b")
+    assert _eval(spark, df, 'env("GRAFT_ENV_PROBE") == "a"') == [False]

@@ -130,12 +130,12 @@ def test_regex_impl_parity(spark):
     pat = r"^k1=(?P<one>\S+)(?: k2=(?P<two>\S+))? (?P<rest>.*)$"
     df = make_entries(spark, texts)
     stage = RegexParserStage(regex=pat)
-    src = stage.parse_from.get().cast("string")
+    src = f"CAST({stage.parse_from.sql()} AS STRING)"
     rows = collected(
         df.select(
             "conv_id", "turn_idx",
-            onepass_map(src, stage.pattern_java, stage.groups).alias("onepass"),
-            pergroup_map(src, stage.pattern_java, stage.groups).alias("pergroup"),
+            F.expr(onepass_map(src, stage.pattern_java, stage.groups)).alias("onepass"),
+            F.expr(pergroup_map(src, stage.pattern_java, stage.groups)).alias("pergroup"),
         ),
         "onepass", "pergroup",
     )
