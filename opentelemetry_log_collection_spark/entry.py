@@ -16,10 +16,9 @@ from __future__ import annotations
 import datetime as _dt
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .fields import MAP_SS
+from .fields import MAP_SS, MAP_SS_SQL, apply_updates, literal
 
 DEFAULT_OBSERVED_TS = "2024-06-01T00:00:00+00:00"
 
@@ -42,26 +41,17 @@ def to_entries(df: DataFrame, observed_ts: str = DEFAULT_OBSERVED_TS) -> DataFra
     """Lift a transcript frame (conv_id, turn_idx, role, text, tool,
     ts) into the canonical entry frame. Pure projection — no shuffle,
     survives any scan pushdown."""
-    obs = _dt.datetime.fromisoformat(observed_ts).replace(tzinfo=None)
-    out = df
+    obs = _dt.datetime.fromisoformat(observed_ts)
+    values = {
+        "attributes": f"CAST(map('role', coalesce(`role`, ''), 'tool', coalesce(`tool`, ''))"
+        f" AS {MAP_SS_SQL})",
+        "resource": f"CAST(map('conv_id', CAST(`conv_id` AS STRING)) AS {MAP_SS_SQL})",
+        "observed_ts": literal(obs),
+        "severity": "0",
+    }
     existing = set(df.columns)
-    for name, dtype in ENTRY_FIELDS:
-        if name in existing:
-            continue
-        if name == "attributes":
-            col = F.create_map(
-                F.lit("role"), F.coalesce(F.col("role"), F.lit("")),
-                F.lit("tool"), F.coalesce(F.col("tool"), F.lit("")),
-            ).cast(MAP_SS)
-        elif name == "resource":
-            col = F.create_map(
-                F.lit("conv_id"), F.col("conv_id").cast(T.StringType())
-            ).cast(MAP_SS)
-        elif name == "observed_ts":
-            col = F.lit(obs).cast(T.TimestampType())
-        elif name == "severity":
-            col = F.lit(0).cast(T.IntegerType())
-        else:
-            col = F.lit(None).cast(dtype)
-        out = out.withColumn(name, col)
-    return out
+    return apply_updates(df, {
+        name: values.get(name, f"CAST(NULL AS {dtype.simpleString()})")
+        for name, dtype in ENTRY_FIELDS
+        if name not in existing
+    })

@@ -1,4 +1,4 @@
-"""Expression-language subset -> Spark Column, compiled at plan time.
+"""Expression-language subset -> Spark SQL text, compiled at plan time.
 
 The reference embeds the antonmedv/expr language for `if` predicates,
 router routes, filter and recombine boundaries, and `EXPR(...)` string
@@ -27,10 +27,7 @@ import os
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from .fields import Field, quote
+from .fields import Field, literal, quote
 
 _TOKEN_RE = re.compile(
     r"""\s*(?:
@@ -105,13 +102,6 @@ class _Val:
     kind: str  # 'str' | 'num' | 'bool' | 'nil' | 'field' | 'list'
     items: list | None = None  # for list literals
     lit: str | None = None  # python value for string literals
-
-
-def _lit(v: str | int | float) -> str:
-    if isinstance(v, str):
-        return quote(v)
-    # a bare 1.5 would parse as DECIMAL(2,1); F.lit(1.5) is a DOUBLE
-    return f"{v!r}D" if isinstance(v, float) else str(v)
 
 
 def _str(sql: str) -> str:
@@ -198,7 +188,7 @@ class _Parser:
                 if not right.items:
                     # what Catalyst folds an empty IN list to
                     return _Val("false", "bool")
-                items = ", ".join(_lit(i) for i in right.items)
+                items = ", ".join(literal(i) for i in right.items)
                 return _Val(f"({left.sql} IN ({items}))", "bool")
         return left
 
@@ -219,7 +209,7 @@ class _Parser:
             s = _unquote(v)
             return _Val(quote(s), "str", lit=s)
         if kind == "num":
-            return _Val(_lit(_number(v)), "num")
+            return _Val(literal(_number(v)), "num")
         if v == "(":
             inner = self.parse_or()
             self.expect(")")
@@ -328,11 +318,10 @@ def compile_bool(expression: str) -> str:
     return _as_bool(_parse(expression))
 
 
-def compile_guard(expression: str) -> Column:
-    """``compile_bool`` as a Column with a null result counted as
-    false — the form `if` guards, routes, filters and recombine
-    boundaries apply."""
-    return F.expr(f"coalesce({compile_bool(expression)}, false)")
+def compile_guard(expression: str) -> str:
+    """``compile_bool`` with a null result counted as false — the form
+    `if` guards, routes, filters and recombine boundaries apply."""
+    return f"coalesce({compile_bool(expression)}, false)"
 
 
 def _find_expr_spans(template: str) -> list[tuple[int, int, str]]:

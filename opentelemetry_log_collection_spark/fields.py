@@ -3,14 +3,16 @@
 Reimplements the semantics of ``entry/field.go:117-188`` (dot + bracket
 parsing) and the per-root Get/Set/Delete behavior of
 ``entry/body_field.go:68-162`` / ``entry/attribute_field.go:67-160`` /
-``entry/resource_field.go:67-160`` as *compiled Spark Column
-accessors* — parsing happens once at plan time, never per row.
+``entry/resource_field.go:67-160`` as *Spark SQL text* built in plain
+Python — parsing happens once at plan time, never per row, and a read
+or an update of any size costs one ``F.expr`` to apply.
 
 Canonical entry representation (SURVEY.md section 1.4): the dynamic Go
 ``Body interface{}`` splits into a raw string column ``text`` (the body
 while it is still an unparsed line) and a ``body: map<string,string>``
 column (the body once structured; nested values JSON-encoded).
-``attributes`` / ``resource`` are ``map<string,string>``.
+``attributes`` / ``resource`` are ``map<string,string>``; this module
+holds the one definition of that type and of its empty value.
 
 Key reference semantics reproduced:
   - ``Set`` of a map value **merges** into the target subtree instead
@@ -26,6 +28,8 @@ Key reference semantics reproduced:
 
 from __future__ import annotations
 
+import datetime as _dt
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -33,6 +37,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MAP_SS = T.MapType(T.StringType(), T.StringType())
+#: Spark SQL spelling of MAP_SS, and its empty value
+MAP_SS_SQL = MAP_SS.simpleString()
+EMPTY_MAP = f"CAST(map() AS {MAP_SS_SQL})"
 
 #: roots addressable by field paths; bare paths default to body
 #: (docs/types/field.md)
@@ -66,17 +73,44 @@ def ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _empty_map() -> Column:
-    return F.create_map().cast(MAP_SS)
+def literal(v) -> str:
+    """Spark SQL literal typed the way ``F.lit(v)`` types it: a bare
+    ``1.5`` would parse as DECIMAL(2,1), so doubles carry ``D``; NaN
+    and infinities have no literal spelling, so they are cast from
+    text; a datetime carries its UTC offset (a naive one is local time
+    of this process, as ``F.lit`` reads it), so the instant does not
+    depend on the session zone. Other types raise ``TypeError``."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, str):
+        return quote(v)
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        if math.isfinite(v):
+            return f"{v!r}D"
+        spelled = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+        return f"CAST('{spelled}' AS DOUBLE)"
+    if isinstance(v, _dt.datetime):
+        aware = v if v.tzinfo is not None else v.astimezone()
+        return f"TIMESTAMP '{aware.isoformat(sep=' ')}'"
+    if isinstance(v, _dt.date):
+        return f"DATE '{v.isoformat()}'"
+    if isinstance(v, list):
+        return f"array({', '.join(literal(x) for x in v)})"
+    raise TypeError(f"no Spark SQL literal for {type(v).__name__}: {v!r}")
 
 
 def _last_win_active() -> bool:
     """True when the active session already runs with
     mapKeyDedupPolicy=LAST_WIN. READ-ONLY: sessions the engine creates
     get the policy from ``session.get_spark``; a caller-provided
-    session is never reconfigured from inside Column construction (the
-    conf is read at execution time, so flipping it here would silently
-    change duplicate-key semantics of the caller's other queries)."""
+    session is never reconfigured from inside expression construction
+    (the conf is read at execution time, so flipping it here would
+    silently change duplicate-key semantics of the caller's other
+    queries)."""
     from pyspark.sql import SparkSession
 
     s = SparkSession.getActiveSession()
@@ -86,9 +120,9 @@ def _last_win_active() -> bool:
     )
 
 
-def merge_maps(base: Column, new: Column) -> Column:
+def merge_maps(base: str, new: str) -> str:
     """Merge-overwrite: keys of ``new`` win (entry/body_field.go's
-    Merge).
+    Merge). Arguments and result are Spark SQL text.
 
     Fast path: plain ``map_concat`` under mapKeyDedupPolicy=LAST_WIN —
     later keys win natively, whole-stage-codegen friendly, one pass
@@ -97,21 +131,21 @@ def merge_maps(base: Column, new: Column) -> Column:
     when the active session ALREADY has the policy set (get_spark sets
     it on engine-created sessions). Default path for any other
     session: filter+concat, which never forms duplicate keys and is
-    correct under any policy.
+    correct under any policy. The lambda variables are ``_k``/``_v``
+    because ``new`` lands inside the lambda body, where a plain ``k``
+    would capture a column of that name.
 
-    CONTRACT: the branch is chosen at Column-CONSTRUCTION time but
-    map_concat enforces the policy at EXECUTION time, so a plan built
-    while a LAST_WIN session is active is only valid on sessions that
-    also run LAST_WIN (any get_spark session qualifies). Build plans
-    under the session that will execute them — the normal Spark usage
-    pattern; cross-session plan transplanting is not supported."""
-    new_nn = F.coalesce(new, _empty_map())
+    CONTRACT: the branch is chosen at CONSTRUCTION time but map_concat
+    enforces the policy at EXECUTION time, so a plan built while a
+    LAST_WIN session is active is only valid on sessions that also run
+    LAST_WIN (any get_spark session qualifies). Build plans under the
+    session that will execute them — the normal Spark usage pattern;
+    cross-session plan transplanting is not supported."""
+    new_nn = f"coalesce({new}, {EMPTY_MAP})"
     if _last_win_active():
-        return F.map_concat(base, new_nn)
-    kept = F.map_filter(
-        base, lambda k, _v: ~F.array_contains(F.map_keys(new_nn), k)
-    )
-    return F.map_concat(kept, new_nn)
+        return f"map_concat({base}, {new_nn})"
+    kept = f"map_filter({base}, (_k, _v) -> NOT array_contains(map_keys({new_nn}), _k))"
+    return f"map_concat({kept}, {new_nn})"
 
 
 class FieldParseError(ValueError):
@@ -212,50 +246,36 @@ class Field:
 
     # ---- SET ------------------------------------------------------
     #
-    # Set/Delete return *column-update dicts* ({column_name: expression
-    # over the CURRENT frame}) rather than new DataFrames, so operators
-    # can compose several mutations (e.g. move = set + delete) into one
-    # select with no cross-frame references. ``cols`` is an optional
-    # view of already-pending updates to build on top of.
+    # Set/Delete return *column-update dicts* ({column_name: Spark SQL
+    # text over the CURRENT frame}) rather than new DataFrames, so
+    # operators can compose several mutations (e.g. move = set +
+    # delete) into one projection with no cross-frame references.
+    # ``cols`` is an optional view of already-pending updates to build
+    # on top of; a pending update is inlined in place of its column.
+    # ``value`` arguments are Spark SQL text too.
 
-    def _base(self, cols: dict[str, Column] | None, name: str) -> Column:
+    @staticmethod
+    def _base(cols: dict[str, str] | None, name: str) -> str:
         if cols and name in cols:
-            return cols[name]
-        return F.col(name)
-
-    def get_from(self, cols: dict[str, Column] | None) -> Column:
-        """Like get(), but honoring pending updates in ``cols``."""
-        if cols is None:
-            return self.get()
-        if self.root in TOP_LEVEL and not self.keys:
-            return self._base(cols, TOP_LEVEL[self.root])
-        m = self._base(cols, self.root)
-        if self.root == "body" and not self.keys:
-            return F.when(m.isNotNull(), F.to_json(m)).otherwise(
-                self._base(cols, "text")
-            )
-        if not self.keys:
-            return F.to_json(m)
-        head = F.try_element_at(m, F.lit(self.keys[0]))
-        if len(self.keys) == 1:
-            return head
-        return F.get_json_object(head, "$." + ".".join(self.keys[1:]))
+            return f"({cols[name]})"
+        return ident(name)
 
     def set_scalar(
-        self, value: Column, cols: dict[str, Column] | None = None
-    ) -> dict[str, Column]:
+        self, value: str, cols: dict[str, str] | None = None
+    ) -> dict[str, str]:
         """Updates setting a scalar (string) value at this field. A
         null ``value`` is a no-op (keeps the old value) — stages use
         that to express `if`-predicate pass-through."""
-        v = value.cast(T.StringType())
+        v = f"CAST({value} AS STRING)"
         if self.root in TOP_LEVEL and not self.keys:
             name = TOP_LEVEL[self.root]
-            return {name: F.coalesce(value, self._base(cols, name))}
+            return {name: f"coalesce({value}, {self._base(cols, name)})"}
         if self.root == "body" and not self.keys:
             # whole-body replace by a scalar: body reverts to raw string
             return {
-                "text": F.coalesce(v, self._base(cols, "text")),
-                "body": F.when(v.isNull(), self._base(cols, "body")).cast(MAP_SS),
+                "text": f"coalesce({v}, {self._base(cols, 'text')})",
+                "body": f"CAST(CASE WHEN {v} IS NULL THEN {self._base(cols, 'body')} END"
+                f" AS {MAP_SS_SQL})",
             }
         if self.root in ("attributes", "resource") and not self.keys:
             raise FieldParseError(
@@ -265,104 +285,86 @@ class Field:
         return self._set_in_map(v, cols)
 
     def set_map(
-        self, value: Column, cols: dict[str, Column] | None = None
-    ) -> dict[str, Column]:
+        self, value: str, cols: dict[str, str] | None = None
+    ) -> dict[str, str]:
         """Merge a map<string,string> value at this field (the
         parse_to path). Reference merge: entry/body_field.go:88-132.
         Null value => no-op."""
         if self.root not in MAP_ROOTS:
             raise FieldParseError(f"cannot set map at {self}")
-        tgt = self._base(cols, self.root)
-        base = F.coalesce(tgt, _empty_map())
-        if not self.keys:
-            merged = F.when(value.isNotNull(), merge_maps(base, value)).otherwise(tgt)
-            out = {self.root: merged}
-        elif len(self.keys) == 1:
-            k = self.keys[0]
-            # nested map is JSON-encoded at map key k; merge key-wise
-            existing = F.coalesce(
-                F.from_json(F.try_element_at(base, F.lit(k)), MAP_SS), _empty_map()
-            )
-            merged_nested = F.to_json(merge_maps(existing, value))
-            merged = F.when(
-                value.isNotNull(),
-                merge_maps(base, F.create_map(F.lit(k), merged_nested)),
-            ).otherwise(tgt)
-            out = {self.root: merged}
-        else:
+        if len(self.keys) > 1:
             raise FieldParseError(f"map set deeper than one level not supported: {self}")
+        tgt = self._base(cols, self.root)
+        base = f"coalesce({tgt}, {EMPTY_MAP})"
+        if not self.keys:
+            merged = merge_maps(base, value)
+        else:
+            k = quote(self.keys[0])
+            # nested map is JSON-encoded at map key k; merge key-wise
+            existing = _nested(base, k)
+            merged = merge_maps(base, f"map({k}, to_json({merge_maps(existing, value)}))")
         # note: the raw `text` column is deliberately left intact when
         # the body becomes structured — get() prefers the map, and the
         # north rule's per-turn text equality audits the raw column
-        return out
+        return {self.root: f"CASE WHEN ({value}) IS NOT NULL THEN {merged} ELSE {tgt} END"}
 
-    def _set_in_map(
-        self, v: Column, cols: dict[str, Column] | None
-    ) -> dict[str, Column]:
+    def _set_in_map(self, v: str, cols: dict[str, str] | None) -> dict[str, str]:
         tgt = self._base(cols, self.root)
-        base = F.coalesce(tgt, _empty_map())
+        base = f"coalesce({tgt}, {EMPTY_MAP})"
+        k = quote(self.keys[0])
         if len(self.keys) == 1:
-            new = merge_maps(base, F.create_map(F.lit(self.keys[0]), v))
-            return {self.root: F.when(v.isNotNull(), new).otherwise(tgt)}
-        # deeper: maintain the JSON-encoded nested object at keys[0]
-        k = self.keys[0]
-        nested = F.coalesce(
-            F.from_json(F.try_element_at(base, F.lit(k)), MAP_SS), _empty_map()
-        )
-        if len(self.keys) == 2:
-            nested2 = merge_maps(nested, F.create_map(F.lit(self.keys[1]), v))
-            new = merge_maps(base, F.create_map(F.lit(k), F.to_json(nested2)))
-            return {self.root: F.when(v.isNotNull(), new).otherwise(tgt)}
-        raise FieldParseError(f"set deeper than two levels not supported: {self}")
+            new = merge_maps(base, f"map({k}, {v})")
+        elif len(self.keys) == 2:
+            # deeper: maintain the JSON-encoded nested object at keys[0]
+            nested = merge_maps(_nested(base, k), f"map({quote(self.keys[1])}, {v})")
+            new = merge_maps(base, f"map({k}, to_json({nested}))")
+        else:
+            raise FieldParseError(f"set deeper than two levels not supported: {self}")
+        return {self.root: f"CASE WHEN {v} IS NOT NULL THEN {new} ELSE {tgt} END"}
 
     # ---- DELETE ---------------------------------------------------
 
     def delete(
         self,
-        cols: dict[str, Column] | None = None,
-        when: Column | None = None,
-    ) -> dict[str, Column]:
-        """Updates deleting this field, optionally gated on ``when``.
-        Whole-root deletion supported for all three roots
-        (rootable_field.go:29-72)."""
-        cond = when if when is not None else F.lit(True)
+        cols: dict[str, str] | None = None,
+        when: str = "true",
+    ) -> dict[str, str]:
+        """Updates deleting this field, gated on the Spark SQL
+        condition ``when``. Whole-root deletion supported for all three
+        roots (rootable_field.go:29-72)."""
 
-        def gate(name: str, new: Column) -> Column:
-            return F.when(cond, new).otherwise(self._base(cols, name))
+        def gate(name: str, new: str) -> str:
+            return f"CASE WHEN {when} THEN {new} ELSE {self._base(cols, name)} END"
 
         if self.root in TOP_LEVEL and not self.keys:
             name = TOP_LEVEL[self.root]
-            return {name: gate(name, F.lit(None))}
+            return {name: gate(name, "NULL")}
         if not self.keys:
-            out = {self.root: gate(self.root, F.lit(None).cast(MAP_SS))}
+            out = {self.root: gate(self.root, f"CAST(NULL AS {MAP_SS_SQL})")}
             if self.root == "body":
-                out["text"] = gate("text", F.lit(None).cast(T.StringType()))
+                out["text"] = gate("text", "CAST(NULL AS STRING)")
             return out
         m = self._base(cols, self.root)
+        k0 = quote(self.keys[0])
         if len(self.keys) == 1:
-            k = self.keys[0]
-            return {
-                self.root: gate(
-                    self.root, F.map_filter(m, lambda key, _v: key != F.lit(k))
-                )
-            }
+            return {self.root: gate(self.root, f"map_filter({m}, (k, v) -> k != {k0})")}
         if len(self.keys) == 2:
-            k0, k1 = self.keys
-            nested = F.from_json(F.try_element_at(m, F.lit(k0)), MAP_SS)
-            pruned = F.to_json(F.map_filter(nested, lambda key, _v: key != F.lit(k1)))
-            new = F.when(
-                nested.isNotNull(),
-                F.map_concat(
-                    F.map_filter(m, lambda key, _v: key != F.lit(k0)),
-                    F.create_map(F.lit(k0), pruned),
-                ),
-            ).otherwise(m)
+            nested = f"from_json(try_element_at({m}, {k0}), {quote(MAP_SS_SQL)})"
+            pruned = f"to_json(map_filter({nested}, (k, v) -> k != {quote(self.keys[1])}))"
+            spliced = f"map_concat(map_filter({m}, (k, v) -> k != {k0}), map({k0}, {pruned}))"
+            new = f"CASE WHEN {nested} IS NOT NULL THEN {spliced} ELSE {m} END"
             return {self.root: gate(self.root, new)}
         raise FieldParseError(f"delete deeper than two levels not supported: {self}")
 
 
-def apply_updates(df: DataFrame, updates: dict[str, Column]) -> DataFrame:
-    """Apply a column-update dict in one projection."""
+def _nested(m: str, k: str) -> str:
+    """The JSON-encoded map stored at key ``k`` (SQL text) of map
+    ``m``, empty when absent."""
+    return f"coalesce(from_json(try_element_at({m}, {k}), {quote(MAP_SS_SQL)}), {EMPTY_MAP})"
+
+
+def apply_updates(df: DataFrame, updates: dict[str, str]) -> DataFrame:
+    """Apply a column-update dict of Spark SQL texts in one projection."""
     if not updates:
         return df
-    return df.withColumns(updates)
+    return df.withColumns({name: F.expr(sql) for name, sql in updates.items()})

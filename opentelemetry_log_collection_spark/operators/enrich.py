@@ -14,11 +14,10 @@ engine's standard merge-overwrite semantics.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..fields import Field, apply_updates
+from ..fields import Field, apply_updates, ident, quote
 from ..pipeline import Stage, register
 
 
@@ -46,22 +45,19 @@ class LookupEnrichStage(Stage):
 
     def apply(self, df: DataFrame) -> DataFrame:
         dim_cols = [c for c in self.lookup.columns if c != self.key_column]
-        dim = self.lookup.select(
-            F.col(self.key_column).cast(T.StringType()).alias("_enrich_key"),
-            *[F.col(c).cast(T.StringType()).alias(c) for c in dim_cols],
+        dim = self.lookup.selectExpr(
+            f"CAST({ident(self.key_column)} AS STRING) AS _enrich_key",
+            *[f"CAST({ident(c)} AS STRING) AS {ident(c)}" for c in dim_cols],
         )
-        key = self.on.get().cast(T.StringType())
-        joined = df.withColumn("_enrich_key", key).join(
+        key = f"CAST({self.on.sql()} AS STRING)"
+        joined = apply_updates(df, {"_enrich_key": key}).join(
             F.broadcast(dim), on="_enrich_key", how="left"
         )
-        entries: list[Column] = []
-        for c in dim_cols:
-            entries.append(F.lit(self.prefix + c))
-            entries.append(F.col(c))
+        entries = ", ".join(f"{quote(self.prefix + c)}, {ident(c)}" for c in dim_cols)
         # only stamp when the probe hit (left-join miss -> no-op merge)
-        hit = F.lit(False)
+        hit = "false"
         for c in dim_cols:
-            hit = hit | F.col(c).isNotNull()
-        val = F.when(hit, F.map_filter(F.create_map(*entries), lambda _k, v: v.isNotNull()))
+            hit = f"({hit} OR {ident(c)} IS NOT NULL)"
+        val = f"CASE WHEN {hit} THEN map_filter(map({entries}), (k, v) -> v IS NOT NULL) END"
         out = apply_updates(joined, self.target.set_map(val))
         return out.drop("_enrich_key", *dim_cols)

@@ -25,7 +25,7 @@ from pyspark.sql import types as T
 
 from ..entry import ENTRY_FIELDS, to_entries
 from ..exprs import compile_template
-from ..fields import Field, apply_updates
+from ..fields import Field, apply_updates, quote
 from ..pipeline import Stage, register
 
 
@@ -35,12 +35,10 @@ def stamp(df: DataFrame, attributes: dict | None, resource: dict | None) -> Data
     for root, mapping in (("attributes", attributes), ("resource", resource)):
         if not mapping:
             continue
-        entries = []
-        for k, v in mapping.items():
-            entries.append(F.lit(str(k)))
-            entries.append(F.expr(compile_template(str(v))))
-        updates = Field.parse(root).set_map(F.create_map(*entries))
-        df = apply_updates(df, updates)
+        entries = ", ".join(
+            f"{quote(str(k))}, {compile_template(str(v))}" for k, v in mapping.items()
+        )
+        df = apply_updates(df, Field.parse(root).set_map(f"map({entries})"))
     return df
 
 
@@ -583,16 +581,11 @@ class FileInputStage(Stage):
         )
         file_attrs = []
         if self.include_file_name:
-            file_attrs += [
-                F.lit("log.file.name"),
-                F.element_at(F.split(F.col("conv_id"), "/"), -1),
-            ]
+            file_attrs.append("'log.file.name', element_at(split(`conv_id`, '/', -1), -1)")
         if self.include_file_path:
-            file_attrs += [F.lit("log.file.path"), F.col("conv_id")]
+            file_attrs.append("'log.file.path', `conv_id`")
         if file_attrs:
-            updates = Field.parse("attributes").set_map(
-                F.create_map(*file_attrs)
-            )
+            updates = Field.parse("attributes").set_map(f"map({', '.join(file_attrs)})")
             df = apply_updates(df, updates)
         return stamp(df, self.attributes, self.resource)
 

@@ -13,9 +13,11 @@ ran (parser.go:171-184).
 
 Execution strategy per parser (the Spark-first part). Every parser
 builds JVM-side Catalyst expressions (whole-stage codegen, no Python
-worker); the regex extractors and the uri/syslog attribute maps are
-rendered as Spark SQL text and applied with one ``F.expr`` each. The
-one exception is CSV's per-row header path:
+worker), rendered as Spark SQL text in plain Python: the extraction,
+the attribute-map refinement, the merge into ``parse_to``, the
+embedded sub-parsers and the error flag are each applied with one
+``F.expr`` per projected column. The one Column built otherwise is
+CSV's per-row header path:
   - regex:     one ``regexp_replace`` execution per row (onepass_map)
                for fully ^-anchored patterns, else ``rlike`` + one
                ``regexp_extract`` per named group (pergroup_map). The
@@ -26,16 +28,17 @@ one exception is CSV's per-row header path:
   - csv:       builtin ``from_csv`` for a static header (codegen);
                pandas UDF when the header comes from an attribute
                per row (csv.go:106-121) or strict field-count checking
-               is requested.
+               is requested — the UDF Column enters through the same
+               ``_parsed_raw`` projection as every other parse.
   - key_value: builtin expression pipeline: split on ``pair_delimiter``,
                or the quote-aware whitespace tokenizer as one
                ``regexp_extract_all`` (keyvalue.go:130-139).
-  - uri:       one RFC 3986 split regex (onepass_map), then column
+  - uri:       one RFC 3986 split regex (onepass_map), then string
                algebra for the authority parts and the multi-valued
                query JSON (uri.go:129-163).
   - syslog:    one-pass RFC3164/RFC5424 extraction (onepass_map), then
                priority arithmetic and the fixed priority->severity
-               table as column algebra (syslog.go:225-272).
+               table (syslog.go:225-272).
 
 The reference's per-input-string regex match cache
 (operator/parser/regex/cache.go:25-209) is deliberately absent:
@@ -50,9 +53,17 @@ import re as _re
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..fields import MAP_SS, Field, apply_updates, ident, quote
+from ..fields import (
+    EMPTY_MAP,
+    MAP_SS,
+    MAP_SS_SQL,
+    Field,
+    apply_updates,
+    ident,
+    literal,
+    quote,
+)
 from ..pipeline import ColumnStage, register
 from .severity import SeverityParser
 from .time_parser import TimeParser
@@ -64,9 +75,6 @@ from .trace_scope import ScopeNameParser, TraceParser
 # --------------------------------------------------------------------
 
 _SEP = "\x01"
-#: Spark SQL spelling of MAP_SS, and its empty value
-_MAP_SS = MAP_SS.simpleString()
-_EMPTY = f"CAST(map() AS {_MAP_SS})"
 
 
 def fully_anchored(regex: str) -> bool:
@@ -132,7 +140,7 @@ def onepass_map(src: str, pattern_java: str, groups: dict[str, int]) -> str:
     # path, where a non-match correctly nulls out.
     return (
         f"CASE WHEN startswith({src}, {mark}) THEN {slow}"
-        f" WHEN NOT startswith({blob}, {mark}) THEN CAST(NULL AS {_MAP_SS})"
+        f" WHEN NOT startswith({blob}, {mark}) THEN CAST(NULL AS {MAP_SS_SQL})"
         f" WHEN size({parts}) = {len(groups)} THEN map_from_arrays(array({names}), {parts})"
         f" ELSE {slow} END"
     )
@@ -156,7 +164,7 @@ def _opt(k: str, v: str, cond: str) -> str:
     """Conditional singleton map: map_concat of these stays inside
     whole-stage codegen (higher-order filter / map_from_entries would
     fall back to interpreted eval — measured 2-3x slower at 5M rows)."""
-    return f"CASE WHEN {cond} THEN map({quote(k)}, CAST({v} AS STRING)) ELSE {_EMPTY} END"
+    return f"CASE WHEN {cond} THEN map({quote(k)}, CAST({v} AS STRING)) ELSE {EMPTY_MAP} END"
 
 
 def _get(raw: str, k: str) -> str:
@@ -195,10 +203,15 @@ class ParserStage(ColumnStage):
         if scope_name:
             self.subparsers.append(ScopeNameParser(**scope_name))
 
-    def parse(self, src: str) -> Column:
-        """Return map<string,string>, null when the parse fails;
-        ``src`` is the Spark SQL text of the string to parse."""
+    def parse(self, src: str) -> str:
+        """Spark SQL text of the map<string,string> parse of ``src``
+        (also SQL text), null when the parse fails."""
         raise NotImplementedError
+
+    def parsed_raw(self, src: str, guard: str) -> Column:
+        """The ``_parsed_raw`` column: the parse of ``src`` on rows
+        where the SQL text ``guard`` holds, null elsewhere."""
+        return F.expr(f"CASE WHEN {guard} THEN {self.parse(src)} END")
 
     def refine(self, raw: str) -> str:
         """Second-projection hook: turn the raw extraction map (already
@@ -209,41 +222,35 @@ class ParserStage(ColumnStage):
         evaluated once per row, not once per output key."""
         return raw
 
-    def transform(self, df: DataFrame, cond: Column):
-        src_sql = f"CAST({self.parse_from.sql()} AS STRING)"
-        src = F.expr(src_sql)
-        parsed = self.parse(src_sql)
+    def transform(self, df: DataFrame, cond: str):
+        src = f"CAST({self.parse_from.sql()} AS STRING)"
         # materialize the parse result in its own projection first:
         # CSV's header_attribute/strict path is a pandas UDF, which
         # cannot be referenced inside the higher-order-function
         # lambdas the merge uses
         # (UNSUPPORTED_FEATURE.LAMBDA_FUNCTION_WITH_PYTHON_UDF)
-        df = df.withColumn("_parsed_raw", F.when(cond & src.isNotNull(), parsed))
-        df = df.withColumn(
-            "_parsed", F.expr(self.refine(ident("_parsed_raw")))
-        ).drop("_parsed_raw")
-        err = src.isNull() | F.col("_parsed").isNull()
-        df = apply_updates(df, self.parse_to.set_map(F.col("_parsed")))
+        guard = f"({cond} AND {src} IS NOT NULL)"
+        df = df.withColumn("_parsed_raw", self.parsed_raw(src, guard))
+        df = apply_updates(df, {"_parsed": self.refine(ident("_parsed_raw"))}).drop("_parsed_raw")
+        err = f"({src} IS NULL OR `_parsed` IS NULL)"
+        df = apply_updates(df, self.parse_to.set_map("`_parsed`"))
         for sub in self.subparsers:
             df, sub_err = sub.embed_apply(df, cond)
-            if sub_err is not None:
-                err = err | F.coalesce(sub_err, F.lit(False))
+            err = f"({err} OR coalesce({sub_err}, false))"
         # per-operator postprocess (ProcessWithCallback's callback) runs
         # after all sub-parsers, gated on main-parse success, while
         # _parsed is still in scope
-        df, err = self.postprocess(
-            df, cond & F.col("_parsed").isNotNull(), err
-        )
+        df = self.postprocess(df, f"({cond} AND `_parsed` IS NOT NULL)")
         # errors checked only after all sub-parsers ran (parser.go:171-184);
         # the drop filter runs here while _parsed is still in scope
         if self.on_error == "drop":
-            df = df.filter(~(cond & F.coalesce(err, F.lit(False))))
+            df = df.filter(f"NOT ({cond} AND coalesce({err}, false))")
         return df.drop("_parsed"), None
 
-    def postprocess(self, df: DataFrame, ok: Column, err: Column):
+    def postprocess(self, df: DataFrame, ok: str) -> DataFrame:
         """Hook for operators with a postprocess callback (syslog).
-        ``ok`` = stage cond AND the main parse succeeded."""
-        return df, err
+        ``ok`` = SQL text of stage cond AND the main parse succeeded."""
+        return df
 
 
 # --------------------------------------------------------------------
@@ -279,8 +286,8 @@ class RegexParserStage(ParserStage):
         # else regexp_replace rewrites EVERY occurrence
         self.extract = onepass_map if fully_anchored(regex) else pergroup_map
 
-    def parse(self, src: str) -> Column:
-        return F.expr(self.extract(src, self.pattern_java, self.groups))
+    def parse(self, src: str) -> str:
+        return self.extract(src, self.pattern_java, self.groups)
 
 
 # --------------------------------------------------------------------
@@ -298,8 +305,8 @@ class JsonParserStage(ParserStage):
     cores against an Arrow-batched Python parser, whose workers
     oversubscribe the box."""
 
-    def parse(self, src: str) -> Column:
-        return F.from_json(F.expr(src), MAP_SS)
+    def parse(self, src: str) -> str:
+        return f"from_json({src}, {quote(MAP_SS_SQL)})"
 
 
 # --------------------------------------------------------------------
@@ -329,27 +336,26 @@ class CsvParserStage(ParserStage):
         self.lazy_quotes = lazy_quotes
         self.strict = strict
 
-    def parse(self, src: str) -> Column:
-        line = F.expr(src)
-        if self.header is not None and not self.strict:
-            # fast path: whole-stage-codegen CSV decode
-            schema = ", ".join(f"`{h}` string" for h in self.header)
-            struct = F.from_csv(line, schema, {"sep": self.delimiter})
-            ok = struct.isNotNull()
-            for h in self.header:
-                ok = ok & struct.getField(h).isNotNull()
-            entries: list[Column] = []
-            for h in self.header:
-                entries.append(F.lit(h))
-                entries.append(struct.getField(h))
-            return F.when(ok, F.create_map(*entries))
-        delim = self.delimiter
-        static_header = self.header
+    def parse(self, src: str) -> str:
+        # static header: whole-stage-codegen CSV decode
+        schema = ", ".join(f"{ident(h)} string" for h in self.header)
+        struct = f"from_csv({src}, {quote(schema)}, map('sep', {quote(self.delimiter)}))"
+        # explicit nesting: the SQL parser builds a long AND chain as a
+        # balanced tree, this keeps the left-deep one
+        ok = f"{struct} IS NOT NULL"
+        for h in self.header:
+            ok = f"({ok} AND {struct}.{ident(h)} IS NOT NULL)"
+        entries = ", ".join(f"{quote(h)}, {struct}.{ident(h)}" for h in self.header)
+        return f"CASE WHEN {ok} THEN map({entries}) END"
 
+    def parsed_raw(self, src: str, guard: str) -> Column:
+        if self.header is not None and not self.strict:
+            return super().parsed_raw(src, guard)
+        delim = self.delimiter
         if self.header_attribute is not None:
-            hdr_col = F.try_element_at(F.col("attributes"), F.lit(self.header_attribute))
+            hdr = f"try_element_at(`attributes`, {quote(self.header_attribute)})"
         else:
-            hdr_col = F.lit(delim.join(static_header))
+            hdr = quote(delim.join(self.header))
 
         @F.pandas_udf(MAP_SS)
         def parse_csv(s: pd.Series, hdr: pd.Series) -> pd.Series:
@@ -388,7 +394,7 @@ class CsvParserStage(ParserStage):
                 [one(x, h) for x, h in zip(s, hdr)], index=s.index, dtype=object
             )
 
-        return parse_csv(line, hdr_col)
+        return F.when(F.expr(guard), parse_csv(F.expr(src), F.expr(hdr)))
 
 
 # --------------------------------------------------------------------
@@ -415,61 +421,37 @@ class KeyValueParserStage(ParserStage):
         self.delimiter = delimiter
         self.pair_delimiter = pair_delimiter
 
-    def _trim(self, c: Column) -> Column:
+    @staticmethod
+    def _trim(c: str) -> str:
         # strings.TrimSpace(strings.Trim(x, "\"'")) — strip ALL
         # leading/trailing quote chars FIRST, then whitespace
         # (keyvalue.go:122-123)
-        return F.trim(
-            F.regexp_replace(F.regexp_replace(c, '^["\']+', ""), '["\']+$', "")
-        )
+        lead, trail = quote("^[\"']+"), quote("[\"']+$")
+        return f"trim(regexp_replace(regexp_replace({c}, {lead}, ''), {trail}, ''))"
 
-    def _bad_pair(self, p: Column) -> Column:
-        # strings.Split must yield exactly 2 items (keyvalue.go:114-117):
-        # zero delimiters AND two-or-more delimiters (a=b=c, or a
-        # quoted key/value containing the delimiter) are both malformed
-        d = self.delimiter
-        n = (F.length(p) - F.length(F.replace(p, F.lit(d), F.lit("")))) / F.lit(
-            len(d)
-        )
-        return n != F.lit(1)
-
-    def _kv_entries(self, pairs: Column) -> Column:
-        delim = self.delimiter
-        return F.transform(
-            pairs,
-            lambda p: F.struct(
-                self._trim(F.substring_index(p, delim, 1)).alias("key"),
-                self._trim(
-                    F.substring(
-                        p,
-                        F.length(F.substring_index(p, delim, 1))
-                        + F.lit(len(delim) + 1),
-                        F.length(p),
-                    )
-                ).alias("value"),
-            ),
-        )
-
-    def parse(self, src: str) -> Column:
-        line = F.expr(src)
+    def parse(self, src: str) -> str:
+        d = quote(self.delimiter)
         # empty input is a parse error (keyvalue.go:105-107); a
         # non-empty input with zero extractable pairs parses to an
         # empty map with no error, like the Go loop over zero pairs
-        nonempty = line.isNotNull() & (line != F.lit(""))
+        nonempty = f"({src} IS NOT NULL AND {src} != '')"
         if self.pair_delimiter is not None:
             # split pairs, Split-2 each
-            pairs = F.split(line, _re.escape(self.pair_delimiter))
+            pairs = f"split({src}, {quote(_re.escape(self.pair_delimiter))}, -1)"
         else:
             # quote-aware whitespace pair split (keyvalue.go:130-139):
             # tokenize with the quote-group regex, then exact-2 split
             # per pair
-            pairs = F.regexp_extract_all(
-                line, F.lit(_QUOTE_AWARE_PAIR.pattern), 0
-            )
-        bad = F.exists(pairs, self._bad_pair)
-        return F.when(
-            nonempty & ~bad, F.map_from_entries(self._kv_entries(pairs))
-        )
+            pairs = f"regexp_extract_all({src}, {quote(_QUOTE_AWARE_PAIR.pattern)}, 0)"
+        # strings.Split must yield exactly 2 items (keyvalue.go:114-117):
+        # zero delimiters AND two-or-more delimiters (a=b=c, or a
+        # quoted key/value containing the delimiter) are both malformed
+        n = f"((length(p) - length(replace(p, {d}, ''))) / {len(self.delimiter)})"
+        bad = f"exists({pairs}, p -> {n} != 1)"
+        key = f"substring_index(p, {d}, 1)"
+        value = f"substring(p, (length({key}) + {len(self.delimiter) + 1}), length(p))"
+        entries = f"transform({pairs}, p -> struct({self._trim(key)} AS key, {self._trim(value)} AS value))"
+        return f"CASE WHEN ({nonempty} AND NOT {bad}) THEN map_from_entries({entries}) END"
 
 
 # --------------------------------------------------------------------
@@ -576,11 +558,11 @@ class UriParserStage(ParserStage):
             " END"
         )
 
-    def parse(self, src: str) -> Column:
+    def parse(self, src: str) -> str:
         # bare query string (uri.go:79-97): '?...' carries ONLY the
         # query (even when empty); everything else takes the
         # single-regex RFC 3986 split
-        return F.expr(
+        return (
             f"CASE WHEN startswith({src}, '?') THEN map('bare_query', substr({src}, 2))"
             f" ELSE {onepass_map(src, _URI_SPLIT, _URI_GROUPS)} END"
         )
@@ -668,12 +650,12 @@ class SyslogParserStage(ParserStage):
                 tp = TimeParser("attributes.timestamp", layout_type="native")
             self.subparsers.append(tp)
 
-    def parse(self, src: str) -> Column:
+    def parse(self, src: str) -> str:
         if self.protocol == "rfc5424":
             rx, groups = _RFC5424, _RFC5424_GROUPS
         else:
             rx, groups = _RFC3164, _RFC3164_GROUPS
-        return F.expr(onepass_map(src, strip_group_names(rx.pattern), groups))
+        return onepass_map(src, strip_group_names(rx.pattern), groups)
 
     def refine(self, raw: str) -> str:
         """Raw extraction map (one column read per key — the
@@ -715,47 +697,23 @@ class SyslogParserStage(ParserStage):
             parts.append(unless("proc_id", g("proc_id"), ""))
         return f"CASE WHEN {raw} IS NOT NULL THEN map_concat({', '.join(parts)}) END"
 
-    def postprocess(self, df: DataFrame, ok: Column, err: Column):
+    def postprocess(self, df: DataFrame, ok: str) -> DataFrame:
         # postprocess (syslog.go:252-269): attributes.severity (0-7)
         # -> entry severity via the fixed table, then delete the
         # helper attributes (severity AND timestamp); runs only when
         # the main parse succeeded, like ProcessWithCallback
-        attrs = F.col("attributes")
-        sev_raw = F.try_element_at(attrs, F.lit("severity")).try_cast(T.IntegerType())
-        sev_map = F.create_map(
-            *[
-                c
-                for i in range(8)
-                for c in (F.lit(str(i)), F.lit(_SYSLOG_SEVERITY[i]))
-            ]
-        )
-        text_map = F.create_map(
-            *[
-                c
-                for i in range(8)
-                for c in (F.lit(str(i)), F.lit(_SYSLOG_SEVERITY_TEXT[i]))
-            ]
-        )
-        ok_sev = ok & sev_raw.isNotNull()
-        df = df.withColumn(
-            "severity",
-            F.when(ok_sev, F.try_element_at(sev_map, sev_raw.cast(T.StringType())))
-            .otherwise(F.col("severity")),
-        )
-        df = df.withColumn(
-            "severity_text",
-            F.when(ok_sev, F.try_element_at(text_map, sev_raw.cast(T.StringType())))
-            .otherwise(F.col("severity_text")),
-        )
-        df = df.withColumn(
-            "attributes",
-            F.when(
-                ok,
-                F.map_filter(
-                    F.col("attributes"),
-                    lambda k, _v: (k != F.lit("severity"))
-                    & (k != F.lit("timestamp")),
-                ),
-            ).otherwise(F.col("attributes")),
-        )
-        return df, err
+        sev_raw = "TRY_CAST(try_element_at(`attributes`, 'severity') AS INT)"
+        sev_key = f"CAST({sev_raw} AS STRING)"
+        ok_sev = f"({ok} AND {sev_raw} IS NOT NULL)"
+
+        def table(values: list) -> str:
+            entries = ", ".join(f"'{i}', {literal(v)}" for i, v in enumerate(values))
+            return f"try_element_at(map({entries}), {sev_key})"
+
+        return apply_updates(df, {
+            "severity": f"CASE WHEN {ok_sev} THEN {table(_SYSLOG_SEVERITY)} ELSE `severity` END",
+            "severity_text": f"CASE WHEN {ok_sev} THEN {table(_SYSLOG_SEVERITY_TEXT)}"
+            " ELSE `severity_text` END",
+            "attributes": f"CASE WHEN {ok} THEN map_filter(`attributes`,"
+            " (k, v) -> (k != 'severity' AND k != 'timestamp')) ELSE `attributes` END",
+        })

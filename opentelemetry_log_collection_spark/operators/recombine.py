@@ -272,7 +272,7 @@ class RecombineStage(Stage):
     def apply(self, df: DataFrame) -> DataFrame:
         order = self._order_cols(df)
         src_raw = self.source_identifier.get().cast(T.StringType())
-        matched = compile_guard(self.is_first or self.is_last)
+        matched = F.expr(compile_guard(self.is_first or self.is_last))
         df = df.withColumn("_srcraw", src_raw).withColumn("_match", matched)
         entry_cols = [c for c in df.columns if c not in ("_srcraw", "_match")]
 
@@ -323,6 +323,6 @@ class RecombineStage(Stage):
             F.col("_combined"),
         )
         out = apply_updates(
-            out, self.combine_field.set_scalar(F.col("_combined"))
+            out, self.combine_field.set_scalar("`_combined`")
         )
         return out.drop("_combined")

@@ -1,8 +1,8 @@
 """router — predicate-driven multi-sink fan-out.
 
 Rebuilds operator/transformer/router/router.go:41-204 the Spark way:
-the ordered route list compiles into ONE ``when(...).when(...)`` chain
-producing a ``_route`` id column — `when` chain ordering IS
+the ordered route list compiles into ONE ``CASE WHEN ... WHEN ...``
+producing a ``_route`` id column — branch ordering IS
 first-match-wins (router.go:116-141's loop+break). Entries matching no
 route (and no default) get a null id and are dropped (router.go's
 implicit drop). Matched routes can stamp attributes (router.go:126-131).
@@ -17,11 +17,10 @@ cache, not N count() jobs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..exprs import compile_guard
-from ..fields import apply_updates, Field
+from ..fields import Field, apply_updates, ident, quote
 from ..pipeline import Stage, register
 
 ROUTE_COL = "_route"
@@ -46,35 +45,35 @@ class RouterStage(Stage):
         else:
             self.default = []
 
-    def route_id_col(self) -> Column:
-        """The when-chain: route index of the FIRST matching route,
-        len(routes) for the default, null for unmatched (dropped)."""
-        col = None
-        for i, r in enumerate(self.routes):
-            cond = compile_guard(r.expr)
-            col = F.when(cond, F.lit(i)) if col is None else col.when(cond, F.lit(i))
-        if col is None:
-            return F.lit(len(self.routes)) if self.default else F.lit(None)
-        if self.default:
-            col = col.otherwise(F.lit(len(self.routes)))
-        return col
+    def route_id_col(self) -> str:
+        """Spark SQL text of the route index of the FIRST matching
+        route, len(routes) for the default, null for unmatched
+        (dropped)."""
+        default = str(len(self.routes)) if self.default else "NULL"
+        if not self.routes:
+            return default
+        whens = " ".join(
+            f"WHEN {compile_guard(r.expr)} THEN {i}" for i, r in enumerate(self.routes)
+        )
+        return f"CASE {whens}" + (f" ELSE {default}" if self.default else "") + " END"
 
     def tag(self, df: DataFrame) -> DataFrame:
         """Stamp the `_route` id and per-route attributes; drop
-        unmatched rows. One projection, no shuffle."""
-        df = df.withColumn(ROUTE_COL, self.route_id_col())
-        df = df.filter(F.col(ROUTE_COL).isNotNull())
-        # per-route attribute stamping (router.go:126-131)
-        attr_field = Field.parse("attributes")
-        for i, r in enumerate(self.routes):
-            if not r.attributes:
-                continue
-            entries = []
-            for k, v in r.attributes.items():
-                entries.append(F.lit(str(k)))
-                entries.append(F.lit(str(v)))
-            val = F.when(F.col(ROUTE_COL) == i, F.create_map(*entries))
-            df = apply_updates(df, attr_field.set_map(val))
+        unmatched rows. No shuffle."""
+        route = ident(ROUTE_COL)
+        df = apply_updates(df, {ROUTE_COL: self.route_id_col()})
+        df = df.filter(f"{route} IS NOT NULL")
+        # per-route attribute stamping (router.go:126-131): a row takes
+        # one route, so one merge of a per-route map covers them all
+        stamps = " ".join(
+            f"WHEN {route} = {i} THEN map("
+            + ", ".join(f"{quote(str(k))}, {quote(str(v))}" for k, v in r.attributes.items())
+            + ")"
+            for i, r in enumerate(self.routes)
+            if r.attributes
+        )
+        if stamps:
+            df = apply_updates(df, Field.parse("attributes").set_map(f"CASE {stamps} END"))
         return df
 
     def route(self, df: DataFrame) -> dict[str, list]:
@@ -83,13 +82,13 @@ class RouterStage(Stage):
         tagged = self.tag(df)
         out: dict[str, DataFrame] = {}
         for i, r in enumerate(self.routes):
-            branch = tagged.filter(F.col(ROUTE_COL) == i).drop(ROUTE_COL)
+            branch = tagged.filter(f"{ident(ROUTE_COL)} = {i}").drop(ROUTE_COL)
             for target in r.outputs:
                 out[target] = (
                     out[target].unionByName(branch) if target in out else branch
                 )
         if self.default:
-            branch = tagged.filter(F.col(ROUTE_COL) == len(self.routes)).drop(ROUTE_COL)
+            branch = tagged.filter(f"{ident(ROUTE_COL)} = {len(self.routes)}").drop(ROUTE_COL)
             for target in self.default:
                 out[target] = (
                     out[target].unionByName(branch) if target in out else branch

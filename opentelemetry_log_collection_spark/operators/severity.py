@@ -16,10 +16,9 @@ preserved in severity_text.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from ..fields import Field, quote
+from ..fields import Field, apply_updates, quote
 from ..pipeline import ColumnStage, register
 
 # entry/severity.go:22-63
@@ -143,20 +142,14 @@ class SeverityParser:
             range_hit = f"coalesce({range_hit}, CASE WHEN ({is_whole} AND {in_range}) THEN {sev} END)"
         return f"coalesce({hit}, {range_hit})"
 
-    def embed_apply(self, df: DataFrame, cond: Column) -> tuple[DataFrame, Column]:
-        src_sql = f"CAST({self.parse_from.sql()} AS STRING)"
-        src = F.expr(src_sql)
-        err = src.isNull()  # missing parse_from is the only error path
-        ok = cond & src.isNotNull()
-        sev = F.expr(self._lookup(src_sql))
-        df = df.withColumn(
-            "severity",
-            F.when(ok, F.coalesce(sev, F.lit(0))).otherwise(F.col("severity")),
-        )
-        df = df.withColumn(
-            "severity_text",
-            F.when(ok, src).otherwise(F.col("severity_text")),
-        )
+    def embed_apply(self, df: DataFrame, cond: str) -> tuple[DataFrame, str]:
+        src = f"CAST({self.parse_from.sql()} AS STRING)"
+        err = f"({src} IS NULL)"  # missing parse_from is the only error path
+        ok = f"({cond} AND {src} IS NOT NULL)"
+        df = apply_updates(df, {
+            "severity": f"CASE WHEN {ok} THEN coalesce({self._lookup(src)}, 0) ELSE `severity` END",
+            "severity_text": f"CASE WHEN {ok} THEN {src} ELSE `severity_text` END",
+        })
         return df, err
 
 
@@ -169,5 +162,5 @@ class SeverityParserStage(ColumnStage):
         super().__init__(**kw)
         self.parser = SeverityParser(parse_from, preset, mapping)
 
-    def transform(self, df: DataFrame, cond: Column):
+    def transform(self, df: DataFrame, cond: str):
         return self.parser.embed_apply(df, cond)

@@ -20,11 +20,9 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame
 
-from ..fields import Field
+from ..fields import Field, apply_updates, literal, quote
 from ..pipeline import ColumnStage, register
 
 #: strptime -> Java DateTimeFormatter, after ctimefmt
@@ -49,6 +47,8 @@ _STRPTIME_TO_JAVA = {
 _EPOCH_LAYOUTS = ("s", "ms", "us", "ns", "s.ms", "s.us", "s.ns")
 
 DEFAULT_NOW = "2024-06-01T00:00:00+00:00"
+
+_DOT = r"\."
 
 
 def _quote_alpha_runs(s: str) -> str:
@@ -149,70 +149,62 @@ class TimeParser:
         else:
             raise ValueError(f"unsupported layout_type {layout_type!r}")
 
-    def _parse_col(self, src: Column) -> Column:
+    def _parse_col(self, src: str) -> str:
+        """Spark SQL text of the timestamp parsed from the string
+        ``src`` (also SQL text); null when it does not parse."""
         lt = self.layout_type
         if lt == "native":
-            return src.try_cast(T.TimestampType())
+            return f"TRY_CAST({src} AS TIMESTAMP)"
         if lt == "epoch":
             lay = self.layout
             if lay in ("s.ms", "s.us", "s.ns"):
                 # exact integer split semantics (time.go:219-229):
                 # strings.Split on '.', ParseInt both sides — NEVER a
                 # float path (double loses microseconds above 2^53 ns)
-                parts = F.split(src, r"\.")
-                sec = F.try_element_at(parts, F.lit(1)).try_cast(T.LongType())
-                sub = F.try_element_at(parts, F.lit(2)).try_cast(T.LongType())
+                parts = f"split({src}, {quote(_DOT)}, -1)"
+                sec = f"TRY_CAST(try_element_at({parts}, 1) AS BIGINT)"
+                sub = f"TRY_CAST(try_element_at({parts}, 2) AS BIGINT)"
                 to_us = {"s.ms": 1000, "s.us": 1, "s.ns": None}[lay]
                 if to_us is None:
                     # ns -> us via exact decimal integer division
-                    sub_us = F.floor(
-                        sub.cast(T.DecimalType(30, 0)) / F.lit(1000)
-                    ).cast(T.LongType())
+                    sub_us = f"CAST(floor(CAST({sub} AS DECIMAL(30,0)) / 1000) AS BIGINT)"
                 else:
-                    sub_us = sub * F.lit(to_us)
-                ok = (F.size(parts) == 2) & sec.isNotNull() & sub.isNotNull()
-                return F.when(
-                    ok, F.timestamp_micros(sec * F.lit(1_000_000) + sub_us)
-                )
-            n = src.try_cast(T.LongType())  # ParseInt: fractions invalid
+                    sub_us = f"({sub} * {to_us})"
+                ok = f"((size({parts}) = 2 AND {sec} IS NOT NULL) AND {sub} IS NOT NULL)"
+                return f"CASE WHEN {ok} THEN timestamp_micros((({sec} * 1000000) + {sub_us})) END"
+            n = f"TRY_CAST({src} AS BIGINT)"  # ParseInt: fractions invalid
             if lay == "s":
-                return F.timestamp_seconds(n)
+                return f"timestamp_seconds({n})"
             if lay == "ms":
-                return F.timestamp_millis(n)
+                return f"timestamp_millis({n})"
             if lay == "us":
-                return F.timestamp_micros(n)
+                return f"timestamp_micros({n})"
             # ns: exact integer division (a double round-trip loses
             # precision above 2^53 ns ~ 104 days)
-            return F.timestamp_micros(
-                F.floor(n.cast(T.DecimalType(30, 0)) / F.lit(1000)).cast(
-                    T.LongType()
-                )
-            )
-        ts = F.try_to_timestamp(src, F.lit(self.java_layout))
+            return f"timestamp_micros(CAST(floor(CAST({n} AS DECIMAL(30,0)) / 1000) AS BIGINT))"
+        ts = f"try_to_timestamp({src}, {quote(self.java_layout)})"
         if not self.has_year:
             # year inference vs the injected reference clock
-            now_lit = F.lit(self.now.replace(tzinfo=None))
-            with_year = F.make_timestamp(
-                F.lit(self.now.year), F.month(ts), F.day(ts),
-                F.hour(ts), F.minute(ts), F.second(ts).cast(T.DoubleType()),
+            now = literal(self.now)
+            with_year = (
+                f"make_timestamp({self.now.year}, month({ts}), day({ts}),"
+                f" hour({ts}), minute({ts}), CAST(second({ts}) AS DOUBLE))"
             )
-            too_far = with_year > now_lit + F.expr("INTERVAL 7 DAYS")
-            ts = F.when(too_far, with_year - F.expr("INTERVAL 1 YEAR")).otherwise(
-                with_year
-            )
+            too_far = f"{with_year} > ({now} + INTERVAL 7 DAYS)"
+            ts = f"CASE WHEN {too_far} THEN ({with_year} - INTERVAL 1 YEAR) ELSE {with_year} END"
         if not self.has_zone and self.location != "UTC":
             # ParseInLocation: the naive wall-clock reading (session tz
             # is UTC) re-interpreted as `location` local time
-            ts = F.to_utc_timestamp(ts, self.location)
+            ts = f"to_utc_timestamp({ts}, {quote(self.location)})"
         return ts
 
-    def embed_apply(self, df: DataFrame, cond: Column) -> tuple[DataFrame, Column]:
-        src = self.parse_from.get().cast(T.StringType())
+    def embed_apply(self, df: DataFrame, cond: str) -> tuple[DataFrame, str]:
+        src = f"CAST({self.parse_from.sql()} AS STRING)"
         parsed = self._parse_col(src)
-        err = src.isNull() | parsed.isNull()
-        ok = cond & parsed.isNotNull()
-        df = df.withColumn("ts", F.when(ok, parsed).otherwise(F.col("ts")))
-        return df, err
+        df = apply_updates(df, {
+            "ts": f"CASE WHEN ({cond} AND ({parsed}) IS NOT NULL) THEN {parsed} ELSE `ts` END",
+        })
+        return df, f"({src} IS NULL OR ({parsed}) IS NULL)"
 
 
 def _gotime_to_java(layout: str) -> str:
@@ -265,5 +257,5 @@ class TimeParserStage(ColumnStage):
         super().__init__(**kw)
         self.parser = TimeParser(parse_from, layout, layout_type, now, location)
 
-    def transform(self, df: DataFrame, cond: Column):
+    def transform(self, df: DataFrame, cond: str):
         return self.parser.embed_apply(df, cond)

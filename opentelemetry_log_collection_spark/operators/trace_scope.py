@@ -11,11 +11,9 @@ scope_name: copy a string field to ScopeName
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame
 
-from ..fields import Field
+from ..fields import Field, apply_updates, ident
 from ..pipeline import ColumnStage, register
 
 
@@ -33,21 +31,22 @@ class TraceParser:
             (trace_flags or {}).get("parse_from", "body.trace_flags")
         )
 
-    def embed_apply(self, df: DataFrame, cond: Column) -> tuple[DataFrame, Column]:
-        err = F.lit(False)
+    def embed_apply(self, df: DataFrame, cond: str) -> tuple[DataFrame, str]:
+        err = "false"
+        updates = {}
         for field, col_name in (
             (self.trace_id, "trace_id"),
             (self.span_id, "span_id"),
             (self.trace_flags, "trace_flags"),
         ):
-            src = field.get().cast(T.StringType())
-            decoded = F.unhex(src)
-            ok = cond & decoded.isNotNull()
-            df = df.withColumn(
-                col_name, F.when(ok, decoded).otherwise(F.col(col_name))
+            src = f"CAST({field.sql()} AS STRING)"
+            decoded = f"unhex({src})"
+            updates[col_name] = (
+                f"CASE WHEN ({cond} AND {decoded} IS NOT NULL) THEN {decoded}"
+                f" ELSE {ident(col_name)} END"
             )
-            err = err | (src.isNotNull() & decoded.isNull())
-        return df, err
+            err = f"({err} OR ({src} IS NOT NULL AND {decoded} IS NULL))"
+        return apply_updates(df, updates), err
 
 
 @register("trace_parser")
@@ -56,7 +55,7 @@ class TraceParserStage(ColumnStage):
         super().__init__(**kw)
         self.parser = TraceParser(trace_id, span_id, trace_flags)
 
-    def transform(self, df: DataFrame, cond: Column):
+    def transform(self, df: DataFrame, cond: str):
         return self.parser.embed_apply(df, cond)
 
 
@@ -64,14 +63,12 @@ class ScopeNameParser:
     def __init__(self, parse_from: str):
         self.parse_from = Field.parse(parse_from)
 
-    def embed_apply(self, df: DataFrame, cond: Column) -> tuple[DataFrame, Column]:
-        src = self.parse_from.get().cast(T.StringType())
-        err = src.isNull()
-        df = df.withColumn(
-            "scope_name",
-            F.when(cond & src.isNotNull(), src).otherwise(F.col("scope_name")),
-        )
-        return df, err
+    def embed_apply(self, df: DataFrame, cond: str) -> tuple[DataFrame, str]:
+        src = f"CAST({self.parse_from.sql()} AS STRING)"
+        df = apply_updates(df, {
+            "scope_name": f"CASE WHEN ({cond} AND {src} IS NOT NULL) THEN {src} ELSE `scope_name` END",
+        })
+        return df, f"({src} IS NULL)"
 
 
 @register("scope_name_parser")
@@ -80,5 +77,5 @@ class ScopeNameParserStage(ColumnStage):
         super().__init__(**kw)
         self.parser = ScopeNameParser(parse_from)
 
-    def transform(self, df: DataFrame, cond: Column):
+    def transform(self, df: DataFrame, cond: str):
         return self.parser.embed_apply(df, cond)

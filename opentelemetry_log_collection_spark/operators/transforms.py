@@ -8,12 +8,10 @@ citing its reference implementation.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame
 
 from ..exprs import compile_guard, compile_template
-from ..fields import MAP_SS, Field, apply_updates
+from ..fields import MAP_ROOTS, MAP_SS_SQL, Field, apply_updates, ident, literal, quote
 from ..pipeline import ColumnStage, Stage, register
 
 
@@ -31,21 +29,20 @@ class AddStage(ColumnStage):
         self.field = Field.parse(field)
         self.value = value
 
-    def transform(self, df: DataFrame, cond: Column):
+    def transform(self, df: DataFrame, cond: str):
         if isinstance(self.value, dict):
-            entries = []
-            for k, v in self.value.items():
-                entries.append(F.lit(str(k)))
-                entries.append(
-                    F.expr(compile_template(v)) if _is_expr_value(v) else F.lit(str(v))
-                )
-            val = F.when(cond, F.create_map(*entries))
+            entries = ", ".join(
+                f"{quote(str(k))}, "
+                + (compile_template(v) if _is_expr_value(v) else quote(str(v)))
+                for k, v in self.value.items()
+            )
+            val = f"CASE WHEN {cond} THEN map({entries}) END"
             return apply_updates(df, self.field.set_map(val)), None
         if _is_expr_value(self.value):
-            col = F.expr(compile_template(self.value))
+            val = compile_template(self.value)
         else:
-            col = F.lit(self.value)
-        guarded = F.when(cond, col)
+            val = literal(self.value)
+        guarded = f"CASE WHEN {cond} THEN {val} END"
         return apply_updates(df, self.field.set_scalar(guarded)), None
 
 
@@ -61,11 +58,10 @@ class CopyStage(ColumnStage):
         self.src = Field.parse(frm)
         self.dst = Field.parse(to)
 
-    def transform(self, df: DataFrame, cond: Column):
-        src = self.src.get()
-        err = src.isNull()
-        guarded = F.when(cond & src.isNotNull(), src)
-        return apply_updates(df, self.dst.set_scalar(guarded)), err
+    def transform(self, df: DataFrame, cond: str):
+        src = self.src.sql()
+        guarded = f"CASE WHEN ({cond} AND ({src}) IS NOT NULL) THEN {src} END"
+        return apply_updates(df, self.dst.set_scalar(guarded)), f"({src}) IS NULL"
 
 
 @register("move")
@@ -81,13 +77,12 @@ class MoveStage(ColumnStage):
         self.src = Field.parse(frm)
         self.dst = Field.parse(to)
 
-    def transform(self, df: DataFrame, cond: Column):
-        src = self.src.get()
-        err = src.isNull()
-        moved = cond & src.isNotNull()
-        updates = self.dst.set_scalar(F.when(moved, src))
+    def transform(self, df: DataFrame, cond: str):
+        src = self.src.sql()
+        moved = f"({cond} AND ({src}) IS NOT NULL)"
+        updates = self.dst.set_scalar(f"CASE WHEN {moved} THEN {src} END")
         updates.update(self.src.delete(cols=updates, when=moved))
-        return apply_updates(df, updates), err
+        return apply_updates(df, updates), f"({src}) IS NULL"
 
 
 @register("remove")
@@ -99,9 +94,8 @@ class RemoveStage(ColumnStage):
         super().__init__(**kw)
         self.field = Field.parse(field)
 
-    def transform(self, df: DataFrame, cond: Column):
-        src = self.field.get()
-        err = src.isNull() if self.field.keys else None
+    def transform(self, df: DataFrame, cond: str):
+        err = f"({self.field.sql()}) IS NULL" if self.field.keys else None
         return apply_updates(df, self.field.delete(when=cond)), err
 
 
@@ -117,34 +111,30 @@ class RetainStage(ColumnStage):
         if not self.fields:
             raise ValueError("retain requires at least one field")
 
-    def transform(self, df: DataFrame, cond: Column):
+    def transform(self, df: DataFrame, cond: str):
         by_root: dict[str, list[Field]] = {}
         for f in self.fields:
             by_root.setdefault(f.root, []).append(f)
-        out = df
-        for root in ("body", "attributes", "resource"):
+        updates = {}
+        for root in MAP_ROOTS:
             kept = by_root.get(root)
-            if not kept:
-                continue  # root not mentioned -> untouched (retain.go:76-88)
-            m = F.col(root)
-            keys = [f.keys[0] for f in kept if f.keys]
-            whole_root = any(not f.keys for f in kept)
-            if whole_root:
+            # root not mentioned, or listed whole -> untouched
+            # (retain.go:76-88)
+            if not kept or any(not f.keys for f in kept):
                 continue
-            # NB: the lambda must take exactly (k, v) — map_filter binds
-            # every declared parameter to a Column, so a keys= default
-            # would be clobbered; the closure is evaluated eagerly here
-            filtered = F.map_filter(m, lambda k, _v: k.isin(*list(keys)))
-            new_col = F.when(cond, filtered).otherwise(m)
-            out = out.withColumn(root, new_col)
-            if root == "body":
-                # raw string body is dropped when body keys are retained
-                out = out.withColumn(
-                    "text",
-                    F.when(cond & F.col("body").isNull(), F.lit(None).cast(T.StringType()))
-                    .otherwise(F.col("text")),
-                )
-        return out, None
+            m = ident(root)
+            keys = ", ".join(quote(f.keys[0]) for f in kept)
+            updates[root] = (
+                f"CASE WHEN {cond} THEN map_filter({m}, (k, v) -> k IN ({keys})) ELSE {m} END"
+            )
+        if "body" in updates:
+            # raw string body is dropped when body keys are retained;
+            # that reads the retained body, so the body goes first
+            df = apply_updates(df, {"body": updates.pop("body")})
+            updates["text"] = (
+                f"CASE WHEN ({cond} AND `body` IS NULL) THEN CAST(NULL AS STRING) ELSE `text` END"
+            )
+        return apply_updates(df, updates), None
 
 
 @register("flatten")
@@ -162,18 +152,16 @@ class FlattenStage(ColumnStage):
         if len(self.field.keys) != 1:
             raise ValueError("flatten supports one nesting level")
 
-    def transform(self, df: DataFrame, cond: Column):
-        k = self.field.keys[0]
-        m = F.col("body")
-        nested_raw = F.try_element_at(m, F.lit(k))
-        children = F.from_json(nested_raw, MAP_SS)
-        ok = cond & children.isNotNull()
-        err = nested_raw.isNull() | children.isNull()
-        spliced = F.map_concat(
-            F.map_filter(m, lambda key, _v: key != F.lit(k)), children
-        )
-        out = df.withColumn("body", F.when(ok, spliced).otherwise(m))
-        return out, err
+    def transform(self, df: DataFrame, cond: str):
+        k = quote(self.field.keys[0])
+        nested_raw = f"try_element_at(`body`, {k})"
+        children = f"from_json({nested_raw}, {quote(MAP_SS_SQL)})"
+        spliced = f"map_concat(map_filter(`body`, (k, v) -> k != {k}), {children})"
+        out = apply_updates(df, {
+            "body": f"CASE WHEN ({cond} AND {children} IS NOT NULL) THEN {spliced}"
+            " ELSE `body` END",
+        })
+        return out, f"({nested_raw} IS NULL OR {children} IS NULL)"
 
 
 @register("filter")
@@ -193,9 +181,9 @@ class FilterStage(Stage):
     def apply(self, df: DataFrame) -> DataFrame:
         cond = compile_guard(self.expr)
         if self.drop_ratio >= 1.0:
-            return df.filter(~cond)
-        drop = cond & (F.rand(self.seed) < F.lit(self.drop_ratio))
-        return df.filter(~drop)
+            return df.filter(f"NOT {cond}")
+        rand = "rand()" if self.seed is None else f"rand({int(self.seed)}L)"
+        return df.filter(f"NOT ({cond} AND {rand} < {literal(self.drop_ratio)})")
 
 
 @register("noop")

@@ -21,16 +21,15 @@ the plan's ONE shuffle).
   3. per-bucket totals — P rows — collect to the driver, cumulate,
      and come back as a literal map probe (no join at all).
 
-Cost note: the (id, token count) projection feeds three jobs (bounds,
-totals, the final offsets), so it IS persisted — for cost, not
-consistency: the default whitespace counter would otherwise
-re-tokenize the text for the last two (measured 1.9s -> 0.67s warm
-at 10x bench scale). Like the dedup/similarity persists, the cache
-entry lives until the SparkContext ends or the caller unpersists;
-long-lived drivers packing many distinct corpora should clear it
-(``spark.catalog.clearCache()`` or re-derive with
-``token_count=F.col(...)`` over an already-counted projection, which
-makes both extra passes cheap 2-column scans).
+Cost note: the (id, token count) projection feeds the two driver-side
+jobs (bounds, totals), so it is persisted while they run — for cost,
+not consistency: the default whitespace counter would otherwise
+re-tokenize the text for the second. The cache is released as soon
+as the totals are on the driver (on the empty-corpus return too), so
+no cache outlives the call; the returned frame re-derives the
+projection when it runs. Callers packing an already-counted corpus
+pass ``token_count=F.col(...)``, which makes every pass a cheap
+2-column scan.
 
 Bucket balance assumes doc_ids are roughly dense (the usual case for
 a curated corpus). Highly clustered sparse ids skew bucket sizes —
@@ -74,10 +73,8 @@ def pack_sequences(
     n_tok = (
         token_count if token_count is not None else whitespace_tokens(F.col(text_col))
     ).cast("bigint")
-    # (doc_id, n_tokens) feeds THREE jobs (bounds, bucket totals, the
-    # final offset projection) — persist so the corpus is scanned and
-    # tokenized once, not once per job (the id-only bounds job prunes
-    # the tokenize, but totals and the final frame both paid it)
+    # (doc_id, n_tokens) feeds the bounds and bucket-totals jobs —
+    # persisted for those two, released before returning
     t = docs.select(F.col(id_col), n_tok.alias("n_tokens")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -86,6 +83,7 @@ def pack_sequences(
         F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
     ).collect()[0]
     if bounds["lo"] is None:  # empty corpus
+        t.unpersist()
         return t.select(
             id_col,
             "n_tokens",
@@ -116,6 +114,7 @@ def pack_sequences(
         r["_bkt"]: r["_t"]
         for r in d.groupBy("_bkt").agg(F.sum("n_tokens").alias("_t")).collect()
     }
+    t.unpersist()
     acc, offsets = 0, {}
     for b in sorted(totals):
         offsets[b] = acc

@@ -19,7 +19,7 @@ Catalyst plans the whole DAG as one optimized tree per sink.
 Cross-cutting semantics (SURVEY.md section 2.1) live in ColumnStage:
   - ``if`` predicate: rows failing the predicate pass through
     unchanged (transformer.go:90-99) — expressed per-column as
-    ``when(cond, new).otherwise(old)`` via null-guarded merges.
+    ``CASE WHEN cond THEN new ELSE old END`` via null-guarded merges.
   - ``on_error: send|drop`` (transformer.go:51-59): failed rows are
     forwarded unmodified (send) or filtered out (drop).
 """
@@ -29,8 +29,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from .exprs import compile_guard
 
@@ -107,7 +106,12 @@ class Stage:
 class ColumnStage(Stage):
     """A transformer with `if` + `on_error` semantics whose work is a
     set of column updates (null-guarded merge => unchanged row when the
-    predicate is false or the parse failed)."""
+    predicate is false or the parse failed).
+
+    Every expression a column stage builds is Spark SQL text: the
+    predicate from ``cond``, the error flag ``transform`` returns and
+    the ``{column: text}`` update dicts of ``fields.Field``, which
+    ``fields.apply_updates`` applies in one projection."""
 
     def __init__(
         self,
@@ -123,25 +127,28 @@ class ColumnStage(Stage):
         self.if_expr = if_expr
         self.on_error = on_error
 
-    def cond(self) -> Column:
+    def cond(self) -> str:
+        """The `if` predicate as Spark SQL text."""
         if self.if_expr is None:
-            return F.lit(True)
+            return "true"
         # null predicate result counts as false, like expr.AsBool
         return compile_guard(self.if_expr)
 
-    def transform(self, df: DataFrame, cond: Column) -> tuple[DataFrame, Column | None]:
-        """Return (transformed df, error flag column or None).
+    def transform(self, df: DataFrame, cond: str) -> tuple[DataFrame, str | None]:
+        """Return (transformed df, Spark SQL text of the error flag or
+        None).
 
-        Implementations must make every update conditional on ``cond``
-        (pass ``when(cond, value)`` into the field setters — a null
-        value is a merge no-op, reproducing pass-through-unchanged)."""
+        Implementations must make every update conditional on the SQL
+        text ``cond`` (pass ``CASE WHEN cond THEN value END`` into the
+        field setters — a null value is a merge no-op, reproducing
+        pass-through-unchanged)."""
         raise NotImplementedError
 
     def apply(self, df: DataFrame) -> DataFrame:
         cond = self.cond()
         out, err = self.transform(df, cond)
         if err is not None and self.on_error == "drop":
-            out = out.filter(~(cond & F.coalesce(err, F.lit(False))))
+            out = out.filter(f"NOT ({cond} AND coalesce({err}, false))")
         return out
 
 

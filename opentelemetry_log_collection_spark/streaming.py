@@ -254,7 +254,7 @@ def streaming_recombine(
         entries = to_entries(entries)
     from .exprs import compile_guard  # local: avoid import cycle
 
-    matched = compile_guard(is_first_entry or is_last_entry).alias("_match")
+    matched = F.expr(compile_guard(is_first_entry or is_last_entry)).alias("_match")
     keyed = entries.select("conv_id", "turn_idx", "text", matched)
     return keyed.groupBy("conv_id").applyInPandasWithState(
         fn,

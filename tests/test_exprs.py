@@ -40,9 +40,7 @@ def test_numeric_compare_on_map_string(spark):
     df = make_entries(spark, ["x"])
     from opentelemetry_log_collection_spark.fields import Field, apply_updates
 
-    df = apply_updates(
-        df, Field.parse("attributes.status").set_scalar(F.lit("404"))
-    )
+    df = apply_updates(df, Field.parse("attributes.status").set_scalar("'404'"))
     assert _eval(spark, df, "attributes.status >= 400") == [True]
     assert _eval(spark, df, "attributes.status < 400") == [False]
 

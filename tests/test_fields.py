@@ -1,7 +1,8 @@
 """Field path semantics vs entry/field.go + entry/body_field.go."""
 
+import json
+
 import pytest
-from pyspark.sql import functions as F
 
 from opentelemetry_log_collection_spark.fields import (
     Field,
@@ -33,9 +34,7 @@ def test_get_body_string_vs_map(spark):
         {"v": "hello"}
     ]
     # after a map set, body root reads the JSON projection
-    df2 = apply_updates(
-        df, Field.parse("body").set_map(F.create_map(F.lit("k"), F.lit("v")))
-    )
+    df2 = apply_updates(df, Field.parse("body").set_map("map('k', 'v')"))
     assert collected(df2.select(Field.parse("body.k").get().alias("v")), order=None) == [
         {"v": "v"}
     ]
@@ -45,8 +44,8 @@ def test_set_merge_overwrite(spark):
     """Set of a map value merges, later keys win (body_field.go:88-132)."""
     df = make_entries(spark, ["x"])
     f = Field.parse("attributes")
-    df = apply_updates(df, f.set_map(F.create_map(F.lit("a"), F.lit("1"), F.lit("b"), F.lit("2"))))
-    df = apply_updates(df, f.set_map(F.create_map(F.lit("b"), F.lit("99"), F.lit("c"), F.lit("3"))))
+    df = apply_updates(df, f.set_map("map('a', '1', 'b', '2')"))
+    df = apply_updates(df, f.set_map("map('b', '99', 'c', '3')"))
     [row] = collected(df, "attributes", order=None)
     attrs = row["attributes"]
     assert attrs["a"] == "1" and attrs["b"] == "99" and attrs["c"] == "3"
@@ -56,25 +55,20 @@ def test_nested_set_merges_jsonwise(spark):
     """F5 map-merge: parse_to body.parsed twice merges keys."""
     df = make_entries(spark, ["x"])
     f = Field.parse("body.parsed")
-    df = apply_updates(df, f.set_map(F.create_map(F.lit("k1"), F.lit("v1"))))
-    df = apply_updates(df, f.set_map(F.create_map(F.lit("k2"), F.lit("v2"))))
+    df = apply_updates(df, f.set_map("map('k1', 'v1')"))
+    df = apply_updates(df, f.set_map("map('k2', 'v2')"))
     assert collected(df.select(Field.parse("body.parsed.k1").get().alias("v")), order=None) == [{"v": "v1"}]
     assert collected(df.select(Field.parse("body.parsed.k2").get().alias("v")), order=None) == [{"v": "v2"}]
 
 
 def test_scalar_root_set_rejected():
     with pytest.raises(FieldParseError):
-        Field.parse("attributes").set_scalar(F.lit("x"))
+        Field.parse("attributes").set_scalar("'x'")
 
 
 def test_delete_key_and_root(spark):
     df = make_entries(spark, ["x"])
-    df = apply_updates(
-        df,
-        Field.parse("attributes").set_map(
-            F.create_map(F.lit("a"), F.lit("1"), F.lit("b"), F.lit("2"))
-        ),
-    )
+    df = apply_updates(df, Field.parse("attributes").set_map("map('a', '1', 'b', '2')"))
     df1 = apply_updates(df, Field.parse("attributes.a").delete())
     [row] = collected(df1, "attributes", order=None)
     assert row["attributes"] == {"b": "2", "role": "user", "tool": ""}
@@ -88,6 +82,46 @@ def test_null_value_set_is_noop(spark):
     df = make_entries(spark, ["x"])
     before = collected(df, "attributes", order=None)
     df2 = apply_updates(
-        df, Field.parse("attributes").set_map(F.lit(None).cast("map<string,string>"))
+        df, Field.parse("attributes").set_map("CAST(NULL AS map<string,string>)")
     )
     assert collected(df2, "attributes", order=None) == before
+
+
+def _overlapping_merges(spark) -> list[dict]:
+    """Merges whose new keys collide with existing ones: set_map at
+    the root and one key deep, set_scalar one and two keys deep, and a
+    move onto an existing key."""
+    from opentelemetry_log_collection_spark.pipeline import build_stage
+
+    df = make_entries(spark, ["x"])
+    df = apply_updates(df, Field.parse("attributes").set_map("map('role', 'root', 'x', '1')"))
+    nested = Field.parse("attributes.nested")
+    df = apply_updates(df, nested.set_map("map('k', 'v1', 'j', 'w1')"))
+    df = apply_updates(df, nested.set_map("map('k', 'v2')"))
+    df = apply_updates(df, Field.parse("attributes.x").set_scalar("'2'"))
+    df = apply_updates(df, Field.parse("attributes.nested.j").set_scalar("'w2'"))
+    df = build_stage({"type": "move", "from": "attributes.x", "to": "attributes.role"}).apply(df)
+    rows = collected(df, "attributes", order=None)
+    # key order inside the nested JSON text follows the merge form
+    for r in rows:
+        r["attributes"]["nested"] = json.loads(r["attributes"]["nested"])
+    return rows
+
+
+def test_merge_without_last_win_policy(spark):
+    """Under mapKeyDedupPolicy=EXCEPTION merge_maps takes the
+    filter+concat form: new keys still win, no duplicate key reaches
+    map_concat, and the rows equal the LAST_WIN ones."""
+    key = "spark.sql.mapKeyDedupPolicy"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "EXCEPTION")
+        strict = _overlapping_merges(spark)
+        spark.conf.set(key, "LAST_WIN")
+        last_win = _overlapping_merges(spark)
+    finally:
+        spark.conf.set(key, saved)
+    assert strict == [{"attributes": {
+        "role": "2", "tool": "", "nested": {"k": "v2", "j": "w2"},
+    }}]
+    assert strict == last_win

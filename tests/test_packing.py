@@ -70,3 +70,13 @@ def test_pack_giant_doc_spans_many_chunks(spark):
 def test_pack_rejects_bad_budget(spark):
     with pytest.raises(ValueError, match="budget"):
         pack_sequences(_docs(spark, [(0, "a")]), budget=0)
+
+
+@pytest.mark.parametrize("rows", [[(0, "a b c"), (1, "d e")], []], ids=["docs", "empty"])
+def test_pack_releases_its_cache(spark, rows):
+    """The (id, n_tokens) cache lives only while pack_sequences runs
+    its driver-side jobs, on the empty-corpus return as well."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    pack_sequences(_docs(spark, rows), budget=4).collect()
+    assert jsc.getPersistentRDDs().size() == before

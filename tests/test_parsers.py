@@ -366,7 +366,7 @@ def test_syslog_builtin_pandas_parity(spark, protocol, corpus):
     [tp] = SyslogParserStage(protocol=protocol).subparsers
     tp.parse_from = Field.parse("body")
     ts_df = make_entries(spark, [(r or {}).get("timestamp") for r in refs])
-    ts_df, _ = tp.embed_apply(ts_df, F.lit(True))
+    ts_df, _ = tp.embed_apply(ts_df, "true")
     want_ts = [r["ts"] for r in collected(ts_df, "ts")]
     for row, r, ts, line in zip(got, refs, want_ts, corpus):
         if r is None:

@@ -4,6 +4,7 @@ cases (operator/transformer/*/..._test.go)."""
 from __future__ import annotations
 
 import pytest
+import yaml
 from pyspark.sql import functions as F
 
 from opentelemetry_log_collection_spark.pipeline import build_stage
@@ -28,6 +29,26 @@ def test_add_literal_and_expr_template(spark):
     a = attrs_of(df)
     assert a["env"] == "prod"
     assert a["tag"] == "r-user"
+
+
+# YAML scalars as ``yaml.safe_load`` types them (a date, a timestamp
+# with and without an offset, the non-finite floats, a sequence)
+YAML_VALUES = [
+    "true", "42", "9000000000", "-1.5", "1.0e+20", "2024-06-01",
+    "2024-06-01 10:30:00+02:00", "2024-06-01 10:30:00", ".inf", "-.inf",
+    ".nan", "[1, 2]", "[a, null]",
+]
+
+
+@pytest.mark.parametrize("raw", YAML_VALUES)
+def test_add_typed_value_matches_f_lit(spark, raw):
+    """A typed YAML value is stored as the string ``F.lit`` gives it."""
+    value = yaml.safe_load(f"v: {raw}")["v"]
+    df = build_stage({"type": "add", "field": "attributes.v", "value": value}).apply(
+        one(spark)
+    )
+    expected = spark.range(1).select(F.lit(value).cast("string").alias("v")).first().v
+    assert attrs_of(df)["v"] == expected
 
 
 def test_add_map_value_merges(spark):

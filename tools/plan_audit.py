@@ -3,6 +3,21 @@ queries and flags plan smells (missing pushdown, python in hot path,
 unexpected shuffles).
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
+       python tools/plan_audit.py --plans [sf_dir] [query ...]
+
+``--plans`` prints each query's normalized optimized logical plan
+instead: expression ids (``#123``) renumbered by first appearance and
+lambda-variable names (``x_17`` from the Column API, ``k`` from SQL
+text) all written ``x``. Two checkouts that build the same
+plans print the same text, so a rewrite of the expression-building
+code is checked by running the mode in each checkout and diffing:
+
+    (cd old && python /path/to/tools/plan_audit.py --plans sf > /tmp/a)
+    (cd new && python /path/to/tools/plan_audit.py --plans sf > /tmp/b)
+    diff /tmp/a /tmp/b
+
+The engine is imported from the current directory. ``tagged_frame``
+names the flagship's routed frame (``flagship.tagged_frame``).
 """
 
 from __future__ import annotations
@@ -35,6 +50,44 @@ AUDIT = [
 ]
 
 
+#: default query list of --plans: every query whose plan is built by
+#: the column stages, plus the flagship's routed frame
+PLANS = [
+    "regex_tomcat", "json_signup", "kv_click", "csv_purchase", "csv_headerattr",
+    "severity_http", "time_access", "time_epoch", "time_gotime", "uri_request",
+    "syslog_rfc3164", "syslog_rfc5424", "trace_ids", "scope_name", "flatten",
+    "retain_body", "transform_restructure", "filter_drop", "enrich_roles",
+    "routed_rows", "recombine_conv", "recombine_newest", "tagged_frame",
+]
+
+_LAMBDA_VAR = re.compile(r"\blambda \w+#")
+
+
+def normalized_plan(df) -> str:
+    """The optimized logical plan with expression ids renumbered by
+    first appearance and every lambda variable named ``x`` — each
+    variable keeps its own expression id, so the name carries nothing
+    a plan comparison needs (the Column API invents ``x_17``, SQL text
+    keeps the name it was written with)."""
+    plan = _LAMBDA_VAR.sub("lambda x#", df._jdf.queryExecution().optimizedPlan().toString())
+    ids: dict[str, str] = {}
+
+    def renumber(m: re.Match) -> str:
+        return "#" + ids.setdefault(m.group(1), str(len(ids)))
+
+    return re.sub(r"#(\d+)", renumber, plan)
+
+
+def dump_plans(spark, sf_dir: str, names: list[str]) -> None:
+    from opentelemetry_log_collection_spark.flagship import tagged_frame
+
+    qs = E.queries()
+    for name in names:
+        df = tagged_frame(spark, sf_dir) if name == "tagged_frame" else qs[name](spark, sf_dir)
+        print(f"===== {name} =====")
+        print(normalized_plan(df))
+
+
 def audit_one(name: str, df) -> list[str]:
     plan = df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -62,9 +115,15 @@ def audit_one(name: str, df) -> list[str]:
 
 
 def main() -> None:
+    plans = "--plans" in sys.argv
+    if plans:
+        sys.argv.remove("--plans")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = [a for a in sys.argv[2:] if a != "full"]
     spark = get_spark("local[4]", shuffle_partitions=4, app_name="plan-audit")
+    if plans:
+        dump_plans(spark, sf_dir, only or PLANS)
+        return
     qs = E.queries()
     smells: list[str] = []
     for name in (only or AUDIT):
