@@ -6,15 +6,18 @@ where it stopped (operator/input/file/file.go:298-361 via the
 Persister KV, operator/persister.go:23-49). The batch-engine analogue:
 
   - The input is split into ``n_buckets`` deterministic buckets by
-    ``pmod(hash(conv_id), n_buckets)`` — the unit of work, commit and
-    retry (the analogue of one file's offset).
+    ``pmod(xxhash64(conv_id), n_buckets)`` — the unit of work, commit
+    and retry (the analogue of one file's offset).
   - Each bucket runs the flagship pipeline and writes every sink to
-    ``<out>/<sink>/bucket=<b>/`` with mode=overwrite — idempotent:
-    a re-run of a half-written bucket replaces it byte-for-byte.
+    ``<out>/data/bucket=<b>/sink=<s>/`` with the flagship's one sink
+    writer (``flagship.write_routed``, mode=overwrite) — idempotent:
+    a re-run of a half-written bucket replaces it whole. The per-sink
+    counts ride that write as observed metrics, so a bucket is one
+    scan and one write job, with no persist.
   - A bucket COMMITS by atomically renaming a ledger file into
-    ``<out>/_checkpoint/`` carrying its lineage + metrics (rows in,
-    per-sink counts, wall seconds, input fingerprint). Rename-commit
-    gives crash consistency without a transaction log.
+    ``<out>/_checkpoint/`` carrying its lineage + metrics (rows
+    routed, per-sink counts, wall seconds). Rename-commit gives crash
+    consistency without a transaction log.
   - Resume = rerun: committed buckets are skipped; the final dataset
     is identical no matter how many times the run was interrupted.
 
@@ -24,9 +27,9 @@ deterministic work units + idempotent writes + atomic commit — is
 unchanged.
 
 Skew note: conversations are bounded (a transcript has at most
-thousands of turns) so hash(conv_id) buckets are balance-bounded;
-the per-sink count aggregation IS heavily skewed (5 keys) and uses a
-two-phase salted aggregation (``salted_sink_counts``).
+thousands of turns) so xxhash64(conv_id) buckets are balance-bounded.
+The per-sink counts have only 5 keys, but they are observed on the
+write rather than aggregated, so there is no exchange to skew.
 """
 
 from __future__ import annotations
@@ -38,7 +41,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .flagship import ROUTE_COL, route_name_col, tagged_frame
+from .flagship import tagged_frame, write_routed
 
 BUCKET_COL = "_bucket"
 
@@ -52,20 +55,6 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def salted_sink_counts(tagged: DataFrame, salt_buckets: int = 64) -> DataFrame:
-    """Two-phase aggregation for the 5-key (maximally skewed) per-sink
-    count: partial counts per (sink, salt) fan out across reducers,
-    then a tiny final sum. Catalyst's map-side partial agg does this
-    implicitly; the explicit salt makes the plan skew-proof even with
-    partial-agg disabled or a high-cardinality stamped attribute."""
-    salt = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(salt_buckets))
-    partial = (
-        tagged.groupBy(route_name_col().alias("sink"), salt.alias("_salt"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return partial.groupBy("sink").agg(F.sum("c").alias("cnt"))
-
-
 class CheckpointedRunner:
     """Resume-safe flagship run over one scale-factor directory."""
 
@@ -75,13 +64,11 @@ class CheckpointedRunner:
         sf_dir: str,
         out_dir: str,
         n_buckets: int = 8,
-        fmt: str = "parquet",
     ):
         self.spark = spark
         self.sf_dir = sf_dir
         self.out_dir = out_dir
         self.n_buckets = n_buckets
-        self.fmt = fmt
         self.ckpt_dir = os.path.join(out_dir, "_checkpoint")
         os.makedirs(self.ckpt_dir, exist_ok=True)
 
@@ -107,34 +94,18 @@ class CheckpointedRunner:
 
     def run_bucket(self, bucket: int, tagged: DataFrame) -> dict:
         """Process ONE bucket: idempotent partitioned write + lineage.
-        One scan, one write job — the sink fan-out is partitionBy."""
+        One scan, one write job — the sink fan-out is partitionBy and
+        the ledger's counts are the write's observed metrics."""
         t0 = time.time()
-        part = tagged.filter(F.col(BUCKET_COL) == bucket).persist()
-        try:
-            counts = {
-                r["sink"]: r["cnt"]
-                for r in salted_sink_counts(part).collect()
-            }
-            path = os.path.join(self.out_dir, "data", f"bucket={bucket}")
-            writer = (
-                part.withColumn("sink", route_name_col())
-                .drop(ROUTE_COL, BUCKET_COL)
-                .sortWithinPartitions("sink", "conv_id", "turn_idx")
-                .write.mode("overwrite")
-                .partitionBy("sink")
-            )
-            if self.fmt == "json":
-                writer.json(path)
-            else:
-                writer.parquet(path)
-        finally:
-            part.unpersist()
+        part = tagged.filter(F.col(BUCKET_COL) == bucket).drop(BUCKET_COL)
+        path = os.path.join(self.out_dir, "data", f"bucket={bucket}")
+        counts = write_routed(self.spark, part, path)
         lineage = {
             "bucket": bucket,
             "sf_dir": self.sf_dir,
             "n_buckets": self.n_buckets,
-            "rows_routed": int(sum(counts.values())),
-            "sink_counts": {k: int(v) for k, v in counts.items()},
+            "rows_routed": sum(counts.values()),
+            "sink_counts": counts,
             "wall_s": round(time.time() - t0, 3),
         }
         self._commit(bucket, lineage)

@@ -21,17 +21,19 @@ operator/helper/transformer.go:90-99):
 
 Scale notes (the part that must survive 1000 executors / 100 TB):
   - Every parse/route stage is a zero-shuffle projection; the ONLY
-    exchanges in the whole flagship plan are the transcript
-    row_number window (hash by user_id ~ conv_id) and the final
-    per-sink count aggregation (tiny, map-side combined).
-  - The router tags a `_route` id in one projection; sinks filter the
-    SAME cached frame, so N sinks never recompute the parse DAG.
+    exchange in the written flagship plan is the transcript
+    row_number window (hash by user_id ~ conv_id).
+  - The router tags a `_route` id in one projection; every run mode
+    (batch, checkpointed bucket, streaming micro-batch) writes the
+    sinks with ONE partitionBy(sink) write (``write_routed``), and the
+    per-sink counts ride that write as observed metrics: no cache, no
+    count job, no aggregation exchange to skew.
   - The enrich dim is broadcast (map-side hash probe, no fact shuffle).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .entry import to_entries
@@ -149,8 +151,8 @@ def tag_transcripts(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
 def tagged_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """transcripts -> entries -> parse -> enrich -> routed-tag frame.
 
-    The returned frame carries `_route` (int route id); callers filter
-    per sink or aggregate counts — all from one cacheable frame.
+    The returned frame carries `_route` (int route id); callers write
+    it (``write_routed``) or aggregate its counts (``sink_counts``).
     """
     return tag_transcripts(spark, materialized_transcripts(spark, sf_dir))
 
@@ -172,52 +174,62 @@ def sink_counts(tagged: DataFrame) -> DataFrame:
     )
 
 
-def write_sinks(
-    spark: SparkSession,
-    tagged: DataFrame,
-    out_dir: str,
-    fmt: str = "parquet",
-    compression: str = "zstd",
-    coalesce_to: int | None = 0,
-) -> None:
-    """The multi-sink write: ONE partitionBy(sink) dataset write from
-    a frame already carrying the `sink` column.
+def write_sinks(spark: SparkSession, tagged: DataFrame, out_dir: str) -> None:
+    """The multi-sink write: ONE partitionBy(sink) zstd parquet write
+    from a frame already carrying the `sink` column.
 
     Write-path tuning (measured at 10M rows, local[32], BENCH.md):
       - deliberately NO repartition: the parse->route path is
         stateless, so a pre-write shuffle of the wide entry rows
         (3 map columns) costs more than it saves (measured 3x at 5M
         rows); conversation co-location is recombine's job.
-      - ``coalesce(defaultParallelism)`` (coalesce_to=0 -> auto): the
-        scan is split fine-grained for compute balance, but carrying
-        those micro-partitions into the writer multiplies per-file
-        costs by sinks x tasks (262 tasks -> 2562 files; 20% slower).
-        Coalesce is shuffle-free, so the parse still runs in every
-        slot. At real scale, target file size instead.
+      - ``coalesce(defaultParallelism)``: the scan is split
+        fine-grained for compute balance, but carrying those
+        micro-partitions into the writer multiplies per-file costs by
+        sinks x tasks (262 tasks -> 2562 files; 20% slower). Coalesce
+        is shuffle-free, so the parse still runs in every slot. At
+        real scale, target file size instead.
       - zstd over default snappy: 13% faster end-to-end here AND
         smaller files (the write is encode-bound, not IO-bound).
     """
-    df = tagged.drop(ROUTE_COL)
-    if coalesce_to == 0:
-        coalesce_to = spark.sparkContext.defaultParallelism
-    if coalesce_to:
-        df = df.coalesce(coalesce_to)
-    out = (
-        df.sortWithinPartitions("sink", "conv_id", "turn_idx")
+    (
+        tagged.drop(ROUTE_COL)
+        .coalesce(spark.sparkContext.defaultParallelism)
+        .sortWithinPartitions("sink", "conv_id", "turn_idx")
         .write.mode("overwrite")
         .partitionBy("sink")
+        .option("compression", "zstd")
+        .parquet(out_dir)
     )
-    if fmt == "json":
-        out.json(out_dir)  # NDJSON byte-parity mode; no codec games
-    else:
-        out.option("compression", compression).parquet(out_dir)
+
+
+def write_routed(
+    spark: SparkSession, tagged: DataFrame, out_dir: str
+) -> dict[str, int]:
+    """Write a routed-tag frame to ``out_dir`` (one directory per sink)
+    and return its non-zero per-sink counts.
+
+    The counts ride the write as observed metrics (``Observation`` +
+    one count(when(sink=...)) per sink), so the whole write-and-count
+    is ONE materialization of the parse DAG: no persist, no separate
+    count job. The earlier persist + write-from-cache + count-from-cache
+    shape paid a full cache write/read of the wide entry rows
+    (measured ~1.5s of the 6.9s warm wall at 10x bench scale, and at
+    cluster scale the cache would spill)."""
+    obs = Observation()
+    df = tagged.withColumn("sink", route_name_col()).observe(
+        obs,
+        *[
+            F.count(F.when(F.col("sink") == name, 1)).alias(name)
+            for name in SINK_NAMES
+        ],
+    )
+    write_sinks(spark, df, out_dir)
+    return {name: cnt for name, cnt in obs.get.items() if cnt > 0}
 
 
 def run_flagship(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str | None = None,
-    fmt: str = "parquet",
+    spark: SparkSession, sf_dir: str, out_dir: str | None = None
 ) -> DataFrame:
     """Full pipeline including per-sink writes when ``out_dir`` given.
     Returns the per-sink counts frame (the headline aggregate).
@@ -225,30 +237,10 @@ def run_flagship(
     The multi-sink fan-out is ONE partitioned write (partitionBy the
     sink name), not N filtered jobs: every row is parsed once and
     scanned once; the writer splits files by sink. N separate writes
-    would re-scan the cached frame N times — measured 2x slower at
-    sf0.1, and far worse at cluster scale where the cache spills.
-
-    The per-sink counts ride the SAME write pass as observed metrics
-    (``Observation`` + one count(when(sink=...)) per sink), so the
-    whole flagship is ONE materialization of the parse DAG — the
-    previous persist + write-from-cache + count-from-cache shape paid
-    a full cache write/read of the wide entry rows (measured ~1.5s of
-    the 6.9s warm wall at 10x bench scale, and at cluster scale the
-    cache would spill)."""
+    would re-run the parse DAG (or re-scan a cache of it) N times —
+    measured 2x slower at sf0.1, and far worse at cluster scale."""
     tagged = tagged_frame(spark, sf_dir)
     if out_dir is not None:
-        from pyspark.sql import Observation
-
-        tagged = tagged.withColumn("sink", route_name_col())
-        obs = Observation()
-        tagged = tagged.observe(
-            obs,
-            *[
-                F.count(F.when(F.col("sink") == name, 1)).alias(name)
-                for name in SINK_NAMES
-            ],
-        )
-        write_sinks(spark, tagged, out_dir, fmt)
-        rows = [(name, cnt) for name, cnt in obs.get.items() if cnt > 0]
-        return spark.createDataFrame(rows, "sink string, cnt long")
+        counts = write_routed(spark, tagged, out_dir)
+        return spark.createDataFrame(list(counts.items()), "sink string, cnt long")
     return sink_counts(tagged)

@@ -18,8 +18,8 @@ offsets persist for resume (file.go:298-361). The Spark mapping:
   downstream operator chain       | the SAME column-expression stages
                                   |   as batch (they are plan-level,
                                   |   engine-agnostic)
-  multi-sink fan-out              | foreachBatch: tag once, one
-                                  |   partitioned write per microbatch
+  multi-sink fan-out              | foreachBatch: the batch flagship's
+                                  |   one sink write per microbatch
 
 Everything stateless (parsers/transforms/router) is shared with the
 batch path verbatim — a DataFrame transformation doesn't care whether
@@ -37,7 +37,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .entry import to_entries
-from .flagship import ROUTE_COL, apply_parsers, route_name_col, router
+from .flagship import apply_parsers, router, write_routed
 from .transcripts import materialized_transcripts
 
 TRANSCRIPT_SCHEMA = T.StructType(
@@ -270,6 +270,29 @@ def streaming_recombine(
 # --------------------------------------------------------------------
 
 
+def write_microbatch(
+    spark: SparkSession, batch_df: DataFrame, batch_id: int, out_dir: str
+) -> None:
+    """The streaming flagship's foreachBatch body: one routed write of
+    the microbatch to ``<out>/data/batch_id=<n>/sink=<s>/`` (the batch
+    flagship's ``write_routed``), then its observed per-sink counts to
+    ``<out>/counts/batch_id=<n>/``.
+
+    foreachBatch is AT-LEAST-ONCE: a microbatch retried after a
+    partial failure re-runs this function with the SAME batch_id.
+    Each batch owns its two ``batch_id=<n>`` directories and writes
+    them with mode=overwrite, so a retry replaces its own partial
+    output exactly, making the sink effectively exactly-once. Readers
+    of ``data`` and ``counts`` see ``batch_id`` as a partition column;
+    they select explicit columns or sum ``cnt`` across batches."""
+    counts = write_routed(spark, batch_df, f"{out_dir}/data/batch_id={batch_id}")
+    (
+        spark.createDataFrame(list(counts.items()), "sink string, cnt long")
+        .write.mode("overwrite")
+        .parquet(f"{out_dir}/counts/batch_id={batch_id}")
+    )
+
+
 def streaming_flagship(
     spark: SparkSession,
     sf_dir: str,
@@ -278,45 +301,18 @@ def streaming_flagship(
     max_files_per_trigger: int | None = None,
 ):
     """The flagship pipeline as a stream: stateless stages are the
-    SAME plan as batch; the multi-sink fan-out happens per microbatch
-    in foreachBatch (tag once -> one partitioned append), and counts
-    accumulate in a parquet metrics dir. Returns the started query."""
+    SAME plan as batch, and each microbatch is written by
+    ``write_microbatch``: the batch flagship's one partitioned sink
+    write, with the per-sink counts it observes kept in a parquet
+    counts dir. Returns the started query."""
     src = stream_transcripts(spark, sf_dir, max_files_per_trigger)
-    entries = apply_parsers(to_entries(src))
-    tagged = router().tag(entries).withColumn("sink", route_name_col())
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is AT-LEAST-ONCE: a microbatch retried after a
-        # partial failure re-runs this function with the SAME batch_id.
-        # Plain append would duplicate rows, so both sinks partition by
-        # batch_id and dynamically OVERWRITE only that batch's
-        # partitions — a retry replaces its own partial output exactly,
-        # making the sink effectively exactly-once. Readers either
-        # select explicit columns (the data sink) or sum cnt across
-        # batch_ids (the counts sink), so the extra partition column is
-        # invisible to them.
-        batch_df = batch_df.withColumn("batch_id", F.lit(batch_id)).persist()
-        try:
-            (
-                batch_df.drop(ROUTE_COL)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id", "sink")
-                .parquet(f"{out_dir}/data")
-            )
-            (
-                batch_df.groupBy("batch_id", "sink")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(f"{out_dir}/counts")
-            )
-        finally:
-            batch_df.unpersist()
-
+    tagged = router().tag(apply_parsers(to_entries(src)))
     return (
-        tagged.writeStream.foreachBatch(write_batch)
+        tagged.writeStream.foreachBatch(
+            lambda batch_df, batch_id: write_microbatch(
+                spark, batch_df, batch_id, out_dir
+            )
+        )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -5,11 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from opentelemetry_log_collection_spark.checkpoint import (
-    CheckpointedRunner,
-    salted_sink_counts,
-    with_bucket,
-)
+from opentelemetry_log_collection_spark.checkpoint import CheckpointedRunner
 from opentelemetry_log_collection_spark.flagship import (
     run_flagship,
     sink_counts,
@@ -51,13 +47,40 @@ def test_flagship_counts_match_independent_derivation(spark, tagged):
     assert sum(got.values()) == load_transcripts(spark, SF_DIR).count()
 
 
-def test_salted_counts_equal_plain_counts(spark, tagged):
-    plain = {r["sink"]: r["cnt"] for r in sink_counts(tagged).collect()}
-    salted = {
-        r["sink"]: r["cnt"]
-        for r in salted_sink_counts(with_bucket(tagged, 4)).collect()
-    }
-    assert salted == plain
+def test_checkpoint_ledger_counts_match_independent_derivation(spark, tmp_path):
+    runner = CheckpointedRunner(spark, SF_DIR, str(tmp_path), n_buckets=4)
+    assert runner.run()["sink_counts"] == _expected_counts(spark)
+
+
+def _persisted_rdd_ids(sc) -> set:
+    return set(sc._jsc.getPersistentRDDs().keys())
+
+
+def test_bucket_is_one_write_with_no_persist(spark, tmp_path):
+    """Each bucket's per-sink counts ride its write: at most 2 Spark
+    jobs per bucket, and nothing left persisted."""
+    sc = spark.sparkContext
+    runner = CheckpointedRunner(spark, SF_DIR, str(tmp_path), n_buckets=4)
+    run_bucket = runner.run_bucket
+    groups = []
+
+    def grouped(bucket, tagged):
+        group = f"bucket-jobs-{tmp_path.name}-{bucket}"
+        groups.append(group)
+        sc.setJobGroup(group, group)
+        try:
+            return run_bucket(bucket, tagged)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    runner.run_bucket = grouped
+    before = _persisted_rdd_ids(sc)
+    runner.run()
+    assert _persisted_rdd_ids(sc) == before
+    jobs = {g: len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups}
+    assert len(jobs) == 4
+    assert all(1 <= n <= 2 for n in jobs.values()), jobs
 
 
 def test_run_flagship_writes_all_sinks(spark, tmp_path):

@@ -6,13 +6,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from opentelemetry_log_collection_spark.entry import to_entries
-from opentelemetry_log_collection_spark.flagship import run_flagship
+from opentelemetry_log_collection_spark.flagship import run_flagship, tag_transcripts
 from opentelemetry_log_collection_spark.operators.recombine import RecombineStage
 from opentelemetry_log_collection_spark.streaming import (
     TRANSCRIPT_SCHEMA,
     stream_transcripts,
     streaming_flagship,
     streaming_recombine,
+    write_microbatch,
 )
 from opentelemetry_log_collection_spark.transcripts import materialized_transcripts
 
@@ -37,6 +38,42 @@ def test_streaming_flagship_counts_match_batch(spark, tmp_path):
     assert stream_counts == batch_counts
     data = spark.read.parquet(str(tmp_path / "out" / "data"))
     assert data.count() == sum(batch_counts.values())
+
+
+def test_write_microbatch_retry_replaces_its_own_batch(spark, tmp_path):
+    """foreachBatch is at-least-once: a retried batch_id must replace
+    its own output, so two calls for batch 0 and one for batch 1 leave
+    two batches of rows and counts, not three."""
+    import datetime as dt
+
+    texts = [
+        '10.0.9.63 - - [01/Jan/2024:07:28:28 +0000] "GET /a HTTP/1.1" 503 9',
+        'user="u0" action=click target=btn-44 dur_ms=1339',
+        '{"event":"signup","user":"u0","plan":"team","ok":true}',
+        '101,u0,"item 1, deluxe",6405',
+        "plain assistant text",
+    ]
+    rows = [
+        ("c0", i, "user", t, "", dt.datetime(2024, 1, 1, 0, 0, i))
+        for i, t in enumerate(texts)
+    ]
+    tagged = tag_transcripts(spark, spark.createDataFrame(rows, TRANSCRIPT_SCHEMA))
+    out = str(tmp_path / "out")
+    for batch_id in (0, 0, 1):
+        write_microbatch(spark, tagged, batch_id, out)
+
+    data = spark.read.parquet(f"{out}/data")
+    assert data.count() == 2 * len(texts)
+    assert {r["batch_id"] for r in data.select("batch_id").collect()} == {0, 1}
+    counts = spark.read.parquet(f"{out}/counts")
+    per_batch = {
+        (r["batch_id"], r["sink"]): r["cnt"] for r in counts.collect()
+    }
+    one = {
+        "sink_errors": 1, "sink_ui": 1, "sink_growth": 1,
+        "sink_billing": 1, "sink_rest": 1,
+    }
+    assert per_batch == {(b, s): n for b in (0, 1) for s, n in one.items()}
 
 
 def _drain_stateful(spark, q, path: str, expected: int, deadline_s: int = 180):
