@@ -39,8 +39,8 @@ SHINGLE = 3          # words per shingle
 # production default is xxhash64 -> one BIGINT per seed (min over
 # longs, pure codegen). 'md5' (hex string, min over 32-char strings)
 # is kept because DuckDB can reproduce it — the oracle config pins it.
-# Measured at 50k docs x 128 seeds (tools/minhash_band_bench.py):
-# md5 signature 167s, xxhash64 28s — 6x.
+# Measured at 50k docs x 128 seeds: md5 signature 167s, xxhash64
+# 28s — 6x.
 MINHASH_HASH = "xxhash64"
 
 _HEX = "0123456789abcdef"
@@ -551,16 +551,16 @@ def jaccard_verify(
     instead of shingle strings (the string-keyed distinct alone was
     6.3s of minhash_near_dups' 18.8s first rep at 10x bench scale).
     Same 64-bit-collision trade as jaccard_ngram_pairs' index and the
-    LSH band keys: ~|shingles|^2/2^64, vanishing."""
-    from pyspark.storagelevel import StorageLevel
+    LSH band keys: ~|shingles|^2/2^64, vanishing.
 
-    # the distinct shingle index feeds THREE branches (sizes + both
-    # intersection sides) — persist so the corpus is shingled once
+    The distinct shingle index feeds three branches (sizes and both
+    intersection sides) and is not persisted: Spark reuses the
+    exchange of the identical distinct, and a persist only added jobs
+    and a cache the caller never released."""
     sh = (
         shingles(df, text_col)
         .select("doc_id", F.xxhash64("shingle").alias("_h"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     # |A ∩ B|: equi-join on BOTH (doc, hash) so the shingle hash is
@@ -598,12 +598,10 @@ def minhash_near_dups(
 ) -> DataFrame:
     """The full shingle->minhash->band->bucket-join->verify plan.
     The signature frame feeds both self-join sides of the band
-    bucket-join, so it is persisted (signatures-built-once)."""
-    from pyspark.storagelevel import StorageLevel
-
-    sig = minhash_signature(df, text_col, seeds, hash_fn).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    bucket-join; Spark reuses the signature aggregation's exchange for
+    the second side, so it is not persisted and the call leaves no
+    cache behind."""
+    sig = minhash_signature(df, text_col, seeds, hash_fn)
     pairs = lsh_candidate_pairs(sig, seeds, band_size)
     return jaccard_verify(pairs, df, text_col)
 

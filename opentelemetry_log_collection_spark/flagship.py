@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from .entry import to_entries
 from .operators.enrich import LookupEnrichStage
 from .operators.router import ROUTE_COL, RouterStage
-from .pipeline import Pipeline, build_stage
+from .pipeline import build_stage
 from .transcripts import materialized_transcripts
 
 #: Tomcat/httpd common-log-format regex — same named groups as the
@@ -113,11 +113,6 @@ ROLE_DIM = [
     ("system", "platform", "infra"),
     ("tool", "program", "automated"),
 ]
-
-
-def parse_stage_pipeline() -> Pipeline:
-    """The parse phase as a linear operator pipeline."""
-    return Pipeline.from_configs([dict(c) for c in PARSE_STAGES])
 
 
 def apply_parsers(df: DataFrame) -> DataFrame:

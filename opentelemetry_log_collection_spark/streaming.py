@@ -38,7 +38,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .entry import to_entries
 from .flagship import apply_parsers, router, write_routed
-from .transcripts import materialized_transcripts
+from .transcripts import materialized_transcripts, transcripts_path
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -61,16 +61,10 @@ def stream_transcripts(
     max_concurrent_files (operator/input/file/config.go)."""
     # ensure materialized
     materialized_transcripts(spark, sf_dir)
-    from .transcripts import _CACHE_ROOT  # noqa: PLC0415
-    import hashlib
-    import os
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join(_CACHE_ROOT, key)
     reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return reader.parquet(transcripts_path(sf_dir))
 
 
 # --------------------------------------------------------------------

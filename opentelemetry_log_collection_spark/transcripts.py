@@ -123,6 +123,13 @@ def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CACHE_ROOT = os.environ.get("SPARK_GRAFT_TCACHE", "/tmp/spark_graft_transcripts")
 
 
+def transcripts_path(sf_dir: str) -> str:
+    """Where ``materialized_transcripts`` stores the table for
+    ``sf_dir``: one directory per absolute input path."""
+    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+    return os.path.join(_CACHE_ROOT, key)
+
+
 def materialized_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The transcript table as a STORED columnar table (synthesized
     once per sf_dir, then read back as parquet).
@@ -135,8 +142,7 @@ def materialized_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row — whereas a table scan is read once and every downstream
     stage starts from plain columns (measured ~100x on the flagship
     at sf0.1)."""
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join(_CACHE_ROOT, key)
+    path = transcripts_path(sf_dir)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         # cluster by conversation and write enough files that a scan
         # can fan out (local files are ~100KB; at real scale Iceberg

@@ -328,6 +328,15 @@ def test_minhash_production_defaults(spark, docs):
     assert (0, 3) in pairs
 
 
+def test_minhash_leaves_no_persisted_rdd(spark, docs):
+    """Running the near-dup plan leaves the persistent-RDD set as it
+    found it: no signature frame or shingle index stays cached."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    dedup.minhash_near_dups(docs).collect()
+    assert set(jsc.getPersistentRDDs().keys()) == before
+
+
 def test_embedding_near_dups(spark, vectors):
     out = similarity.embedding_near_dups(
         vectors, threshold=0.99, dim=4, n_planes=1, n_tables=2
