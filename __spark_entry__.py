@@ -1173,6 +1173,11 @@ def q_streaming_recombine(spark: SparkSession, sf_dir: str) -> DataFrame:
         except Exception:
             pass
         time.sleep(1)
+    # stop between batches: a stop during a batch interrupts its state
+    # store commit (CANNOT_WRITE_STATE_STORE). The gap between two
+    # timeout batches is about a millisecond, so poll without sleeping
+    while q.status["isTriggerActive"] and time.time() - t0 < 300:
+        pass
     q.stop()
     return spark.read.parquet(f"{work}/rec").select(
         F.col("source").alias("conv_id"), "turn_idx", "text"
@@ -1734,6 +1739,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embed_near_dups": q_embed_near_dups,
         "token_stats": q_token_stats,
         "quality_stats": q_quality_stats,
+        "media_jpeg": q_media_jpeg,
+        "media_png": q_media_png,
+        "media_gif": q_media_gif,
+        "file_compressed": q_file_compressed,
+        "decontaminate": q_decontaminate,
+        "pack_sequences": q_pack_sequences,
         "fingerprint": q_fingerprint,
         "winnow_fp": q_winnow_fp,
         "embed_topk": q_embed_topk,
@@ -1743,9 +1754,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "media_audio": q_media_audio,
         "media_frames": q_media_frames,
         "media_image": q_media_image,
-        "media_jpeg": q_media_jpeg,
-        "media_png": q_media_png,
-        "media_gif": q_media_gif,
         "media_resize": q_media_resize,
         "media_video": q_media_video,
         "ann_ivf": q_ann_ivf,
@@ -1753,12 +1761,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_recombine": q_streaming_recombine,
         "tcp_ingest": q_tcp_ingest,
         "journald_ingest": q_journald_ingest,
-        "file_compressed": q_file_compressed,
         "k8s_ingest": q_k8s_ingest,
         "windows_ingest": q_windows_ingest,
         "sample_stratified": q_sample_stratified,
-        "decontaminate": q_decontaminate,
-        "pack_sequences": q_pack_sequences,
     }
 
 

@@ -3,6 +3,13 @@
 Scale posture: AQE on (runtime skew-join splitting + partition
 coalescing), Arrow enabled for the pandas-UDF slow path, UTC session
 timezone so timestamp semantics are reproducible across engines.
+
+The codegen class cache holds ``CODEGEN_CACHE_ENTRIES`` classes, so a
+warm query finds the classes it compiled on its first run instead of
+recompiling them. It is a static conf: only a session this helper
+builds gets it, and only if no earlier session in the same JVM has
+already compiled code. A session the caller builds keeps Spark's
+default of 100 entries.
 """
 
 from __future__ import annotations
@@ -10,6 +17,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: ``spark.sql.codegen.cache.maxEntries``. Census
+#: (``tools/plan_audit.py --codegen``, sf0.001): the twelve benchmark
+#: ``query_mix`` queries compile 245 classes per pass and all 68
+#: declared queries 713-772, so the default 100 evicts what the next
+#: query needs. At 1,000 a second 68-query pass recompiled 19 classes,
+#: against 758 at 100 (11 of 633 with stage ids out of class names,
+#: below).
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -31,6 +47,14 @@ def get_spark(
         # sessions without this policy get the policy-independent
         # filter+concat instead
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # no stage id in generated class names: adaptive execution
+        # numbers a query's codegen stages as it re-plans them, in an
+        # order that depends on which stages finish first, so with the
+        # id a warm run compiled up to 16 classes of unchanged code
+        # again under new names; identical stages of two queries also
+        # share one class (245 -> 219 per mix pass)
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -38,18 +38,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .entry import to_entries
 from .flagship import apply_parsers, router, write_routed
-from .transcripts import materialized_transcripts, transcripts_path
-
-TRANSCRIPT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("ts", T.TimestampNTZType()),
-    ]
-)
+from .transcripts import TRANSCRIPT_SCHEMA, materialized_transcripts, transcripts_path
 
 
 def stream_transcripts(

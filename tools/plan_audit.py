@@ -4,6 +4,7 @@ unexpected shuffles).
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
        python tools/plan_audit.py --plans [sf_dir] [query ...]
+       python tools/plan_audit.py --codegen [sf_dir] [query ...]
 
 ``--plans`` prints each query's normalized optimized logical plan
 instead: expression ids (``#123``) renumbered by first appearance and
@@ -15,6 +16,19 @@ code is checked by running the mode in each checkout and diffing:
     (cd old && python /path/to/tools/plan_audit.py --plans sf > /tmp/a)
     (cd new && python /path/to/tools/plan_audit.py --plans sf > /tmp/b)
     diff /tmp/a /tmp/b
+
+``--codegen`` is a census of the code Spark generates: it runs the
+list of queries (every declared one by default) twice, each run a
+``noop`` write of a freshly built frame, and prints per query the
+classes compiled on its first run, the classes recompiled on its
+second run (``CodegenMetrics`` compile count) and the largest generated
+method in bytes, then the totals. The method size is read with
+``debug.codegenStringSeq`` after a third run of the query's own
+executed plan, so adaptive plans are final. A second run recompiles
+when the first run's classes were evicted from the codegen cache
+(``session.CODEGEN_CACHE_ENTRIES``) or its adaptive plan took another
+shape; a method over 8,000 bytes is never JIT-compiled (HotSpot's
+``DontCompileHugeMethods``).
 
 The engine is imported from the current directory. ``tagged_frame``
 names the flagship's routed frame (``flagship.tagged_frame``).
@@ -88,6 +102,38 @@ def dump_plans(spark, sf_dir: str, names: list[str]) -> None:
         print(normalized_plan(df))
 
 
+def compiled(spark) -> int:
+    """Janino compiles so far in this JVM (local mode: driver and
+    executors share it)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def max_method_bytes(spark, df) -> int:
+    """Run ``df``'s executed plan, then return the largest method of
+    its generated code."""
+    plan = df._jdf.queryExecution().executedPlan()
+    plan.execute().count()
+    debug = getattr(spark._jvm.org.apache.spark.sql.execution.debug, "package")
+    stats = debug.codegenStringSeq(plan)
+    return max((stats.apply(i)._3().maxMethodCodeSize() for i in range(stats.size())), default=0)
+
+
+def codegen_census(spark, sf_dir: str, names: list[str]) -> None:
+    qs = E.queries()
+    runs: dict[str, list[int]] = {n: [] for n in names}
+    for _ in range(2):
+        for name in names:
+            before = compiled(spark)
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            runs[name].append(compiled(spark) - before)
+    print(f"{'query':<24} {'first':>6} {'second':>6} {'max_method_B':>12}")
+    for name in names:
+        first, second = runs[name]
+        print(f"{name:<24} {first:>6} {second:>6} {max_method_bytes(spark, qs[name](spark, sf_dir)):>12}")
+    print(f"{'TOTAL':<24} {sum(r[0] for r in runs.values()):>6} {sum(r[1] for r in runs.values()):>6}")
+
+
 def audit_one(name: str, df) -> list[str]:
     plan = df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -115,14 +161,17 @@ def audit_one(name: str, df) -> list[str]:
 
 
 def main() -> None:
-    plans = "--plans" in sys.argv
-    if plans:
-        sys.argv.remove("--plans")
+    mode = next((a for a in ("--plans", "--codegen") if a in sys.argv), None)
+    if mode:
+        sys.argv.remove(mode)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = [a for a in sys.argv[2:] if a != "full"]
     spark = get_spark("local[4]", shuffle_partitions=4, app_name="plan-audit")
-    if plans:
+    if mode == "--plans":
         dump_plans(spark, sf_dir, only or PLANS)
+        return
+    if mode == "--codegen":
+        codegen_census(spark, sf_dir, only or list(E.queries()))
         return
     qs = E.queries()
     smells: list[str] = []
