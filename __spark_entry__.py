@@ -1161,18 +1161,15 @@ def q_streaming_recombine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     # an availableNow query with registered ProcessingTimeTimeouts
-    # keeps scheduling timeout batches, so it never self-terminates:
-    # poll until every expected group (batch operator's count — the
-    # ground truth the oracle also computes) has landed, then stop
-    expected = q_recombine_conv(spark, sf_dir).count()
+    # keeps scheduling timeout batches, so it never self-terminates.
+    # It is done once a batch reads no input (the data is consumed)
+    # and the state operator holds no rows (every open group flushed)
     t0 = time.time()
-    while time.time() - t0 < 300:
-        try:
-            if spark.read.parquet(f"{work}/rec").count() >= expected:
-                break
-        except Exception:
-            pass
-        time.sleep(1)
+    while q.isActive and time.time() - t0 < 300:
+        p = q.lastProgress
+        if p and p["numInputRows"] == 0 and p["stateOperators"][0]["numRowsTotal"] == 0:
+            break
+        time.sleep(0.1)
     # stop between batches: a stop during a batch interrupts its state
     # store commit (CANNOT_WRITE_STATE_STORE). The gap between two
     # timeout batches is about a millisecond, so poll without sleeping

@@ -41,6 +41,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .durable import commit_json
 from .flagship import tagged_frame, write_routed
 
 BUCKET_COL = "_bucket"
@@ -85,10 +86,7 @@ class CheckpointedRunner:
         return out
 
     def _commit(self, bucket: int, lineage: dict) -> None:
-        tmp = self._ledger_path(bucket) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(lineage, f)
-        os.replace(tmp, self._ledger_path(bucket))  # atomic commit
+        commit_json(self._ledger_path(bucket), lineage)
 
     # ---- run --------------------------------------------------------
 

@@ -179,7 +179,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Duplicate-cluster resolution: near-dup PAIRS (the output of
     minhash_near_dups / simhash_near_dups / embedding_near_dups) ->
@@ -211,17 +210,8 @@ def connected_components(
         per node, so the label sum strictly decreases iff any label
         changed — one scalar per round with no compare-join. The sum
         is exact (DECIMAL(38,0), no bigint overflow at any id scale).
-    ``checkpoint_dir``: when set, rounds checkpoint RELIABLY
-    (``sparkContext.setCheckpointDir`` + ``DataFrame.checkpoint``) so
-    an executor loss replays from durable storage — the cluster-run
-    option; the default localCheckpoint is executor-local and right
-    for single-node runs. Two operational notes for that mode:
-    ``setCheckpointDir`` is SparkContext-global (other components'
-    checkpoints in the same session follow it), and superseded
-    round-k checkpoints are only garbage-collected with
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` —
-    without it, clean the directory after the job. Raises if max_iter rounds don't converge
-    (a pathological chain; raise max_iter for adversarial graphs)."""
+    Raises if max_iter rounds don't converge (a pathological chain;
+    raise max_iter for adversarial graphs)."""
     from pyspark.storagelevel import StorageLevel
 
     e = (
@@ -231,17 +221,6 @@ def connected_components(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
-    if checkpoint_dir is not None:
-        e.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _cut(df: DataFrame) -> DataFrame:
-        # reliable checkpoint is eager by default (a separate job);
-        # localCheckpoint stays lazy so the convergence action below
-        # materializes it — one job per round
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=False)
-
     def _sum(df: DataFrame) -> object:
         return df.agg(
             F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
@@ -250,11 +229,14 @@ def connected_components(
     # one-hop head start: init label = min(node, min neighbor) — the
     # same aggregation shape the old distinct() init paid, but the
     # first propagation round comes free, which at O(log d) total
-    # rounds is a full join+checkpoint round-trip saved
-    labels = _cut(
+    # rounds is a full join+checkpoint round-trip saved. Each round's
+    # localCheckpoint is lazy: the convergence sum materializes it, so
+    # a round is one job
+    labels = (
         e.groupBy(F.col("a").alias("node"))
         .agg(F.min("b").alias("_mn"))
         .select("node", F.least(F.col("node"), F.col("_mn")).alias("lbl"))
+        .localCheckpoint(eager=False)
     )
     prev_sum = _sum(labels)
     for _ in range(max_iter):
@@ -287,12 +269,13 @@ def connected_components(
         deref = labels.select(
             F.col("node").alias("lbl"), F.col("lbl").alias("_lbl2")
         )
-        prop = _cut(
+        prop = (
             hop.join(deref, "lbl", "left")
             .select(
                 "node",
                 F.coalesce(F.col("_lbl2"), F.col("lbl")).alias("lbl"),
             )
+            .localCheckpoint(eager=False)
         )
         cur_sum = _sum(prop)  # materializes the checkpoint too
         changed = cur_sum != prev_sum
@@ -308,6 +291,11 @@ def connected_components(
     )
 
 
+#: jaccard_ngram_pairs broadcasts its shingle index up to this many rows
+#: and takes the symmetric shuffle join above it
+BROADCAST_INDEX_MAX_ROWS = 8_000_000
+
+
 def jaccard_ngram_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -315,7 +303,6 @@ def jaccard_ngram_pairs(
     sim_num: int = 1,
     sim_den: int = 2,
     max_df: int | None = 10_000,
-    broadcast_index_max_rows: int = 8_000_000,
 ) -> DataFrame:
     """N-gram Jaccard near-duplicate pairs over the full shingle
     sets — no MinHash sampling. Exact except for the two trade-offs
@@ -359,8 +346,8 @@ def jaccard_ngram_pairs(
     branches that reuse it; without the persist Catalyst recomputes
     the scan+explode per branch, measured 12 parquet scans):
 
-      - index <= ``broadcast_index_max_rows`` (~25 bytes/row, so the
-        default 8M rows is a ~200 MB build): broadcast the b-side and
+      - index <= ``BROADCAST_INDEX_MAX_ROWS`` (~25 bytes/row, so 8M
+        rows is a ~200 MB build): broadcast the b-side and
         hash-partition the a-side by doc_a. The join probe then runs
         map-side and its output is ALREADY clustered by doc_a, so the
         pair aggregation needs NO exchange — the df^2 co-occurrence
@@ -401,7 +388,7 @@ def jaccard_ngram_pairs(
             "_h",
             "left_anti",
         )
-    small = idx_rows <= broadcast_index_max_rows
+    small = idx_rows <= BROADCAST_INDEX_MAX_ROWS
     idx = idx.join(F.broadcast(sizes) if small else sizes, "doc_id")
     a = idx.select(
         F.col("doc_id").alias("doc_a"), "_h", F.col("n_sh").alias("n_a")

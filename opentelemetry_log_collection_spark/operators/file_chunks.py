@@ -28,7 +28,7 @@ This module fixes both with the classic InputSplit recipe:
     whole-file path, not less;
   - resume: each file's identity is the md5 of its first
     ``FINGERPRINT_BYTES`` bytes (fingerprint.go:24-41's
-    first-N-bytes design). A JSON ledger (atomic os.replace commit,
+    first-N-bytes design). A JSON ledger (durable atomic commit,
     same scheme as checkpoint.py) maps fingerprint -> consumed byte
     offset + emitted line count; a re-run skips unchanged files,
     tails grown files from the stored offset with line numbers
@@ -55,6 +55,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..durable import commit_json
 
 FINGERPRINT_BYTES = 1000  # reference default fingerprint_size
 
@@ -113,10 +115,7 @@ class OffsetLedger:
         return {}
 
     def commit(self, entries: dict) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(entries, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.path)  # atomic, like checkpoint.py:_commit
+        commit_json(self.path, entries, indent=1, sort_keys=True)
 
 
 def list_files(include: list[str]) -> list[str]:

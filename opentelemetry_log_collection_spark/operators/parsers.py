@@ -12,8 +12,9 @@ exactly like the reference checks errors only after all sub-parsers
 ran (parser.go:171-184).
 
 Execution strategy per parser (the Spark-first part). Every parser
-builds JVM-side Catalyst expressions (whole-stage codegen, no Python
-worker), rendered as Spark SQL text in plain Python: the extraction,
+builds JVM-side Catalyst expressions (no Python worker; whole-stage
+codegen except ``from_json`` and the lambda functions, which are
+``CodegenFallback`` and run interpreted), rendered as Spark SQL text in plain Python: the extraction,
 the attribute-map refinement, the merge into ``parse_to``, the
 embedded sub-parsers and the error flag are each applied with one
 ``F.expr`` per projected column. The one Column built otherwise is
@@ -22,9 +23,9 @@ CSV's per-row header path:
                for fully ^-anchored patterns, else ``rlike`` + one
                ``regexp_extract`` per named group (pergroup_map). The
                pattern alone picks the strategy.
-  - json:      builtin ``from_json(map<string,string>)``; nested values
-               stay as their JSON text, the canonical map<string,string>
-               representation.
+  - json:      builtin ``from_json(map<string,string>)``, outside
+               whole-stage codegen; nested values stay as their JSON
+               text, the canonical map<string,string> representation.
   - csv:       builtin ``from_csv`` for a static header (codegen);
                pandas UDF when the header comes from an attribute
                per row (csv.go:106-121) or strict field-count checking
@@ -301,9 +302,11 @@ class JsonParserStage(ParserStage):
     stringify, nested objects/arrays stay as their JSON text (exactly
     the canonical map representation, section 1.4), and non-object
     JSON nulls out = the reference's error path (json.go:70-82). Runs
-    inside codegen — measured 2x end-to-end on the flagship at 32
-    cores against an Arrow-batched Python parser, whose workers
-    oversubscribe the box."""
+    in the JVM but not inside whole-stage codegen: ``from_json``
+    (``JsonToStructs``) is ``CodegenFallback`` in this Spark, so its
+    projection is evaluated interpreted. Still measured 2x end-to-end
+    on the flagship at 32 cores against an Arrow-batched Python
+    parser, whose workers oversubscribe the box."""
 
     def parse(self, src: str) -> str:
         return f"from_json({src}, {quote(MAP_SS_SQL)})"

@@ -42,13 +42,13 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..durable import commit_json
 from ..fields import MAP_SS
 from ..pipeline import Stage, register
 from .io import FileInputStage, stamp
@@ -214,10 +214,7 @@ class Bookmark:
             return {}
 
     def commit(self, marks: dict[str, int]) -> None:
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
-        with os.fdopen(fd, "w") as f:
-            json.dump(marks, f)
-        os.rename(tmp, self.path)
+        commit_json(self.path, marks)
 
 
 def _jstr(col: Column) -> Column:

@@ -1,6 +1,6 @@
 """Similarity search over an embedding column (array<float>).
 
-Two plans, per the standard ANN playbook:
+Two plan families, per the standard ANN playbook:
 
   - brute_force_topk: the exactness baseline. The (small) query set
     broadcasts; scoring is a map-side nested loop with the cosine
@@ -9,37 +9,52 @@ Two plans, per the standard ANN playbook:
     Cost: |corpus| x |queries| partial products, no corpus shuffle —
     right up to a few thousand queries.
 
-  - lsh_topk: the scale path. Random-hyperplane (sign) LSH buckets
-    both sides; candidates = bucket collisions (the corpus bucket
-    rows carry their vector, so scoring is map-side in the collision
-    stage); exact cosine re-rank within candidates. Recall is tunable
-    via n_planes/n_tables. Hyperplanes are derived deterministically
-    from a seed (md5 stream), never RNG state.
+  - the approximate family: lsh_topk (random-hyperplane sign buckets,
+    candidates = bucket collisions), ivf_topk (Voronoi cells around
+    sampled centroids, nprobe cells per query) and embedding_near_dups
+    (LSH candidates + exact threshold). Every Arrow stage of the family
+    calls ONE numpy kernel, ``_vector_kernel``: the exact left-fold
+    dots of a batch of vectors against a matrix of hyperplanes or
+    centroids, and the vectors' exact left-fold norms. LSH queries and
+    corpus rows bucket through the same function (``_lsh_buckets``),
+    and IVF queries and corpus rows take their cells from the same
+    function (``_ivf_cells``), so the two sides cannot disagree.
+    Hyperplanes are derived deterministically from a seed (md5
+    stream), never RNG state.
+
+Degenerate vectors. In the approximate family, a vector that is null,
+not exactly ``dim`` long, holds a null or non-finite element, or whose
+norm is zero (or overflows) is never bucketed, assigned, scored or
+returned: the kernel drops it before anything is stacked, in the query
+and the corpus position alike. Such a row can neither fail the job nor
+collide with anything, and the result equals the same call without it.
+brute_force_topk keeps the builtin expressions' semantics (a null
+vector scores a null sim).
 
 All math is done in DOUBLE after an explicit cast from float32 —
 identical left-to-right IEEE ops in any engine, so oracle checks can
-reproduce scores bit-for-bit.
+reproduce scores bit-for-bit. The kernel adds its products in the
+same k order as ``dot``'s fold, so its dots and norms are the doubles
+the builtin expressions compute.
 
 Expression notes (measured at 10x bench scale, BENCH.md r6):
   - per-vector norms are computed once per ROW, never once per pair:
     ``sqrt(dot(v,v))`` yields the same double either way, so
     ``dot(a,b)/(na*nb)`` is bit-identical to the naive per-pair
-    ``cosine`` and drops 2 of the 3 fold evaluations per scored pair
+    cosine and drops 2 of the 3 fold evaluations per scored pair
     (brute-force top-k 3.6s -> 1.3s);
   - the dot stays the zip_with+aggregate HOF form everywhere: an
     unrolled ``element_at(a,i)*element_at(b,i)`` chain is ~190
     expression nodes, which join operators evaluate INTERPRETED
     (BroadcastNestedLoopJoin does not whole-stage-codegen its
-    projections: measured 4.5s vs 1.3s for the same top-k), and a
-    projection holding several unrolled dots (bucket keys, centroid
-    panels) overflows codegen entirely and falls back to interpreted
-    evaluation for every row.
+    projections: measured 4.5s vs 1.3s for the same top-k).
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -65,8 +80,34 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vid, vv): the id and the vector as array<double>."""
+    return df.select(
+        F.col(id_col).alias("vid"), _dvec(F.col(vec_col)).alias("vv")
+    )
+
+
+def _scored(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, sim) from (query_id, qv, nq,
+    neighbor_id, cv, nc) pairs: the builtin fold ``dot`` over the
+    precomputed norms, a query never its own neighbor."""
+    return pairs.filter(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id",
+        "neighbor_id",
+        (dot(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("nc"))).alias("sim"),
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """ONE window per-query top-k; ties broken by neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "sim")
+    )
 
 
 def brute_force_topk(
@@ -87,25 +128,50 @@ def brute_force_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _dvec(F.col(vec_col)).alias("cv")
     ).withColumn("nc", norm(F.col("cv")))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("nc"))).alias(
-                "sim"
-            ),
-        )
+    return _top_k(_scored(c.crossJoin(F.broadcast(q))), k)
+
+
+# --------------------------------------------------------------------
+# the approximate family's vector kernel
+# --------------------------------------------------------------------
+
+
+def _left_fold(a, b):
+    """``((0.0 + a1*b1) + a2*b2) + ...`` over the last axis, added in k
+    order: the doubles ``dot`` folds, bit for bit. Broadcasts, so this
+    one loop serves vector-by-matrix panels, norms and pair dots."""
+    import numpy as np
+
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for k in range(a.shape[-1]):
+        acc += a[..., k] * b[..., k]
+    return acc
+
+
+def _vector_kernel(vecs, M):
+    """The approximate family's one vector kernel.
+
+    ``vecs`` is a batch of array<double> cells as Arrow hands them to
+    pandas (an object array of numpy arrays; a null vector is None, a
+    null element NaN); ``M`` is an (m, dim) matrix of hyperplanes or
+    centroids. The degenerate-vector rule (module docstring) is applied
+    before anything is stacked. Returns ``(keep, V, norms, dots)``: the
+    mask of the kept rows of ``vecs``, those vectors stacked (n, dim),
+    their left-fold norms (n,) and their left-fold dots against every
+    row of ``M`` (n, m)."""
+    import numpy as np
+
+    dim = M.shape[1]
+    keep = np.fromiter(
+        (v is not None and len(v) == dim for v in vecs), bool, len(vecs)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "sim")
-    )
+    V = np.stack(vecs[keep]) if keep.any() else np.empty((0, dim))
+    with np.errstate(over="ignore", invalid="ignore"):
+        norms = np.sqrt(_left_fold(V, V))
+    ok = np.isfinite(V).all(axis=1) & np.isfinite(norms) & (norms > 0)
+    keep[keep] = ok
+    V, norms = V[ok], norms[ok]
+    return keep, V, norms, _left_fold(V[:, None, :], M[None, :, :])
 
 
 # --------------------------------------------------------------------
@@ -134,42 +200,46 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def bucket_col(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit string over the hyperplanes — the LSH bucket key.
+def _lsh_buckets(v: DataFrame, tables: list[list[list[float]]]) -> DataFrame:
+    """(vid, vv) -> (tbl, bucket, vid, vv, nv): one row per hash table
+    for every vector the kernel keeps, in ONE mapInPandas stage. The
+    bucket key is the table's sign bits, '1' where the plane dot is
+    >= 0; ``nv`` is the vector's norm. LSH queries and corpus rows both
+    bucket here. The vid type is the input's."""
+    import pandas as pd
 
-    Deliberately the HOF dot, not the unrolled form: a bucket
-    projection evaluates n_planes x n_tables dots in ONE projection,
-    and unrolling all of them produces a multi-thousand-node
-    expression tree that overflows codegen into interpreted
-    evaluation (measured 2x slower end-to-end). Unrolling only pays
-    when a projection holds a single dot."""
-    bits = [
-        F.when(dot(vec, F.array(*[F.lit(x) for x in plane])) >= 0, F.lit("1"))
-        .otherwise(F.lit("0"))
-        for plane in planes
-    ]
-    return F.concat(*bits)
+    planes = [p for t in tables for p in t]
+    n_pl = len(tables[0])
+    id_ddl = v.schema["vid"].dataType.simpleString()
 
+    def buckets(batches):
+        import numpy as np
 
-def _fold_plane_bits(V, P):
-    """Exact left-fold dot of every (vector, plane) pair and the LSH
-    sign bits, shared by the numpy bucket stages (lsh_topk corpus side
-    and embedding_near_dups).
+        P = np.array(planes, dtype=np.float64)  # (n_tables*n_pl, dim)
+        for pdf in batches:
+            vv = pdf["vv"].to_numpy()
+            keep, _, nv, dots = _vector_kernel(vv, P)
+            if not keep.any():
+                continue
+            bits = np.where(dots >= 0.0, "1", "0")
+            ids, vv = pdf["vid"].to_numpy()[keep], vv[keep]
+            yield pd.concat(
+                pd.DataFrame(
+                    {
+                        "tbl": t,
+                        "bucket": ["".join(r) for r in bits[:, t * n_pl:(t + 1) * n_pl]],
+                        "vid": ids,
+                        "vv": vv,
+                        "nv": nv,
+                    }
+                )
+                for t in range(len(tables))
+            )
 
-    The k-ordered sequential adds reproduce the HOF fold's doubles
-    bit-for-bit, and the sign test follows SPARK's comparison
-    semantics: NaN orders greater than every double, so ``NaN >= 0``
-    is TRUE and a NaN dot signs '1' — ``np.where(acc >= 0)`` alone
-    would sign it '0' and silently move NaN-poisoned vectors to a
-    different bucket than the expression form (caught in review with
-    a live repro). Returns (acc, bits)."""
-    import numpy as np
-
-    acc = np.zeros((len(V), P.shape[0]))
-    for k in range(P.shape[1]):
-        acc += np.outer(V[:, k], P[:, k])
-    bits = np.where((acc >= 0.0) | np.isnan(acc), "1", "0")
-    return acc, bits
+    return v.mapInPandas(
+        buckets,
+        schema=f"tbl int, bucket string, vid {id_ddl}, vv array<double>, nv double",
+    )
 
 
 def _drop_megabuckets(b: DataFrame, max_bucket_size: int) -> DataFrame:
@@ -202,161 +272,91 @@ def lsh_topk(
     dedup of the (tiny) scored candidate set and the per-query rank.
 
     Scale shape (the parts that survive 100 TB):
-      - the corpus bucket rows carry their vector, so the per-table
-        collision probe (queries broadcast) computes the exact cosine
-        IN the probe stage — no candidate-id shuffle, no re-attach
-        join; the corpus never shuffles at all here;
+      - queries and corpus rows bucket through the same kernel stage
+        (``_lsh_buckets``: exact left-fold plane dots, so a vector gets
+        the same key in either position); the corpus bucket rows carry
+        their vector and norm, so the per-table collision probe
+        (queries broadcast) computes the exact cosine IN the probe
+        stage — no candidate-id shuffle, no re-attach join; the corpus
+        never shuffles at all here;
       - a pair colliding in several tables yields bit-identical sims,
         so the dedup is a ``distinct`` over the scored rows —
-        proportional to candidate count, and AFTER the collision
-        stage's threshold-free projection the scored set is small
-        (queries x mean bucket size x tables);
+        proportional to candidate count (queries x mean bucket size x
+        tables);
       - ``max_bucket_size`` drops corpus-side mega-buckets (hash
         regions so dense they would go quadratic) via a broadcast
         anti-join against the oversized set; skipping them costs
         recall on degenerate near-constant regions only — the
         standard LSH guardrail.
 
-    Missing neighbors (hash misses) are the accepted approximation;
-    recall is tunable via n_planes/n_tables (measured in
+    A degenerate vector (null, not ``dim`` long, a null or non-finite
+    element, zero norm) is neither a query nor a candidate: it gets no
+    bucket and no row. Missing neighbors (hash misses) are the accepted
+    approximation; recall is tunable via n_planes/n_tables (measured in
     tests/test_training_ops.py::test_lsh_recall_vs_brute_force)."""
-    import pandas as pd
-
     from pyspark.storagelevel import StorageLevel
 
     tables = [_hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
-
-    def all_buckets(vec: Column) -> Column:
-        return F.posexplode(
-            F.array(*[bucket_col(vec, planes) for planes in tables])
-        )
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("qv")
-    ).withColumn("nq", norm(F.col("qv")))
-    # query side: a handful of rows — the HOF projection is fine there
-    qb = q.select(
-        "query_id", "qv", "nq", all_buckets(F.col("qv")).alias("tbl", "bucket")
+    qb = _lsh_buckets(_vectors(queries, id_col, vec_col), tables).select(
+        "tbl", "bucket", F.col("vid").alias("query_id"),
+        F.col("vv").alias("qv"), F.col("nv").alias("nq"),
     )
-    # corpus bucket rows keep their vector: scoring happens in the
-    # collision stage, so no candidate-id dedup shuffle and no
-    # re-attach join ever carries the corpus. The bucket projection
-    # itself runs as ONE mapInPandas stage with EXACT left-fold plane
-    # dots and norms (_fold_plane_bits: same sequential-add order the
-    # HOF fold evaluates, same NaN-signs-'1' comparison semantics) —
-    # the n_planes x n_tables HOF dots were ~85% of the query wall
-    # at 10x bench scale (BENCH.md r6). Residual NaN caveat: a vector
-    # CONTAINING NaN gets a NaN norm, which Arrow surfaces to Spark
-    # as null — such degenerate rows score a null sim (ranked last)
-    # where the pure-expression form ranked their NaN sim first.
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _dvec(F.col(vec_col)).alias("cv")
-    )
-    id_ddl = c.schema["neighbor_id"].dataType.simpleString()
-    planes_flat = [p for planes in tables for p in planes]
-    n_pl, n_tab = n_planes, n_tables
-
-    def corpus_buckets(batches):
-        import numpy as np
-
-        P = np.array(planes_flat, dtype=np.float64)  # (n_tab*n_pl, dim)
-        dim_p = P.shape[1]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cv = pdf["cv"].to_numpy()
-            ok = np.array(
-                [v is not None and len(v) == dim_p for v in cv], dtype=bool
-            )
-            frames = []
-            if ok.any():
-                V = np.stack(cv[ok])
-                _, bits = _fold_plane_bits(V, P)
-                # exact left-fold sum of squares, same k-order
-                accn = np.zeros(len(V))
-                for k in range(dim_p):
-                    accn += V[:, k] * V[:, k]
-                nc = np.sqrt(accn)
-                ids = pdf["neighbor_id"].to_numpy()[ok]
-                for t in range(n_tab):
-                    key = bits[:, t * n_pl:(t + 1) * n_pl]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "neighbor_id": ids,
-                                "cv": cv[ok],
-                                "nc": nc,
-                                "tbl": t,
-                                "bucket": ["".join(r) for r in key],
-                            }
-                        )
-                    )
-            bad = np.flatnonzero(~ok)
-            if len(bad):
-                # null vector or length != dim: every plane-dot folds a
-                # null product, so the expression form bucketed these
-                # rows at all-"0" bits; norms still fold their own
-                # squares (null norm for a null vector). Built as ONE
-                # frame per table with an explicit float dtype — a
-                # per-row all-None frame trips pandas' deprecated
-                # all-NA concat dtype inference.
-                bids, bcv, bnc = [], [], []
-                for i in bad:
-                    v = cv[i]
-                    nrm = np.nan
-                    if v is not None:
-                        a = 0.0
-                        for x in v:
-                            a += float(x) * float(x)
-                        nrm = float(np.sqrt(a))
-                    bids.append(pdf["neighbor_id"].iloc[i])
-                    bcv.append(v)
-                    bnc.append(nrm)
-                for t in range(n_tab):
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "neighbor_id": bids,
-                                "cv": bcv,
-                                "nc": np.array(bnc, dtype=np.float64),
-                                "tbl": t,
-                                "bucket": "0" * n_pl,
-                            }
-                        )
-                    )
-            yield pd.concat(frames)
-
-    cb = c.mapInPandas(
-        corpus_buckets,
-        schema=(
-            f"neighbor_id {id_ddl}, cv array<double>, nc double, "
-            "tbl int, bucket string"
-        ),
+    cb = _lsh_buckets(_vectors(corpus, id_col, vec_col), tables).select(
+        "tbl", "bucket", F.col("vid").alias("neighbor_id"),
+        F.col("vv").alias("cv"), F.col("nv").alias("nc"),
     )
     if max_bucket_size is not None:
         # the guard aggregation and the probe both read the bucket
         # frame — persist so the scan+bucket projection runs once
         cb = cb.persist(StorageLevel.MEMORY_AND_DISK)
         cb = _drop_megabuckets(cb, max_bucket_size)
-    scored = (
-        cb.join(F.broadcast(qb), ["tbl", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("nc"))).alias(
-                "sim"
-            ),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "sim")
+    # a pair colliding in several tables scores bit-identical sims, so
+    # the distinct collapses it exactly
+    return _top_k(_scored(cb.join(F.broadcast(qb), ["tbl", "bucket"])).distinct(), k)
+
+
+# --------------------------------------------------------------------
+# IVF-flat
+# --------------------------------------------------------------------
+
+
+def _ivf_cells(v: DataFrame, C, cn, n: int) -> DataFrame:
+    """(vid, vv) -> (vid, vv, nv, cell): one row for each of the ``n``
+    cells whose centroid is nearest by cosine, for every vector the
+    kernel keeps, in ONE mapInPandas stage. ``C`` holds the centroids
+    in cell order and ``cn`` their norms; equal sims go to the later
+    cell (the oracle's ``ORDER BY sim DESC, cid DESC``). Corpus rows
+    (n=1) and queries (n=nprobe) both take their cells here. The vid
+    type is the input's."""
+    import pandas as pd
+
+    id_ddl = v.schema["vid"].dataType.simpleString()
+    m = len(C)
+
+    def cells(batches):
+        import numpy as np
+
+        for pdf in batches:
+            vv = pdf["vv"].to_numpy()
+            keep, _, nv, dots = _vector_kernel(vv, C)
+            if not keep.any():
+                continue
+            sims = dots / np.outer(nv, cn)
+            # stable sort of the reversed panel: sim descending, the
+            # later cell first among equals
+            top = m - 1 - np.argsort(-sims[:, ::-1], axis=1, kind="stable")[:, :n]
+            r = top.shape[1]
+            yield pd.DataFrame(
+                {
+                    "vid": np.repeat(pdf["vid"].to_numpy()[keep], r),
+                    "vv": np.repeat(vv[keep], r),
+                    "nv": np.repeat(nv, r),
+                    "cell": top.ravel(),
+                }
+            )
+
+    return v.mapInPandas(
+        cells, schema=f"vid {id_ddl}, vv array<double>, nv double, cell int"
     )
 
 
@@ -371,160 +371,61 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF-flat approximate top-k: partition the corpus into
     ``n_cells`` Voronoi cells around deterministically SAMPLED
-    centroids (the first ``n_cells`` corpus vectors — sampling is a
-    standard IVF centroid init and keeps the whole plan replayable in
-    a SQL oracle), probe the ``nprobe`` cells nearest each query, and
-    exact-re-rank the candidates.
+    centroids (the corpus rows whose id, read as an integer, is below
+    ``n_cells`` — sampling is a standard IVF centroid init and keeps
+    the whole plan replayable in a SQL oracle), probe the ``nprobe``
+    cells nearest each query, and exact-re-rank the candidates.
 
     Scale shape:
       - the centroid table is metadata-sized (n_cells rows), so it is
-        collected once; cell assignment then runs as ONE
-        ``mapInPandas`` stage over the corpus — EXACT left-fold dots
-        and IEEE sqrt/divide reproduce, bit-for-bit, the
-        ``max(struct(csim, cid))`` the aggregate form computed
-        (including the max-cid tie order) — so the corpus is scanned
-        once, never shuffled, and never blown up 16x through a
-        centroid crossJoin (the aggregate form materialized
-        |corpus| x n_cells rows; carrying the vector through it cost
-        ~0.5 KB per row);
+        collected once; cell assignment then runs as ONE kernel stage
+        over the corpus (``_ivf_cells``) — the corpus is scanned once,
+        never shuffled, and never blown up n_cells-fold through a
+        centroid crossJoin. Queries take their ``nprobe`` cells from
+        the same stage;
       - the assigned rows keep their vector + norm, and the probe
         table (queries x nprobe, with query vectors) broadcasts into
         the candidate join, so candidates go straight to the re-rank
         with both vectors already in the row — zero corpus shuffles
         end to end.
     Cells are Voronoi regions, so each corpus vector lives in EXACTLY
-    one cell — no cross-table dedup is needed (unlike LSH).
-    Recall is tuned by nprobe/n_cells; ties break deterministically
-    (max cell id on equal sim, min neighbor_id on equal rank)."""
+    one cell. Recall is tuned by nprobe/n_cells; ties break
+    deterministically (later cell on equal sim, lower neighbor_id on
+    equal rank).
+
+    A degenerate vector (null, not the centroids' length, a null or
+    non-finite element, zero norm) is neither a centroid, a query nor a
+    candidate: it is assigned no cell and returns no row. The
+    centroids' length is the one most centroid rows share."""
+    import numpy as np
     import pandas as pd
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("qv")
-    ).withColumn("nq", norm(F.col("qv")))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _dvec(F.col(vec_col)).alias("cv")
-    )
-    # metadata-sized collect: n_cells centroid vectors. A null
-    # embedding among the centroid ids is skipped — the aggregate form
-    # scored it as null csim, which never won the (csim, cid) max, so
-    # excluding it from the panel assigns identically.
-    cents = sorted(
-        (r["cid"], list(r["cent"]))
-        for r in corpus.filter(F.col(id_col) < n_cells)
+    cands = [
+        np.array(r["cent"], dtype=np.float64)
+        for r in corpus.filter(F.col(id_col).try_cast("long") < n_cells)
         .select(F.col(id_col).alias("cid"), _dvec(F.col(vec_col)).alias("cent"))
+        .orderBy("cid")
         .collect()
         if r["cent"] is not None
-    )
-
-    def assign_cells(batches):
-        import numpy as np
-
-        cids = np.array([cid for cid, _ in cents], dtype=np.int64)
-        C = np.array([v for _, v in cents], dtype=np.float64)  # (m, d)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["cv"].to_numpy())
-            n, d = V.shape
-            # exact left-fold dots and sums of squares
-            acc = np.zeros((n, len(cents)))
-            accn = np.zeros(n)
-            for k in range(d):
-                acc += np.outer(V[:, k], C[:, k])
-                accn += V[:, k] * V[:, k]
-            nc = np.sqrt(accn)
-            # centroid norms exactly: left-fold of squares
-            accc = np.zeros(len(cents))
-            for k in range(d):
-                accc += C[:, k] * C[:, k]
-            cn = np.sqrt(accc)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = acc / np.outer(nc, cn)
-            # max(struct(csim, cid)): among max-sim cells, take max cid.
-            # Spark orders NaN greater than every double, so NaN sims
-            # map to +inf before the max.
-            simsf = np.where(np.isnan(sims), np.inf, sims)
-            maxv = simsf.max(axis=1)
-            is_max = simsf == maxv[:, None]
-            cid_pick = np.where(is_max, cids[None, :], np.int64(-1)).max(axis=1)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                    "cv": pdf["cv"].to_numpy(),
-                    "nc": nc,
-                    "cid": cid_pick,
-                }
-            )
-
-    assign = c.mapInPandas(
-        assign_cells,
-        schema="neighbor_id long, cv array<double>, nc double, cid long",
-    )
-    if not cents:
-        # empty result with the id columns' REAL types (an id_col of
-        # another type must not come back as a hardcoded long)
-        return (
-            q.crossJoin(c.limit(0))
-            .select(
-                "query_id",
-                F.lit(1).cast("int").alias("rank"),
-                "neighbor_id",
-                F.lit(0.0).alias("sim"),
-            )
-            .limit(0)
-        )
-    cent_arr = [
-        (cid, F.array(*[F.lit(float(x)) for x in cvec])) for cid, cvec in cents
     ]
-    # query-side centroid scoring: a handful of rows — the HOF dot
-    # keeps the n_cells-struct projection tree codegen-sized
-    qscore = q.select(
-        "query_id", "qv", "nq",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(cid).alias("cid"),
-                        (
-                            dot(F.col("qv"), arr)
-                            / (F.col("nq") * F.sqrt(dot(arr, arr)))
-                        ).alias("qsim"),
-                    )
-                    for cid, arr in cent_arr
-                ]
-            )
-        ).alias("s"),
-    ).select(
-        "query_id", "qv", "nq",
-        F.col("s.cid").alias("cid"), F.col("s.qsim").alias("qsim"),
+    dim = Counter(map(len, cands)).most_common(1)[0][0] if cands else 0
+    _, C, cn, _ = _vector_kernel(
+        pd.Series(cands, dtype=object).to_numpy(), np.empty((0, dim))
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("qsim").desc(), F.col("cid").desc()
+    probes = _ivf_cells(_vectors(queries, id_col, vec_col), C, cn, nprobe).select(
+        F.col("vid").alias("query_id"), F.col("vv").alias("qv"),
+        F.col("nv").alias("nq"), "cell",
     )
-    probes = (
-        qscore.withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= nprobe)
-        .select("query_id", "qv", "nq", "cid")
+    assign = _ivf_cells(_vectors(corpus, id_col, vec_col), C, cn, 1).select(
+        F.col("vid").alias("neighbor_id"), F.col("vv").alias("cv"),
+        F.col("nv").alias("nc"), "cell",
     )
-    rescored = (
-        assign.join(F.broadcast(probes), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("nc"))).alias(
-                "sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "sim")
-    )
+    return _top_k(_scored(assign.join(F.broadcast(probes), "cell")), k)
+
+
+# --------------------------------------------------------------------
+# embedding near-duplicates
+# --------------------------------------------------------------------
 
 
 def embedding_near_dups(
@@ -541,134 +442,68 @@ def embedding_near_dups(
     """Embedding-cosine near-duplicate pairs via LSH candidates +
     exact threshold: (doc_a, doc_b, sim) with doc_a < doc_b.
 
-    Plan shape: the bucket rows carry their vector (and precomputed
-    norm), so the per-bucket self-join computes the exact cosine and
-    applies the threshold IN the collision stage — the candidate
-    stream never crosses an exchange, and the only dedup is a
-    ``distinct`` over the (tiny) above-threshold result; a pair
-    colliding in several tables produces bit-identical sims, so the
-    distinct collapses them exactly. (The previous plan deduped the
-    FULL candidate set — millions of (id, id) rows through a shuffle —
-    then re-attached both vectors with two more shuffled joins; at
-    10x bench scale that was ~28s vs ~2s for this shape.)
+    Plan shape (hand whole batches to vectorized native code, move the
+    payload once):
 
-    Plan shape (guide §4.2/§8 — hand whole batches to vectorized
-    native code, move the payload once):
-
-      1. ONE ``mapInPandas`` stage computes every table's bucket key
-         per vector with EXACT left-fold plane dots (64 sequential
-         vectorized adds — bit-for-bit the sign Spark's fold computes,
-         so bucket membership is identical) and emits the exploded
-         (tbl, bucket, vid, vv) rows.
+      1. ONE kernel stage (``_lsh_buckets``, the one lsh_topk uses)
+         computes every table's bucket key and the norm per vector and
+         emits the exploded (tbl, bucket, vid, vv, nv) rows.
       2. ONE shuffle groups by (tbl, bucket); ``applyInPandas`` scores
          each bucket as a matrix: a blocked BLAS gram over normalized
          vectors prefilters at ``threshold - 1e-6`` (BLAS error for
          64-dim doubles is ~1e-14, so no true pair is lost), then the
          surviving pairs are re-verified with the EXACT left-fold
-         dot/norms — the returned sims are bit-identical to the
-         builtin-expression form.
+         dot over the carried norms — the returned sims are
+         bit-identical to the builtin-expression form.
       3. a ``distinct`` collapses pairs found in several tables
          (identical sims), proportional to the RESULT size.
 
-    The previous plans either shuffled the full candidate-id stream
-    (millions of (id,id) rows through a distinct + two re-attach
-    joins: ~28s at 10x bench scale) or materialized both vectors on
-    every collision row through the self-join (~1 KB/pair x 10M
-    pairs: worse). Here vectors cross the wire exactly once and pairs
-    never do; per-bucket scoring is O(n_b^2 * dim) BLAS flops.
+    Vectors cross the wire exactly once and pairs never do (the plans
+    before this one shuffled the full candidate-id stream, ~28s vs ~2s
+    at 10x bench scale); per-bucket scoring is O(n_b^2 * dim) BLAS
+    flops.
 
     ``max_bucket_size`` is enforced INSIDE the scorer (an oversized
     group emits nothing — same semantics as dropping its rows before
     the join): a near-constant embedding region would make scoring
     quadratic, so skipping such buckets trades recall only on
-    degenerate regions."""
+    degenerate regions.
+
+    A degenerate vector (null, not ``dim`` long, a null or non-finite
+    element, zero norm) gets no bucket, so it is in no pair. The doc id
+    type is the input's."""
     import pandas as pd
 
     tables = [_hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
-    v = df.select(
-        F.col(id_col).alias("vid"), _dvec(F.col(vec_col)).alias("vv")
-    )
-    planes_flat = [p for planes in tables for p in planes]
-    n_planes_per = n_planes
-    n_tab = n_tables
+    b = _lsh_buckets(_vectors(df, id_col, vec_col), tables)
+    id_ddl = b.schema["vid"].dataType.simpleString()
     thr = float(threshold)
     cap = max_bucket_size
-
-    def explode_buckets(batches):
-        import numpy as np
-
-        P = np.array(planes_flat, dtype=np.float64)  # (n_tab*n_planes, dim)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["vv"].to_numpy())
-            # exact left-fold dots + Spark-semantics sign bits
-            # (NaN signs '1' — see _fold_plane_bits)
-            _, bits = _fold_plane_bits(V, P)
-            out = []
-            for t in range(n_tab):
-                key = bits[:, t * n_planes_per:(t + 1) * n_planes_per]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "tbl": t,
-                            "bucket": ["".join(r) for r in key],
-                            "vid": pdf["vid"].to_numpy(),
-                            "vv": pdf["vv"].to_numpy(),
-                        }
-                    )
-                )
-            yield pd.concat(out)
-
-    b = v.mapInPandas(
-        explode_buckets,
-        schema="tbl int, bucket string, vid long, vv array<double>",
-    )
 
     def score(pdf):
         import numpy as np
 
-        empty = pd.DataFrame({"doc_a": [], "doc_b": [], "sim": []}).astype(
-            {"doc_a": "int64", "doc_b": "int64", "sim": "float64"}
-        )
+        ids = pdf["vid"].to_numpy()
         n = len(pdf)
         if n < 2 or (cap is not None and n > cap):
-            return empty
+            return pd.DataFrame(
+                {"doc_a": ids[:0], "doc_b": ids[:0], "sim": np.empty(0)}
+            )
         V = np.stack(pdf["vv"].to_numpy())
-        ids = pdf["vid"].to_numpy()
-        d = V.shape[1]
-        # exact norms: left-fold sum of squares, then IEEE sqrt —
-        # the same doubles the builtin sqrt(fold) computes
-        accn = np.zeros(n)
-        sq = V * V
-        for k in range(d):
-            accn += sq[:, k]
-        norms = np.sqrt(accn)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            Vn = V / norms[:, None]
-        Vn = np.nan_to_num(Vn)
+        norms = pdf["nv"].to_numpy()
+        Vn = V / norms[:, None]
         ia_all, ib_all = [], []
-        blk = max(1, (1 << 24) // max(n, 1))
+        blk = max(1, (1 << 24) // n)
         for i0 in range(0, n, blk):
-            g = Vn[i0:i0 + blk] @ Vn.T
-            cand = np.argwhere(g >= thr - 1e-6)
-            if len(cand):
-                ia_all.append(cand[:, 0] + i0)
-                ib_all.append(cand[:, 1])
-        if not ia_all:
-            return empty
+            cand = np.argwhere(Vn[i0:i0 + blk] @ Vn.T >= thr - 1e-6)
+            ia_all.append(cand[:, 0] + i0)
+            ib_all.append(cand[:, 1])
         ia = np.concatenate(ia_all)
         ib = np.concatenate(ib_all)
         keep = ids[ia] < ids[ib]
         ia, ib = ia[keep], ib[keep]
-        if not len(ia):
-            return empty
-        # exact re-verify: left-fold dot, exact norms, one divide
-        prod = V[ia] * V[ib]
-        acc = np.zeros(len(ia))
-        for k in range(d):
-            acc += prod[:, k]
-        sim = acc / (norms[ia] * norms[ib])
+        # exact re-verify: left-fold dot, carried norms, one divide
+        sim = _left_fold(V[ia], V[ib]) / (norms[ia] * norms[ib])
         keep = sim >= thr
         return pd.DataFrame(
             {"doc_a": ids[ia[keep]], "doc_b": ids[ib[keep]], "sim": sim[keep]}
@@ -676,6 +511,8 @@ def embedding_near_dups(
 
     return (
         b.groupBy("tbl", "bucket")
-        .applyInPandas(score, schema="doc_a long, doc_b long, sim double")
+        .applyInPandas(
+            score, schema=f"doc_a {id_ddl}, doc_b {id_ddl}, sim double"
+        )
         .distinct()
     )

@@ -1,12 +1,14 @@
-"""The A/B tool's pure parts (`tools/ab_bench.py`): run schedule,
-status rules and the metric list it reads from BENCHMARK.json. Runs
-neither Spark nor git."""
+"""The A/B tool's parts that run no benchmark (`tools/ab_bench.py`): run
+schedule, status rules, the metric list it reads from BENCHMARK.json,
+and the copy of the working tree the change side runs from (on a
+throwaway git repository). Runs no Spark."""
 
 from __future__ import annotations
 
 import importlib.util
 import json
 import os
+import subprocess
 
 import pytest
 
@@ -105,3 +107,25 @@ def test_metrics_come_from_benchmark_json(capsys):
         assert row.endswith("worse" if m["better"] == "lower" else "gain")
     for m in bench["per_layer"]:
         assert rows[m["name"]].endswith(m["unit"])
+
+
+def test_change_side_copies_tracked_and_unignored_files(tmp_path):
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    (src / "pkg").mkdir(parents=True)
+    files = {".gitignore": "*.log\nout/\n", "pkg/a.py": "a = 1\n",
+             "gone.py": "", "kept.py": "k = 1\n"}
+    for name, text in files.items():
+        (src / name).write_text(text)
+    for cmd in (["init", "-q"], ["add", "-A"],
+                ["-c", "user.name=t", "-c", "user.email=t@t", "commit", "-qm", "x"]):
+        subprocess.run(["git", *cmd], cwd=src, check=True, capture_output=True)
+    (src / "pkg/a.py").write_text("a = 2\n")         # edited, uncommitted
+    (src / "gone.py").unlink()                        # deleted, uncommitted
+    (src / "pkg/new.py").write_text("n = 1\n")       # untracked
+    (src / "run.log").write_text("ignored\n")        # ignored
+    (src / "out").mkdir()
+    (src / "out/x.json").write_text("{}")             # ignored directory
+    ab.copy_tree(str(src), str(dst))
+    got = {str(p.relative_to(dst)) for p in dst.rglob("*") if p.is_file()}
+    assert got == {".gitignore", "kept.py", "pkg/a.py", "pkg/new.py"}
+    assert (dst / "pkg/a.py").read_text() == "a = 2\n"

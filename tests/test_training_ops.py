@@ -538,6 +538,27 @@ def test_jaccard_ngram_pairs_max_df_drops_stop_shingles(spark):
     assert capped.count() == 0
 
 
+def test_jaccard_ngram_pairs_shuffle_plan_equals_broadcast_plan(
+    spark, docs, monkeypatch
+):
+    """An index over BROADCAST_INDEX_MAX_ROWS takes the symmetric
+    shuffle join, repartitioned on (doc_a, doc_b); it returns the rows
+    of the broadcast plan."""
+
+    def run():
+        out = dedup.jaccard_ngram_pairs(docs, sim_num=1, sim_den=2)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        keys = [ln for ln in plan.splitlines() if "RepartitionByExpression" in ln]
+        return sorted(tuple(r) for r in out.collect()), keys
+
+    broadcast_rows, keys = run()
+    assert keys and "doc_b" not in keys[0]
+    monkeypatch.setattr(dedup, "BROADCAST_INDEX_MAX_ROWS", 0)
+    shuffle_rows, keys = run()
+    assert keys and "doc_b" in keys[0]
+    assert shuffle_rows == broadcast_rows and len(broadcast_rows) == 3
+
+
 def test_redact_pii_rules_and_counts(spark):
     rows = [
         (1, "mail bob.smith+x@corp-mail.example.org now"),

@@ -5,8 +5,11 @@ Usage, from anywhere inside the repository:
     python3 tools/ab_bench.py [PARENT] [--seeds 1-10] [--workload W]
 
 PARENT (default ``HEAD``) is checked out with ``git worktree add
---detach`` into a temporary directory; the change side is the working
-tree as it stands, uncommitted edits included. For each workload in
+--detach`` into a temporary directory; the change side is a temporary
+copy of the working tree as it stands: its tracked files, uncommitted
+edits included, and its untracked files that git does not ignore. So
+neither side runs from the main checkout, and neither inherits its
+caches or bench output. For each workload in
 BENCHMARK.json (or each one ``--workload`` names), the benchmark command
 runs once per seed on each side with ``--trace 0``, the side that runs
 first alternating by seed, then once per side with ``--trace 1``. Each
@@ -29,8 +32,8 @@ wins, the bound and a status:
 Metric names, directions and bounds are read from BENCHMARK.json. Each
 parsed run is appended to ``.bench_out/ab_bench-<time>.jsonl``. The
 exit status is non-zero when a run crashes or is incorrect, or when the
-change fails a larger share of ops than the parent. The worktree is
-removed on exit, on an exception and on Ctrl-C or SIGTERM.
+change fails a larger share of ops than the parent. The worktree and
+the copy are removed on exit, on an exception and on Ctrl-C or SIGTERM.
 """
 
 from __future__ import annotations
@@ -111,6 +114,18 @@ def describe(tree: str) -> str:
     return f"{git('rev-parse', '--short', 'HEAD', cwd=tree)} ({dirty})"
 
 
+def copy_tree(src: str, dst: str) -> None:
+    """Copy ``src``'s working tree into ``dst``: the tracked files as
+    they stand on disk and the untracked files that are not ignored."""
+    names = git("ls-files", "-z", "--cached", "--others", "--exclude-standard", cwd=src)
+    for name in filter(None, names.split("\0")):
+        path = os.path.join(src, name)
+        if not os.path.lexists(path):  # a tracked file deleted in the tree
+            continue
+        os.makedirs(os.path.dirname(os.path.join(dst, name)), exist_ok=True)
+        shutil.copy2(path, os.path.join(dst, name), follow_symlinks=False)
+
+
 def run_once(bench: dict, tree: str, workload: str, seed: int, trace: int) -> dict:
     cmd = [*bench["command"], "--workload", workload, "--seed", str(seed),
            "--seconds", str(bench["run_seconds"]), "--trace", str(trace)]
@@ -167,15 +182,17 @@ def main(argv=None) -> int:
     # SIGTERM unwinds like Ctrl-C, so the worktree is removed either way
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     tmp = tempfile.mkdtemp(prefix="ab_bench-")
-    parent_tree = os.path.join(tmp, "parent")
+    trees = {side: os.path.join(tmp, side) for side in SIDES}
+    parent_tree = trees["parent"]
     os.makedirs(os.path.join(ROOT, ".bench_out"), exist_ok=True)
     log = os.path.join(ROOT, ".bench_out", f"ab_bench-{time.strftime('%Y%m%d-%H%M%S')}.jsonl")
-    trees = {"parent": parent_tree, "change": ROOT}
     ops = {side: [0, 0] for side in SIDES}  # failed, attempted
     incorrect = False
     try:
         git("worktree", "add", "--detach", parent_tree, parent_rev)
-        print(f"parent {describe(parent_tree)} at {parent_tree}\nchange {describe(ROOT)} at {ROOT}")
+        copy_tree(ROOT, trees["change"])
+        print(f"parent {describe(parent_tree)} at {parent_tree}\n"
+              f"change {describe(ROOT)} copied to {trees['change']}")
         with open(log, "w") as out:
             for w in workloads:
                 runs = {side: {} for side in SIDES}
