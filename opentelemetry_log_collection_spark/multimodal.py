@@ -10,7 +10,8 @@ decode FOR REAL with pure-stdlib container parsers:
   - image: BMP/DIB header walk + 24-bit BGR pixel statistics;
     PNG (compressed) via stdlib zlib inflate + scanline unfilter,
     all five color types; baseline JPEG (entropy-coded) via a real
-    canonical-Huffman + dequant + IDCT decoder, stdlib + numpy
+    canonical-Huffman + dequant + IDCT decoder, stdlib + numpy; GIF
+    via a real variable-width LZW inflate
   - video: RIFF/AVI chunk-tree demux + uncompressed-DIB frame stats
 
 What stays stubbed is the part that NEEDS external codecs: the
@@ -24,9 +25,15 @@ Scale notes:
   - media bytes stay OPAQUE through shuffles — operators carry
     metadata columns and only mapInPandas stages touch payloads, so
     Tungsten never copies decoded frames between stages.
-  - ``maxRecordsPerBatch`` bounds Arrow batch memory; media rows are
-    huge, so stages re-batch by BYTE budget (``batch_bytes``), not
-    row count — a 10k-row default batch of 5MB videos would be 50GB.
+  - every media operator runs through one payload driver,
+    ``_map_payloads``: a per-asset function over each Arrow batch,
+    one pandas frame out per batch. Spark bounds the batch, by bytes
+    as well as rows: ``spark.sql.execution.arrow.maxBytesPerBatch``
+    (64 MiB by default) splits a batch of large payloads before
+    ``maxRecordsPerBatch`` rows, so no operator re-batches itself.
+  - an image payload has one dispatch, ``decode_image`` (magic
+    bytes: BMP, PNG, JPEG, GIF), for ``image_features`` and
+    ``extract_features`` alike.
 """
 
 from __future__ import annotations
@@ -34,7 +41,8 @@ from __future__ import annotations
 import hashlib
 import io
 import wave
-from collections.abc import Iterator
+import itertools
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -71,6 +79,55 @@ _FRAMES_OUT = T.StructType(
         T.StructField("frame", T.BinaryType()),
     ]
 )
+
+
+def _map_payloads(
+    df: DataFrame,
+    kind: str | None,
+    per_asset: Callable[[int, str, bytes], list[dict]],
+    schema: T.StructType,
+) -> DataFrame:
+    """The media operators' one payload driver: ``per_asset(asset_id,
+    kind, payload)`` returns the asset's output rows as dicts keyed by
+    ``schema``'s field names, and each Arrow batch yields one pandas
+    frame of them. With ``kind`` set, only assets of that kind are
+    read; with None, every asset and its own kind. Spark's Arrow cap
+    bounds each batch (module docstring), so the driver holds one
+    batch's payloads and rows at a time."""
+    names = schema.fieldNames()
+    if kind is None:
+        df = df.select("asset_id", "kind", "payload")
+    else:
+        df = df.filter(F.col("kind") == kind).select("asset_id", "payload")
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            # zip over raw columns, not iterrows: per-row pandas
+            # iteration is the slowest row-access API
+            kinds = pdf["kind"] if kind is None else itertools.repeat(kind)
+            rows = [
+                row
+                for aid, k, payload in zip(pdf["asset_id"], kinds, pdf["payload"])
+                for row in per_asset(int(aid), k, bytes(payload))
+            ]
+            if rows:
+                yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema)
+
+
+def _asset_table(
+    spark, n: int, kind: str, mime: str, synth: Callable[[int], bytes]
+) -> DataFrame:
+    """n assets of one kind, payload ``synth(asset_id)``, built
+    driver-side at test scale; the 100 TB shape would generate
+    per-partition from an id range (spark.range -> mapInPandas over the
+    same synth)."""
+    blobs = [synth(i) for i in range(n)]
+    return spark.createDataFrame(
+        [(i, kind, mime, b, len(b), {}) for i, b in enumerate(blobs)],
+        ASSET_SCHEMA,
+    )
 
 
 def synthesize_assets(spark, n: int = 64, seed: int = 42) -> DataFrame:
@@ -183,8 +240,8 @@ def _wav_feature_vector(payload: bytes) -> list[float]:
 
 def _decode_stub(payload: bytes, kind: str, strict: bool) -> list[float]:
     """Decoder dispatch. AUDIO decodes FOR REAL (stdlib wave + PCM
-    statistics), IMAGE decodes FOR REAL (BMP container parse, or PNG
-    zlib-inflate + unfilter, by magic bytes), VIDEO decodes FOR REAL
+    statistics), IMAGE decodes FOR REAL (decode_image: BMP, PNG, JPEG
+    or GIF by magic bytes), VIDEO decodes FOR REAL
     (RIFF/AVI demux + per-frame pixel statistics) — none need
     external libs. A payload that is
     not a valid container for its kind is a parse error in strict
@@ -201,11 +258,7 @@ def _decode_stub(payload: bytes, kind: str, strict: bool) -> list[float]:
                 raise ValueError("malformed WAV payload")
     elif kind == "image":
         try:
-            if payload[:8] == PNG_SIG:
-                return _png_feature_vector(payload)
-            if payload[:2] == b"\xff\xd8":
-                return _image_feature_vector(decode_jpeg(payload))
-            return _bmp_feature_vector(payload)
+            return _image_feature_vector(decode_image(payload))
         except ValueError:
             if strict:
                 raise ValueError("malformed/unsupported image payload")
@@ -224,65 +277,23 @@ def _decode_stub(payload: bytes, kind: str, strict: bool) -> list[float]:
     return [b / 255.0 for b in d[:FEATURE_DIM]]
 
 
-def extract_features(
-    df: DataFrame,
-    batch_bytes: int = 64 << 20,
-    strict: bool = False,
-) -> DataFrame:
-    """payload -> FEATURE_DIM float vector via mapInPandas, re-batched
-    by byte budget so Arrow batches stay bounded."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf_ids: list[int] = []
-        buf_kinds: list[str] = []
-        buf_feats: list[list[float]] = []
-        used = 0
-
-        def emit():
-            nonlocal buf_ids, buf_kinds, buf_feats, used
-            if buf_ids:
-                yield_df = pd.DataFrame(
-                    {"asset_id": buf_ids, "kind": buf_kinds, "feature": buf_feats}
-                )
-                buf_ids, buf_kinds, buf_feats, used = [], [], [], 0
-                return yield_df
-            return None
-
-        for pdf in batches:
-            # zip over raw columns, not iterrows — per-row pandas
-            # iteration is the slowest row-access API and the decode
-            # is per-asset anyway
-            for aid, kind, payload in zip(
-                pdf["asset_id"], pdf["kind"], pdf["payload"]
-            ):
-                payload = bytes(payload)
-                buf_ids.append(int(aid))
-                buf_kinds.append(kind)
-                buf_feats.append(_decode_stub(payload, kind, strict))
-                used += len(payload)
-                if used >= batch_bytes:
-                    out = emit()
-                    if out is not None:
-                        yield out
-        out = emit()
-        if out is not None:
-            yield out
-
-    return df.select("asset_id", "kind", "payload").mapInPandas(
-        run, _FEATURES_OUT
+def extract_features(df: DataFrame, strict: bool = False) -> DataFrame:
+    """payload -> FEATURE_DIM float vector per asset, any kind."""
+    return _map_payloads(
+        df,
+        None,
+        lambda aid, kind, p: [
+            {"asset_id": aid, "kind": kind,
+             "feature": _decode_stub(p, kind, strict)}
+        ],
+        _FEATURES_OUT,
     )
 
 
 def synthesize_wav_assets(spark, n: int = 60) -> DataFrame:
     """n REAL audio assets (valid RIFF/WAVE payloads, ~10 KB each),
-    deterministic by asset_id. Built driver-side at test scale; the
-    100 TB shape would generate per-partition from an id range
-    (spark.range -> mapInPandas over the same synthesize_wav)."""
-    rows = []
-    for i in range(n):
-        blob = synthesize_wav(i)
-        rows.append((i, "audio", "audio/wav", blob, len(blob), {}))
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    deterministic by asset_id."""
+    return _asset_table(spark, n, "audio", "audio/wav", synthesize_wav)
 
 
 _AUDIO_OUT = T.StructType(
@@ -299,34 +310,13 @@ _AUDIO_OUT = T.StructType(
 )
 
 
-def audio_features(df: DataFrame, batch_bytes: int = 64 << 20) -> DataFrame:
+def audio_features(df: DataFrame) -> DataFrame:
     """REAL audio decode as a DataFrame op: WAV container parse + PCM
-    statistics per asset, one flat row each. Same scale discipline as
-    extract_features: payloads only ever touched inside mapInPandas,
-    Arrow batches re-bounded by byte budget. Malformed payloads raise
-    (strict: this op is only for audio corpora)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: list[dict] = []
-        used = 0
-        for pdf in batches:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                payload = bytes(payload)
-                rec = decode_wav(payload)
-                rec["asset_id"] = int(aid)
-                buf.append(rec)
-                used += len(payload)
-                if used >= batch_bytes:
-                    yield pd.DataFrame(buf)
-                    buf, used = [], 0
-        if buf:
-            yield pd.DataFrame(buf)
-
-    return (
-        df.filter(F.col("kind") == "audio")
-        .select("asset_id", "payload")
-        .mapInPandas(run, _AUDIO_OUT)
-        .select([f.name for f in _AUDIO_OUT.fields])
+    statistics per audio asset, one flat row each. Malformed payloads
+    raise (strict: this op is only for audio corpora)."""
+    return _map_payloads(
+        df, "audio", lambda aid, _, p: [{**decode_wav(p), "asset_id": aid}],
+        _AUDIO_OUT,
     )
 
 
@@ -422,31 +412,10 @@ def decode_bmp(payload: bytes) -> dict:
     }
 
 
-def _bmp_feature_vector(payload: bytes) -> list[float]:
-    """FEATURE_DIM floats from a real BMP decode (strict-mode image)."""
-    d = decode_bmp(payload)
-    v = [
-        d["width"] / 64.0,
-        d["height"] / 64.0,
-        d["n_pixels"] / 4096.0,
-        d["mean_b"] / 255.0,
-        d["mean_g"] / 255.0,
-        d["mean_r"] / 255.0,
-        d["brightness"] / 255.0,
-        d["corner_sum"] / 765.0,
-    ]
-    return v + [0.0] * (FEATURE_DIM - len(v))
-
-
 def synthesize_bmp_assets(spark, n: int = 60) -> DataFrame:
     """n REAL image assets (valid BMP payloads), deterministic by
-    asset_id. Driver-side at test scale; the 100 TB shape generates
-    per-partition from an id range (spark.range -> mapInPandas)."""
-    rows = []
-    for i in range(n):
-        blob = synthesize_bmp(i)
-        rows.append((i, "image", "image/bmp", blob, len(blob), {}))
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    asset_id."""
+    return _asset_table(spark, n, "image", "image/bmp", synthesize_bmp)
 
 
 _IMAGE_OUT = T.StructType(
@@ -498,80 +467,41 @@ def resize_bmp(payload: bytes, out_w: int, out_h: int) -> bytes:
     return file_header + info_header + data
 
 
-def resize_images(
-    df: DataFrame,
-    out_w: int = 8,
-    out_h: int = 8,
-    batch_bytes: int = 64 << 20,
-) -> DataFrame:
+_RESIZED_OUT = T.StructType(
+    [
+        T.StructField("asset_id", T.LongType()),
+        T.StructField("width", T.LongType()),
+        T.StructField("height", T.LongType()),
+        T.StructField("payload", T.BinaryType()),
+    ]
+)
+
+
+def resize_images(df: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
     """REAL image resize as a DataFrame op: each BMP payload decodes,
     nearest-neighbor resamples to (out_w, out_h), and re-encodes —
-    emitting a new, valid BMP payload plus the resized dimensions.
-    Payloads only ever touched inside mapInPandas (byte-budget Arrow
-    re-batching); at 100 TB this is the canonical map-only stage: no
-    shuffle at all, output bytes strictly smaller than input."""
-    out_schema = T.StructType(
-        [
-            T.StructField("asset_id", T.LongType()),
-            T.StructField("width", T.LongType()),
-            T.StructField("height", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: list[tuple] = []
-        used = 0
-        for pdf in batches:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                payload = bytes(payload)
-                buf.append((int(aid), out_w, out_h,
-                            resize_bmp(payload, out_w, out_h)))
-                used += len(payload)
-                if used >= batch_bytes:
-                    yield pd.DataFrame(
-                        buf, columns=["asset_id", "width", "height", "payload"]
-                    )
-                    buf, used = [], 0
-        if buf:
-            yield pd.DataFrame(
-                buf, columns=["asset_id", "width", "height", "payload"]
-            )
-
-    return (
-        df.filter(F.col("kind") == "image")
-        .select("asset_id", "payload")
-        .mapInPandas(run, out_schema)
+    emitting a new, valid BMP payload plus the resized dimensions. At
+    100 TB this is the canonical map-only stage: no shuffle at all,
+    output bytes strictly smaller than input."""
+    return _map_payloads(
+        df,
+        "image",
+        lambda aid, _, p: [
+            {"asset_id": aid, "width": out_w, "height": out_h,
+             "payload": resize_bmp(p, out_w, out_h)}
+        ],
+        _RESIZED_OUT,
     )
 
 
-def image_features(df: DataFrame, batch_bytes: int = 64 << 20) -> DataFrame:
-    """REAL image decode as a DataFrame op: BMP container parse +
-    pixel statistics per asset, one flat row each. Payloads only ever
-    touched inside mapInPandas; Arrow batches re-bounded by byte
-    budget. Malformed payloads raise (strict: image corpora only)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: list[dict] = []
-        used = 0
-        for pdf in batches:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                payload = bytes(payload)
-                rec = decode_image(payload)  # BMP | PNG by magic bytes
-                rec["asset_id"] = int(aid)
-                buf.append(rec)
-                used += len(payload)
-                if used >= batch_bytes:
-                    yield pd.DataFrame(buf)
-                    buf, used = [], 0
-        if buf:
-            yield pd.DataFrame(buf)
-
-    return (
-        df.filter(F.col("kind") == "image")
-        .select("asset_id", "payload")
-        .mapInPandas(run, _IMAGE_OUT)
-        .select([f.name for f in _IMAGE_OUT.fields])
+def image_features(df: DataFrame) -> DataFrame:
+    """REAL image decode as a DataFrame op: decode_image (BMP, PNG,
+    JPEG or GIF by magic bytes) + pixel statistics per image asset, one
+    flat row each. Malformed payloads raise (strict: image corpora
+    only)."""
+    return _map_payloads(
+        df, "image", lambda aid, _, p: [{**decode_image(p), "asset_id": aid}],
+        _IMAGE_OUT,
     )
 
 
@@ -838,15 +768,9 @@ def decode_image(payload: bytes) -> dict:
     )
 
 
-def _png_feature_vector(payload: bytes) -> list[float]:
-    """FEATURE_DIM floats from a real PNG decode (strict-mode image);
-    same layout as _bmp_feature_vector."""
-    return _image_feature_vector(decode_png(payload))
-
-
 def _image_feature_vector(d: dict) -> list[float]:
     """FEATURE_DIM floats from any image-decoder stats dict; shared
-    normalization layout across BMP/PNG/JPEG."""
+    normalization layout across BMP/PNG/JPEG/GIF."""
     v = [
         d["width"] / 64.0,
         d["height"] / 64.0,
@@ -867,13 +791,11 @@ PNG_CT_CYCLE = (2, 0, 3, 4, 6)
 def synthesize_png_assets(spark, n: int = 60) -> DataFrame:
     """n REAL compressed image assets (valid PNG payloads),
     deterministic by asset_id, color type cycling PNG_CT_CYCLE so a
-    corpus exercises every decode branch; same driver-side/test-scale
-    note as synthesize_bmp_assets."""
-    rows = []
-    for i in range(n):
-        blob = synthesize_png(i, color_type=PNG_CT_CYCLE[i % 5])
-        rows.append((i, "image", "image/png", blob, len(blob), {}))
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    corpus exercises every decode branch."""
+    return _asset_table(
+        spark, n, "image", "image/png",
+        lambda i: synthesize_png(i, color_type=PNG_CT_CYCLE[i % 5]),
+    )
 
 
 # --------------------------------------------------------------------
@@ -1277,13 +1199,8 @@ def synthesize_jpeg(asset_id: int) -> bytes:
 
 def synthesize_jpeg_assets(spark, n: int = 60) -> DataFrame:
     """n REAL entropy-coded image assets (valid baseline JPEGs),
-    deterministic by asset_id; same driver-side/test-scale note as
-    synthesize_bmp_assets."""
-    rows = []
-    for i in range(n):
-        blob = synthesize_jpeg(i)
-        rows.append((i, "image", "image/jpeg", blob, len(blob), {}))
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    deterministic by asset_id."""
+    return _asset_table(spark, n, "image", "image/jpeg", synthesize_jpeg)
 
 
 # --------------------------------------------------------------------
@@ -1536,13 +1453,8 @@ def decode_gif(payload: bytes) -> dict:
 
 def synthesize_gif_assets(spark, n: int = 60) -> DataFrame:
     """n REAL LZW-compressed image assets (valid GIF payloads),
-    deterministic by asset_id; same driver-side/test-scale note as
-    synthesize_bmp_assets."""
-    rows = []
-    for i in range(n):
-        blob = synthesize_gif(i)
-        rows.append((i, "image", "image/gif", blob, len(blob), {}))
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    deterministic by asset_id."""
+    return _asset_table(spark, n, "image", "image/gif", synthesize_gif)
 
 
 # --------------------------------------------------------------------
@@ -1731,11 +1643,7 @@ def _avi_feature_vector(payload: bytes) -> list[float]:
 def synthesize_avi_assets(spark, n: int = 40) -> DataFrame:
     """n REAL video assets (valid RIFF/AVI payloads), deterministic by
     asset_id."""
-    rows = []
-    for i in range(n):
-        blob = synthesize_avi(i)
-        rows.append((i, "video", "video/x-msvideo", blob, len(blob), {}))
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return _asset_table(spark, n, "video", "video/x-msvideo", synthesize_avi)
 
 
 _VIDEO_OUT = T.StructType(
@@ -1754,10 +1662,7 @@ _VIDEO_OUT = T.StructType(
 
 
 def video_frame_stats(
-    df: DataFrame,
-    stride: int = 2,
-    max_frames: int = 8,
-    batch_bytes: int = 64 << 20,
+    df: DataFrame, stride: int = 2, max_frames: int = 8
 ) -> DataFrame:
     """REAL video decode as a DataFrame op: demux the AVI container,
     sample every ``stride``-th frame (up to ``max_frames``), emit
@@ -1765,35 +1670,16 @@ def video_frame_stats(
     output rows inside mapInPandas, payload bytes never cross a
     shuffle. Malformed/compressed payloads raise."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: list[dict] = []
-        used = 0
-        for pdf in batches:
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                payload = bytes(payload)
-                meta, frames = demux_avi(payload)
-                w, h = meta["width"], meta["height"]
-                for k, f in enumerate(range(0, len(frames), stride)):
-                    if k >= max_frames:
-                        break
-                    rec = _dib_stats(frames[f], w, h)
-                    rec.update(
-                        asset_id=int(aid), frame_idx=f, width=w, height=h
-                    )
-                    buf.append(rec)
-                used += len(payload)
-                if used >= batch_bytes:
-                    yield pd.DataFrame(buf)
-                    buf, used = [], 0
-        if buf:
-            yield pd.DataFrame(buf)
+    def frame_rows(aid: int, _, payload: bytes) -> list[dict]:
+        meta, frames = demux_avi(payload)
+        w, h = meta["width"], meta["height"]
+        return [
+            {**_dib_stats(frames[f], w, h), "asset_id": aid, "frame_idx": f,
+             "width": w, "height": h}
+            for f in range(0, len(frames), stride)[:max_frames]
+        ]
 
-    return (
-        df.filter(F.col("kind") == "video")
-        .select("asset_id", "payload")
-        .mapInPandas(run, _VIDEO_OUT)
-        .select([f.name for f in _VIDEO_OUT.fields])
-    )
+    return _map_payloads(df, "video", frame_rows, _VIDEO_OUT)
 
 
 def sample_frames(
@@ -1807,41 +1693,29 @@ def sample_frames(
     many output rows via mapInPandas, payloads never cross a shuffle.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                payload = bytes(payload)
-                aid = int(aid)
-                if payload[:4] == b"RIFF":
-                    try:
-                        _, real = demux_avi(payload)
-                    except ValueError:
-                        # RIFF but not decodable (compressed stream,
-                        # RIFF/WAVE, truncated): strict surfaces it,
-                        # non-strict falls back like any other payload
-                        if strict:
-                            raise
-                        real = None
-                    if real is not None:
-                        for k, fr in enumerate(real[:max_frames]):
-                            ids.append(aid)
-                            idxs.append(k)
-                            frames.append(fr)
-                        continue
+    def frames_of(payload: bytes) -> list[bytes]:
+        if payload[:4] == b"RIFF":
+            try:
+                return demux_avi(payload)[1][:max_frames]
+            except ValueError:
+                # RIFF but not decodable (compressed stream, RIFF/WAVE,
+                # truncated): strict surfaces it, non-strict falls back
+                # like any other payload
                 if strict:
-                    raise ValueError("not an AVI container; no codec available")
-                for k in range(min(max_frames, len(payload) // every_n_bytes)):
-                    ids.append(aid)
-                    idxs.append(k)
-                    frames.append(payload[k * every_n_bytes:(k + 1) * every_n_bytes])
-            if ids:
-                yield pd.DataFrame(
-                    {"asset_id": ids, "frame_idx": idxs, "frame": frames}
-                )
+                    raise
+        if strict:
+            raise ValueError("not an AVI container; no codec available")
+        return [
+            payload[k * every_n_bytes:(k + 1) * every_n_bytes]
+            for k in range(min(max_frames, len(payload) // every_n_bytes))
+        ]
 
-    return (
-        df.filter(F.col("kind") == "video")
-        .select("asset_id", "payload")
-        .mapInPandas(run, _FRAMES_OUT)
+    return _map_payloads(
+        df,
+        "video",
+        lambda aid, _, p: [
+            {"asset_id": aid, "frame_idx": k, "frame": fr}
+            for k, fr in enumerate(frames_of(p))
+        ],
+        _FRAMES_OUT,
     )

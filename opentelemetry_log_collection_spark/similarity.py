@@ -28,8 +28,11 @@ norm is zero (or overflows) is never bucketed, assigned, scored or
 returned: the kernel drops it before anything is stacked, in the query
 and the corpus position alike. Such a row can neither fail the job nor
 collide with anything, and the result equals the same call without it.
-brute_force_topk keeps the builtin expressions' semantics (a null
-vector scores a null sim).
+brute_force_topk follows the same rule with builtin expressions: a row
+whose norm is null, NaN, infinite or zero (a null vector, a null or
+non-finite element, an overflow, all zeros) is filtered out on both
+sides before the cross join, and a pair whose vectors differ in length
+scores no row.
 
 All math is done in DOUBLE after an explicit cast from float32 —
 identical left-to-right IEEE ops in any engine, so oracle checks can
@@ -121,14 +124,25 @@ def brute_force_topk(
     Queries broadcast; ties broken by neighbor_id for determinism.
     Norms are computed once per side (same doubles as the per-pair
     form — see module docstring), so each scored pair costs one
-    fold dot + one divide."""
+    fold dot + one divide. Degenerate vectors are dropped (module
+    docstring)."""
     q = queries.select(
         F.col(id_col).alias("query_id"), _dvec(F.col(vec_col)).alias("qv")
-    ).withColumn("nq", norm(F.col("qv")))
+    ).withColumn("nq", norm(F.col("qv"))).filter(_usable_norm("nq"))
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _dvec(F.col(vec_col)).alias("cv")
-    ).withColumn("nc", norm(F.col("cv")))
-    return _top_k(_scored(c.crossJoin(F.broadcast(q))), k)
+    ).withColumn("nc", norm(F.col("cv"))).filter(_usable_norm("nc"))
+    pairs = c.crossJoin(F.broadcast(q)).filter(
+        F.size("qv") == F.size("cv")
+    )
+    return _top_k(_scored(pairs), k)
+
+
+def _usable_norm(col: str) -> Column:
+    """The kernel's rule in Catalyst: the left-fold norm is finite and
+    positive. A null vector or element makes it null; NaN sorts above
+    +inf in Spark, so ``< inf`` also drops NaN."""
+    return (F.col(col) > 0) & (F.col(col) < F.lit(float("inf")))
 
 
 # --------------------------------------------------------------------

@@ -1,6 +1,6 @@
 """The A/B tool's parts that run no benchmark (`tools/ab_bench.py`): run
 schedule, status rules, the metric list it reads from BENCHMARK.json,
-and the copy of the working tree the change side runs from (on a
+the projected wall of a full measurement, and the copy of the working tree the change side runs from (on a
 throwaway git repository). Runs no Spark."""
 
 from __future__ import annotations
@@ -129,3 +129,20 @@ def test_change_side_copies_tracked_and_unignored_files(tmp_path):
     got = {str(p.relative_to(dst)) for p in dst.rglob("*") if p.is_file()}
     assert got == {".gitignore", "kept.py", "pkg/a.py", "pkg/new.py"}
     assert (dst / "pkg/a.py").read_text() == "a = 2\n"
+
+
+def test_full_measurement_projection():
+    walls = {"flagship_bulk": [80.0, 90.0, 200.0], "query_mix": [60.0, 61.0, 59.0]}
+    med, full = ab.projection(walls)
+    assert med == {"flagship_bulk": 90.0, "query_mix": 60.0}
+    # 4 + 22 runs per workload at the median pace
+    assert full == 26 * (90.0 + 60.0) == 3900.0
+    assert ab.FULL_RUNS_PER_WORKLOAD == 26 and ab.FULL_BUDGET_S == 3420
+
+
+def test_wall_report_prints_both_sides_against_the_budget(capsys):
+    walls = {"parent": {"w": [100.0, 120.0]}, "change": {"w": [120.0, 140.0]}}
+    ab.report_walls(walls)
+    out = capsys.readouterr().out
+    assert "parent  median run w 110.0 s; projected 2,860 s (84% of 3,420 s)" in out
+    assert "change  median run w 130.0 s; projected 3,380 s (99% of 3,420 s)" in out

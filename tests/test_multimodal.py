@@ -607,3 +607,25 @@ def test_image_features_mixed_four_formats(spark):
         assert out[a]["corner_sum"] == sum(
             gif_palette_rgb(gif_index(a, 0, 0))
         )
+
+
+@pytest.mark.parametrize("strict", [True, False])
+def test_extract_features_decodes_gif(spark, strict):
+    """extract_features dispatches images through decode_image, so a
+    GIF gets its real decode in both modes, the same vector
+    image_features' decoder gives (not a strict-mode error, not the
+    digest fake)."""
+    import numpy as np
+
+    from opentelemetry_log_collection_spark.multimodal import (
+        _image_feature_vector, decode_gif, synthesize_gif_assets,
+    )
+
+    gifs = synthesize_gif_assets(spark, n=3)
+    payloads = {r["asset_id"]: bytes(r["payload"]) for r in gifs.collect()}
+    rows = extract_features(gifs, strict=strict).collect()
+    assert sorted(r["asset_id"] for r in rows) == sorted(payloads)
+    for r in rows:
+        want = _image_feature_vector(decode_gif(payloads[r["asset_id"]]))
+        assert r["kind"] == "image"
+        assert r["feature"] == [float(np.float32(x)) for x in want]

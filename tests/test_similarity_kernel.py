@@ -1,6 +1,7 @@
 """The approximate similarity family's one vector kernel: bit-exact
 left folds, one bucket key per vector whichever side it is on, the
-degenerate-vector rule, and id types taken from the input."""
+degenerate-vector rule (which the exact baseline follows too), and id
+types taken from the input."""
 
 from __future__ import annotations
 
@@ -114,6 +115,16 @@ def test_lsh_bucket_key_is_one_per_vector(spark, clean):
     assert {(r["query_id"], r["neighbor_id"]) for r in out.collect()} == {
         (vid, vid + 500) for vid, _ in rows[:6]
     }
+
+
+def test_brute_force_topk_ignores_degenerate_vectors(spark, clean, dirty):
+    """The exact baseline follows the kernel's rule in Catalyst: a zero
+    vector fails no job (ANSI divide), and null, null-element and
+    non-finite vectors get no null-sim rank; a short or long vector
+    pairs with nothing."""
+    want = _rows(similarity.brute_force_topk(clean.filter("vec_id < 8"), clean, k=3))
+    got = _rows(similarity.brute_force_topk(dirty.filter("vec_id < 8 OR vec_id >= 1000"), dirty, k=3))
+    assert want and got == want
 
 
 def test_lsh_topk_ignores_degenerate_vectors(spark, clean, dirty):

@@ -30,7 +30,11 @@ wins, the bound and a status:
     flat        otherwise
 
 Metric names, directions and bounds are read from BENCHMARK.json. Each
-parsed run is appended to ``.bench_out/ab_bench-<time>.jsonl``. The
+parsed run, with its wall time, is appended to
+``.bench_out/ab_bench-<time>.jsonl``. At the end, each side's median
+run wall per workload is printed with the wall a full measurement would
+take at that pace (4 + 22 runs per workload), next to the budget in
+perfbench/DESIGN.md § Time budget. The
 exit status is non-zero when a run crashes or is incorrect, or when the
 change fails a larger share of ops than the parent. The worktree and
 the copy are removed on exit, on an exception and on Ctrl-C or SIGTERM.
@@ -53,6 +57,10 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SIDES = ("parent", "change")
 #: fewer pairs than this never read as a gain
 MIN_PAIRS = 10
+#: a full measurement runs 4 + 22 times per workload and must end
+#: within 3,420 s (perfbench/DESIGN.md § Time budget)
+FULL_RUNS_PER_WORKLOAD = 4 + 22
+FULL_BUDGET_S = 3420
 
 
 def load_benchmark() -> dict:
@@ -102,6 +110,23 @@ def compare(spec: dict, parent: list[float], change: list[float]) -> dict:
         status = "flat"
     return {"parent": pq, "change": cq, "delta": delta, "spread": spread, "wins": wins, "pairs": len(parent),
             "status": status}
+
+
+def projection(walls: dict[str, list[float]]) -> tuple[dict[str, float], float]:
+    """Median run wall per workload, and the wall of a full measurement
+    at that pace: ``FULL_RUNS_PER_WORKLOAD`` runs of each workload."""
+    med = {w: statistics.median(xs) for w, xs in walls.items()}
+    return med, FULL_RUNS_PER_WORKLOAD * sum(med.values())
+
+
+def report_walls(walls: dict[str, dict[str, list[float]]]) -> None:
+    print(f"\nrun walls, and a full measurement ({FULL_RUNS_PER_WORKLOAD} runs per "
+          f"workload) at that pace against its {FULL_BUDGET_S:,} s budget:")
+    for side in SIDES:
+        med, full = projection(walls[side])
+        per = ", ".join(f"{w} {m:.1f} s" for w, m in med.items())
+        print(f"  {side:<7} median run {per}; projected {full:,.0f} s "
+              f"({full / FULL_BUDGET_S:.0%} of {FULL_BUDGET_S:,} s)")
 
 
 def git(*args: str, cwd: str = ROOT) -> str:
@@ -187,6 +212,7 @@ def main(argv=None) -> int:
     os.makedirs(os.path.join(ROOT, ".bench_out"), exist_ok=True)
     log = os.path.join(ROOT, ".bench_out", f"ab_bench-{time.strftime('%Y%m%d-%H%M%S')}.jsonl")
     ops = {side: [0, 0] for side in SIDES}  # failed, attempted
+    walls = {side: {w: [] for w in workloads} for side in SIDES}
     incorrect = False
     try:
         git("worktree", "add", "--detach", parent_tree, parent_rev)
@@ -199,11 +225,16 @@ def main(argv=None) -> int:
                 traced = {}
                 for trace, order in ((0, schedule(seeds)), (1, schedule(seeds[:1]))):
                     for seed, side in order:
+                        t0 = time.perf_counter()
                         res = run_once(bench, trees[side], w, seed, trace)
+                        wall = time.perf_counter() - t0
+                        walls[side][w].append(wall)
                         print(f"{w} seed {seed} trace {trace} {side}: failed "
-                              f"{res['failed']}/{res['attempted']}", file=sys.stderr, flush=True)
+                              f"{res['failed']}/{res['attempted']}, {wall:.1f} s",
+                              file=sys.stderr, flush=True)
                         out.write(json.dumps({"side": side, "workload": w, "seed": seed,
-                                              "trace": trace, "result": res}) + "\n")
+                                              "trace": trace, "wall_s": round(wall, 3),
+                                              "result": res}) + "\n")
                         out.flush()
                         incorrect |= not res["correct"]
                         ops[side][0] += res["failed"]
@@ -213,6 +244,7 @@ def main(argv=None) -> int:
                         else:
                             runs[side][seed] = res
                 report(bench, w, runs, traced)
+        report_walls(walls)
     finally:
         subprocess.run(["git", "worktree", "remove", "--force", parent_tree],
                        cwd=ROOT, capture_output=True)
